@@ -192,21 +192,6 @@ trait AltCache {
   def getOrCompute(key: String)(f: => Seq[Alt]): Seq[Alt]
 }
 
-/** Single-threaded bounded LRU (one instance per partition iterator). */
-final class WindowCache(maxEntries: Int = 50000) extends AltCache {
-  private val m = new java.util.LinkedHashMap[String, Seq[Alt]](1024, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, Seq[Alt]]): Boolean = size() > maxEntries
-  }
-  var hits: Long = 0L
-  var misses: Long = 0L
-  def getOrCompute(key: String)(f: => Seq[Alt]): Seq[Alt] = {
-    val v = m.get(key)
-    if (v != null) { hits += 1; v }
-    else { misses += 1; val r = f; m.put(key, r); r }
-  }
-}
-
 /** JVM-wide (= per-executor) thread-safe memo, shared across all tasks
   * and waves — the true analogue of the reference's COW fork-pool model
   * sharing (scripts/process.py:14,55-70): pay each distinct window once

@@ -42,14 +42,20 @@ object Queries {
   private val FanOutBytesPerCore = 4L * 1024 * 1024 // files.openCostInBytes
   private val inputBytesCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def inputBytes(s: SparkSession, path: String): Long =
-    inputBytesCache.computeIfAbsent(path, p => {
+  /** Input size in bytes, Long.MaxValue (never fan) when unknown. A
+    * failed lookup is not cached (computeIfAbsent records nothing for a
+    * null result), so a transient FS error or a path written later is
+    * looked up again on the next call. */
+  private[queries] def inputBytes(s: SparkSession, path: String): Long = {
+    val n = inputBytesCache.computeIfAbsent(path, p => {
       try {
         val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(hp).getLength
-      } catch { case _: Exception => Long.MaxValue } // unknown: never fan
+        java.lang.Long.valueOf(hp.getFileSystem(s.sparkContext.hadoopConfiguration)
+          .getContentSummary(hp).getLength)
+      } catch { case _: Exception => null }
     })
+    if (n == null) Long.MaxValue else n
+  }
   private[queries] def fanOutSmall(df: DataFrame, path: String): DataFrame = {
     val s = df.sparkSession
     // session-settable kill switch (spark.graft.fanout.enabled=false):

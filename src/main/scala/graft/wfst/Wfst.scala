@@ -28,7 +28,7 @@ final case class Arc(ilabel: Int, olabel: Int, weight: Double, dst: Int)
 private[wfst] final class Scratch {
   val map = new LongIntMap(1 << 12)
   val sink = new ArcSink(1 << 12)
-  // product-state-indexed (compose/composeBounded)
+  // product-state-indexed (expandBounded / assemblePruned)
   var pairA = new Array[Int](1 << 10)
   var pairB = new Array[Int](1 << 10)
   var dist = new Array[Double](1 << 10)
@@ -40,7 +40,6 @@ private[wfst] final class Scratch {
   var mark = new Array[Boolean](1 << 10)
   var stack = new Array[Int](1 << 10)
   var indeg = new Array[Int](1 << 10)
-  var order = new Array[Int](1 << 10)
   var revOff = new Array[Int](1 << 10)
   var revSrc = new Array[Int](1 << 12)
   var revW = new Array[Double](1 << 12) // reverse-arc weights (fused prune)
@@ -144,14 +143,11 @@ final class Wfst private (
 ) extends Serializable {
 
   def numArcs: Int = off(numStates)
-  def isEmptyLanguage: Boolean = finState.isEmpty || numStates == 0
 
   def finalWeight(s: Int): Double = {
     val i = java.util.Arrays.binarySearch(finState, s)
     if (i >= 0) finWt(i) else Double.PositiveInfinity
   }
-  def isFinal(s: Int): Boolean =
-    java.util.Arrays.binarySearch(finState, s) >= 0
 
   /** Dense final-weight table (+inf = non-final), built lazily once per
     * machine instance (once per executor for broadcast models) — turns
@@ -405,7 +401,7 @@ final class Wfst private (
       }
       u += 1
     }
-    // co-reachable (sc.flags is safe scratch here: composeBounded
+    // co-reachable (sc.flags is safe scratch here: expandBounded
     // re-initializes its in-queue flags at state creation)
     sc.flags = Scratch.ensureBool(sc.flags, n)
     val bwd = sc.flags; java.util.Arrays.fill(bwd, 0, n, false)
@@ -514,94 +510,17 @@ final class Wfst private (
     if (tail == n) order else null
   }
 
-  def topoOrder: Option[Array[Int]] = Option(topoOrderOrNull)
-
-  /** Scratch-backed topo order (Kahn into sc.order; sc.indeg as the
-    * counters). Returns sc.order (do NOT retain) or null if cyclic. */
-  private def topoOrderInto(sc: Scratch): Array[Int] = {
+  /** Shortest distance from each state to a final state (+inf where
+    * none is reachable): linear DP on acyclic machines, Dijkstra
+    * otherwise. */
+  def reverseDistances: Array[Double] = {
     val n = numStates
-    sc.indeg = Scratch.ensureInt(sc.indeg, n)
-    sc.order = Scratch.ensureInt(sc.order, n)
-    java.util.Arrays.fill(sc.indeg, 0, n, 0)
-    var k = 0
-    val total = numArcs
-    while (k < total) { sc.indeg(ds(k)) += 1; k += 1 }
-    var head = 0; var tail = 0
-    var u = 0
-    while (u < n) { if (sc.indeg(u) == 0) { sc.order(tail) = u; tail += 1 }; u += 1 }
-    while (head < tail) {
-      val v = sc.order(head); head += 1
-      k = off(v)
-      while (k < off(v + 1)) {
-        sc.indeg(ds(k)) -= 1
-        if (sc.indeg(ds(k)) == 0) { sc.order(tail) = ds(k); tail += 1 }
-        k += 1
-      }
-    }
-    if (tail == n) sc.order else null
-  }
-
-  def shortestDistances: Array[Double] = shortestDistances(topoOrderOrNull)
-
-  private def shortestDistances(topo: Array[Int]): Array[Double] =
-    shortestDistancesInto(topo, new Array[Double](numStates))
-
-  /** Like shortestDistances but writes into a caller-provided array
-    * (scratch reuse; array length must be >= numStates). */
-  private def shortestDistancesInto(topo: Array[Int],
-      dist: Array[Double]): Array[Double] = {
-    java.util.Arrays.fill(dist, 0, numStates, Double.PositiveInfinity)
-    if (numStates == 0) return dist
-    dist(start) = 0.0
-    if (topo != null) {
-      // NOTE: bound by numStates, not topo.length — topo may be the
-      // scratch order array, whose capacity exceeds the valid prefix
-      var i = 0
-      while (i < numStates) {
-        val u = topo(i)
-        val d = dist(u)
-        if (!d.isInfinity) {
-          var k = off(u)
-          while (k < off(u + 1)) {
-            val nd = d + wt(k)
-            if (nd < dist(ds(k))) dist(ds(k)) = nd
-            k += 1
-          }
-        }
-        i += 1
-      }
-    } else {
-      val pq = mutable.PriorityQueue.empty[(Double, Int)](Ordering.by(-_._1))
-      pq.enqueue((0.0, start))
-      while (pq.nonEmpty) {
-        val (d, u) = pq.dequeue()
-        if (d <= dist(u) + 1e-15) {
-          var k = off(u)
-          while (k < off(u + 1)) {
-            val nd = d + wt(k)
-            if (nd < dist(ds(k)) - 1e-15) { dist(ds(k)) = nd; pq.enqueue((nd, ds(k))) }
-            k += 1
-          }
-        }
-      }
-    }
-    dist
-  }
-
-  def reverseDistances: Array[Double] = reverseDistances(topoOrderOrNull)
-
-  private def reverseDistances(topo: Array[Int]): Array[Double] =
-    reverseDistancesInto(topo, new Array[Double](numStates))
-
-  private def reverseDistancesInto(topo: Array[Int],
-      dist: Array[Double]): Array[Double] = {
-    val n = numStates
-    java.util.Arrays.fill(dist, 0, n, Double.PositiveInfinity)
+    val dist = Array.fill(n)(Double.PositiveInfinity)
     if (n == 0) return dist
+    val topo = topoOrderOrNull
     var i = 0
     while (i < finState.length) { dist(finState(i)) = finWt(i); i += 1 }
     if (topo != null) {
-      // bound by numStates (scratch order array is over-capacity)
       i = n - 1
       while (i >= 0) {
         val u = topo(i)
@@ -651,84 +570,6 @@ final class Wfst private (
       }
     }
     dist
-  }
-
-  /** Beam prune (OpenFst/pynini `prune(weight=th)`, lib/latticegen.py:50):
-    * keep only states/arcs on some accepting path of weight <= best + th.
-    * Renumbers (trims) in the same pass. */
-  def prune(th: Double): Wfst = {
-    if (numStates == 0) return this
-    val sc = Wfst.scratch.get()
-    val topo = topoOrderInto(sc)
-    sc.fwd = Scratch.ensureDouble(sc.fwd, numStates)
-    sc.bwd = Scratch.ensureDouble(sc.bwd, numStates)
-    val fwd = shortestDistancesInto(topo, sc.fwd)
-    val bwd = reverseDistancesInto(topo, sc.bwd)
-    val best = bwd(start)
-    if (best.isInfinity) return Wfst.emptyFst
-    val lim = best + th + 1e-9
-    val n = numStates
-    sc.remap = Scratch.ensureInt(sc.remap, n)
-    val remap = sc.remap
-    var kept = 0
-    var u = 0
-    while (u < n) {
-      if (fwd(u) + bwd(u) <= lim) { remap(u) = kept; kept += 1 } else remap(u) = -1
-      u += 1
-    }
-    val nOff = new Array[Int](kept + 1)
-    u = 0
-    while (u < n) {
-      if (remap(u) >= 0) {
-        var c = 0
-        var k = off(u)
-        while (k < off(u + 1)) {
-          if (remap(ds(k)) >= 0 && fwd(u) + wt(k) + bwd(ds(k)) <= lim) c += 1
-          k += 1
-        }
-        nOff(remap(u) + 1) = c
-      }
-      u += 1
-    }
-    var t = 0
-    while (t < kept) { nOff(t + 1) += nOff(t); t += 1 }
-    val m = nOff(kept)
-    val nIl = new Array[Int](m); val nOl = new Array[Int](m)
-    val nWt = new Array[Double](m); val nDs = new Array[Int](m)
-    u = 0
-    while (u < n) {
-      if (remap(u) >= 0) {
-        var p = nOff(remap(u))
-        var k = off(u)
-        while (k < off(u + 1)) {
-          if (remap(ds(k)) >= 0 && fwd(u) + wt(k) + bwd(ds(k)) <= lim) {
-            nIl(p) = il(k); nOl(p) = ol(k); nWt(p) = wt(k); nDs(p) = remap(ds(k))
-            p += 1
-          }
-          k += 1
-        }
-      }
-      u += 1
-    }
-    // finals: finState is ascending and remap is monotone over kept
-    // states, so the filtered copy is already sorted (no boxing/sort)
-    var fCount = 0
-    var i = 0
-    while (i < finState.length) {
-      if (remap(finState(i)) >= 0 && fwd(finState(i)) + finWt(i) <= lim) fCount += 1
-      i += 1
-    }
-    val fs = new Array[Int](fCount); val fw = new Array[Double](fCount)
-    var fi = 0
-    i = 0
-    while (i < finState.length) {
-      val s = finState(i)
-      if (remap(s) >= 0 && fwd(s) + finWt(i) <= lim) {
-        fs(fi) = remap(s); fw(fi) = finWt(i); fi += 1
-      }
-      i += 1
-    }
-    new Wfst(remap(start), kept, nOff, nIl, nOl, nWt, nDs, fs, fw)
   }
 
   // ---------------------------------------------------------------- compose
@@ -877,330 +718,41 @@ final class Wfst private (
     b.result(classOf(start)).arcSort
   }
 
-  /** Composition with the trivial epsilon filter: joint moves on equal
+  /** Composition with the trivial epsilon filter, fused with
+    * projectOutput and prune(pruneTh): the cascade's lexicon step. It is
+    * `composeBoundedPruned` with no weight bound. */
+  def composePruned(that: Wfst, pruneTh: Double): Wfst =
+    composeBoundedPruned(that, Double.PositiveInfinity, pruneTh)
+
+  /** Weight-bounded composition fused with projectOutput and
+    * prune(pruneTh) — OpenFst/pynini `prune(weight=th)`
+    * (lib/latticegen.py:50): keep only arcs on some accepting path of
+    * weight <= best + pruneTh. The result is built in ONE exact-size
+    * materialization.
+    *
+    * Composition uses the trivial epsilon filter: joint moves on equal
     * non-eps symbols (Sigma on the right matches any symbol, identity),
     * left-alone moves on eps-output arcs, right-alone moves on eps-input
     * arcs. Duplicate-free as long as at most one side carries eps on the
     * shared tape — true everywhere in this pipeline (left inputs are
-    * rmEpsilon'd first, cf. SURVEY.md §2 row B5). `that` must be arcSort'd.
-    * Result is trimmed (connect). */
-  def compose(that: Wfst): Wfst = compose(that, trim = true)
-
-  /** `trim = false` skips the coaccessibility pass (fused connect):
-    * correct whenever the result immediately feeds `prune`, which drops
-    * non-coaccessible states itself (their backward distance is +inf). */
-  def compose(that: Wfst, trim: Boolean): Wfst = {
-    if (this.numStates == 0 || that.numStates == 0) return Wfst.emptyFst
-    val sc = Wfst.scratch.get()
-    assembleTrimmed(sc, expandProduct(that, sc), that, trim)
-  }
-
-  /** Fused compose -> projectOutput -> prune(pruneTh): the cascade's
-    * lexicon step in ONE exact-size materialization (vs three: product
-    * CSR, projected view, pruned CSR with fresh distance passes). */
-  def composePruned(that: Wfst, pruneTh: Double): Wfst = {
-    if (this.numStates == 0 || that.numStates == 0) return Wfst.emptyFst
-    val sc = Wfst.scratch.get()
-    assemblePruned(sc, expandProduct(that, sc), that, pruneTh,
-      fwdFromSpfa = false)
-  }
-
-  /** Full BFS product expansion into scratch (pairs + arc ranges in the
-    * scratch sink); returns the product state count. */
-  private def expandProduct(that: Wfst, sc: Scratch): Int = {
-    val stateIds = sc.map; stateIds.clear()
-    val sink = sc.sink; sink.n = 0
-    var nStates = 0
-    // dense fast path: direct-indexed id table when the product space
-    // fits (the error-model cascade step is ~30 x ~650 — one array
-    // read replaces three dependent hash-probe cache misses)
-    val rightN = that.numStates
-    val dense = this.numStates.toLong * rightN <= Scratch.DenseMax
-    if (dense) sc.ensureDense(this.numStates * rightN)
-    val dId = sc.denseId; val dSt = sc.denseStamp; val dEp = sc.denseEpoch
-    def id(p: Int, q: Int): Int = {
-      if (dense) {
-        val di = p * rightN + q
-        if (dSt(di) == dEp) dId(di)
-        else {
-          sc.growStates(nStates + 1)
-          sc.pairA(nStates) = p; sc.pairB(nStates) = q
-          sc.rangeStart(nStates) = 0; sc.rangeLen(nStates) = 0
-          dId(di) = nStates; dSt(di) = dEp
-          nStates += 1
-          nStates - 1
-        }
-      } else {
-        val k = p.toLong << 32 | (q.toLong & 0xffffffffL)
-        val existing = stateIds.getOrElse(k, -1)
-        if (existing >= 0) existing
-        else {
-          sc.growStates(nStates + 1)
-          sc.pairA(nStates) = p; sc.pairB(nStates) = q
-          sc.rangeStart(nStates) = 0; sc.rangeLen(nStates) = 0
-          stateIds.put(k, nStates)
-          nStates += 1
-          nStates - 1
-        }
-      }
-    }
-    id(this.start, that.start)
-    var head = 0
-    while (head < nStates) {
-      val p = sc.pairA(head); val q = sc.pairB(head)
-      val from = sink.n
-      val bLo = that.off(q); val bHi = that.off(q + 1)
-      // sigma block [bLo, sigmaEnd), then eps block [sigmaEnd, be)
-      var sigmaEnd = bLo
-      while (sigmaEnd < bHi && that.il(sigmaEnd) < Label.Eps) sigmaEnd += 1
-      var be = sigmaEnd
-      while (be < bHi && that.il(be) == Label.Eps) {
-        sink.add(Label.Eps, that.ol(be), that.wt(be), id(p, that.ds(be)))
-        be += 1
-      }
-      var ka = this.off(p)
-      val kaHi = this.off(p + 1)
-      while (ka < kaHi) {
-        val aol = this.ol(ka)
-        if (aol == Label.Eps) {
-          sink.add(this.il(ka), Label.Eps, this.wt(ka), id(this.ds(ka), q))
-        } else {
-          var lo = be; var hi = bHi
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (that.il(mid) < aol) lo = mid + 1 else hi = mid
-          }
-          var j = lo
-          while (j < bHi && that.il(j) == aol) {
-            sink.add(this.il(ka), that.ol(j), this.wt(ka) + that.wt(j),
-              id(this.ds(ka), that.ds(j)))
-            j += 1
-          }
-          var si = bLo
-          while (si < sigmaEnd) {
-            val o2 = if (that.ol(si) == Label.Sigma) aol else that.ol(si)
-            sink.add(this.il(ka), o2, this.wt(ka) + that.wt(si),
-              id(this.ds(ka), that.ds(si)))
-            si += 1
-          }
-        }
-        ka += 1
-      }
-      sc.rangeStart(head) = from
-      sc.rangeLen(head) = sink.n - from
-      head += 1
-    }
-    nStates
-  }
-
-  /** Build the trimmed (connected) machine straight from the scratch
-    * product ranges: coaccessibility is computed over the live arc
-    * ranges BEFORE any final arrays are allocated, fusing the old
-    * compose-then-connect double CSR copy into one exact-size copy.
-    * Forward reachability is by construction (states are only created
-    * when an arc reaches them). Renumbering is ascending discovery
-    * order — identical to the old connect output. */
-  private def assembleTrimmed(sc: Scratch, nStates: Int, that: Wfst,
-      trim: Boolean = true): Wfst = {
-    if (nStates == 0) return Wfst.emptyFst
-    val sink = sc.sink
-    if (!trim) {
-      // exact-size CSR copy with identity numbering — no coaccessibility
-      // pass (the caller guarantees a following prune / start-rooted
-      // exploration makes dead states harmless)
-      val nOff = new Array[Int](nStates + 1)
-      var s = 0
-      while (s < nStates) { nOff(s + 1) = nOff(s) + sc.rangeLen(s); s += 1 }
-      val m = nOff(nStates)
-      val nIl = new Array[Int](m); val nOl = new Array[Int](m)
-      val nWt = new Array[Double](m); val nDs = new Array[Int](m)
-      s = 0
-      while (s < nStates) {
-        var src = sc.rangeStart(s)
-        var dst = nOff(s)
-        val end = src + sc.rangeLen(s)
-        while (src < end) {
-          nIl(dst) = sink.il(src); nOl(dst) = sink.ol(src)
-          nWt(dst) = sink.wt(src); nDs(dst) = sink.ds(src)
-          src += 1; dst += 1
-        }
-        s += 1
-      }
-      val thisFin = this.finalWeightDense
-      val thatFin = that.finalWeightDense
-      var fCount = 0
-      var i = 0
-      while (i < nStates) {
-        val wa = thisFin(sc.pairA(i))
-        if (!wa.isInfinity && !thatFin(sc.pairB(i)).isInfinity) fCount += 1
-        i += 1
-      }
-      val fs = new Array[Int](fCount); val fw = new Array[Double](fCount)
-      var fi = 0
-      i = 0
-      while (i < nStates) {
-        val wa = thisFin(sc.pairA(i))
-        if (!wa.isInfinity) {
-          val wb = thatFin(sc.pairB(i))
-          if (!wb.isInfinity) { fs(fi) = i; fw(fi) = wa + wb; fi += 1 }
-        }
-        i += 1
-      }
-      return new Wfst(0, nStates, nOff, nIl, nOl, nWt, nDs, fs, fw)
-    }
-    // reverse CSR over live ranges
-    sc.indeg = Scratch.ensureInt(sc.indeg, nStates)
-    java.util.Arrays.fill(sc.indeg, 0, nStates, 0)
-    var total = 0
-    var s = 0
-    while (s < nStates) {
-      var k = sc.rangeStart(s); val e = k + sc.rangeLen(s)
-      total += sc.rangeLen(s)
-      while (k < e) { sc.indeg(sink.ds(k)) += 1; k += 1 }
-      s += 1
-    }
-    sc.revOff = Scratch.ensureInt(sc.revOff, nStates + 1)
-    sc.revOff(0) = 0
-    s = 0
-    while (s < nStates) { sc.revOff(s + 1) = sc.revOff(s) + sc.indeg(s); s += 1 }
-    sc.revSrc = Scratch.ensureInt(sc.revSrc, math.max(total, 1))
-    s = 0
-    while (s < nStates) { sc.indeg(s) = sc.revOff(s); s += 1 } // fill cursors
-    s = 0
-    while (s < nStates) {
-      var k = sc.rangeStart(s); val e = k + sc.rangeLen(s)
-      while (k < e) {
-        val d = sink.ds(k); sc.revSrc(sc.indeg(d)) = s; sc.indeg(d) += 1
-        k += 1
-      }
-      s += 1
-    }
-    // per-state product final weight, computed ONCE into scratch (dense
-    // lookups — no per-state binarySearch; sc.bwd is free here)
-    sc.bwd = Scratch.ensureDouble(sc.bwd, nStates)
-    val finW = sc.bwd
-    val thisFin = this.finalWeightDense
-    val thatFin = that.finalWeightDense
-    var i = 0
-    while (i < nStates) {
-      val wa = thisFin(sc.pairA(i))
-      finW(i) =
-        if (wa.isInfinity) wa
-        else {
-          val wb = thatFin(sc.pairB(i))
-          if (wb.isInfinity) Double.PositiveInfinity else wa + wb
-        }
-      i += 1
-    }
-    // coaccessibility from product-final states
-    sc.mark = Scratch.ensureBool(sc.mark, nStates)
-    java.util.Arrays.fill(sc.mark, 0, nStates, false)
-    sc.stack = Scratch.ensureInt(sc.stack, nStates)
-    var sp = 0
-    i = 0
-    while (i < nStates) {
-      if (!finW(i).isInfinity) { sc.mark(i) = true; sc.stack(sp) = i; sp += 1 }
-      i += 1
-    }
-    while (sp > 0) {
-      sp -= 1; val v = sc.stack(sp)
-      var r = sc.revOff(v)
-      while (r < sc.revOff(v + 1)) {
-        val p = sc.revSrc(r)
-        if (!sc.mark(p)) { sc.mark(p) = true; sc.stack(sp) = p; sp += 1 }
-        r += 1
-      }
-    }
-    if (!sc.mark(0)) return Wfst.emptyFst
-    // renumber (ascending) + exact-size CSR copy of kept arcs
-    sc.remap = Scratch.ensureInt(sc.remap, nStates)
-    var kept = 0
-    s = 0
-    while (s < nStates) {
-      if (sc.mark(s)) { sc.remap(s) = kept; kept += 1 } else sc.remap(s) = -1
-      s += 1
-    }
-    val nOff = new Array[Int](kept + 1)
-    s = 0
-    while (s < nStates) {
-      if (sc.mark(s)) {
-        var c = 0
-        var k = sc.rangeStart(s); val e = k + sc.rangeLen(s)
-        while (k < e) { if (sc.mark(sink.ds(k))) c += 1; k += 1 }
-        nOff(sc.remap(s) + 1) = c
-      }
-      s += 1
-    }
-    var t = 0
-    while (t < kept) { nOff(t + 1) += nOff(t); t += 1 }
-    val m = nOff(kept)
-    val nIl = new Array[Int](m); val nOl = new Array[Int](m)
-    val nWt = new Array[Double](m); val nDs = new Array[Int](m)
-    s = 0
-    while (s < nStates) {
-      if (sc.mark(s)) {
-        var p = nOff(sc.remap(s))
-        var k = sc.rangeStart(s); val e = k + sc.rangeLen(s)
-        while (k < e) {
-          if (sc.mark(sink.ds(k))) {
-            nIl(p) = sink.il(k); nOl(p) = sink.ol(k); nWt(p) = sink.wt(k)
-            nDs(p) = sc.remap(sink.ds(k)); p += 1
-          }
-          k += 1
-        }
-      }
-      s += 1
-    }
-    // finals: kept product-final states, ascending remap order
-    var fCount = 0
-    i = 0
-    while (i < nStates) {
-      if (sc.mark(i) && !finW(i).isInfinity) fCount += 1
-      i += 1
-    }
-    val fs = new Array[Int](fCount); val fw = new Array[Double](fCount)
-    var fi = 0
-    i = 0
-    while (i < nStates) {
-      if (sc.mark(i) && !finW(i).isInfinity) {
-        fs(fi) = sc.remap(i); fw(fi) = finW(i); fi += 1
-      }
-      i += 1
-    }
-    new Wfst(0, kept, nOff, nIl, nOl, nWt, nDs, fs, fw)
-  }
-
-  /** Weight-bounded composition: like `compose`, but product states are
-    * only expanded along prefixes of weight <= maxWeight (SPFA-style
-    * relaxation: a state is re-expanded when a cheaper prefix is found,
-    * so no state reachable within the bound is missed).
+    * rmEpsilon'd first, cf. SURVEY.md §2 row B5). `that` must be
+    * arcSort'd.
     *
-    * EXACTLY equivalent to compose-then-prune(maxWeight) whenever the
-    * composed machine has a 0-weight accepting path — true for the
-    * error-model step of the cascade (the Σ* identity path): every
-    * surviving path has total <= 0 + maxWeight, and with non-negative
-    * weights all its prefixes are <= maxWeight too. This is the
-    * beam-during-search that keeps dense error models (10^4+ confusion
-    * types) from exploding the per-window product. */
-  def composeBounded(that: Wfst, maxWeight: Double): Wfst =
-    composeBounded(that, maxWeight, trim = true)
-
-  /** `trim = false` as in `compose(that, trim)`. */
-  def composeBounded(that: Wfst, maxWeight: Double, trim: Boolean): Wfst = {
-    if (this.numStates == 0 || that.numStates == 0) return Wfst.emptyFst
-    val sc = Wfst.scratch.get()
-    assembleTrimmed(sc, expandBounded(that, maxWeight, sc), that, trim)
-  }
-
-  /** Fused composeBounded -> projectOutput -> prune(pruneTh): the
-    * cascade's error-model step in ONE exact-size materialization; the
-    * SPFA's converged distances double as prune's forward distances. */
+    * Product states are only expanded along prefixes of weight <=
+    * maxWeight (SPFA-style relaxation: a state is re-expanded when a
+    * cheaper prefix is found, so no state reachable within the bound is
+    * missed). This is EXACTLY the unbounded result whenever the product
+    * has a 0-weight accepting path and maxWeight >= pruneTh — true for
+    * the error-model step of the cascade (the Σ* identity path): every
+    * path the prune keeps has total <= 0 + pruneTh, and with
+    * non-negative weights all its prefixes are <= maxWeight too. This is
+    * the beam-during-search that keeps dense error models (10^4+
+    * confusion types) from exploding the per-window product. */
   def composeBoundedPruned(that: Wfst, maxWeight: Double,
       pruneTh: Double): Wfst = {
     if (this.numStates == 0 || that.numStates == 0) return Wfst.emptyFst
     val sc = Wfst.scratch.get()
-    assemblePruned(sc, expandBounded(that, maxWeight, sc), that, pruneTh,
-      fwdFromSpfa = true)
+    assemblePruned(sc, expandBounded(that, maxWeight, sc), that, pruneTh)
   }
 
   /** Weight-bounded SPFA product expansion into scratch; returns the
@@ -1214,8 +766,9 @@ final class Wfst private (
     // skipped in the final copy). No per-arc object allocation.
     val sink = sc.sink; sink.n = 0
     var nStates = 0
-    // dense fast path (see expandProduct): direct-indexed id table
-    // when leftN * rightN fits
+    // dense fast path: direct-indexed id table when the product space
+    // fits (the error-model cascade step is ~30 x ~650 — one array
+    // read replaces three dependent hash-probe cache misses)
     val rightN = that.numStates
     val dense = this.numStates.toLong * rightN <= Scratch.DenseMax
     if (dense) sc.ensureDense(this.numStates * rightN)
@@ -1326,14 +879,11 @@ final class Wfst private (
   }
 
   /** Fused projectOutput + prune straight from the scratch product
-    * ranges: equivalent to assemble(trim=false) -> projectOutput ->
-    * prune(th) but with ONE exact-size CSR materialization instead of
-    * two, skipping prune's fresh topo/distance passes. `fwdFromSpfa`:
-    * the bounded expansion's sc.dist already holds exact forward
-    * shortest distances; the unbounded expansion computes them here by
-    * forward SPFA over the live ranges. */
+    * ranges: ONE exact-size CSR materialization. The forward distances
+    * are the bounded expansion's converged sc.dist (exact shortest
+    * prefix distances). */
   private def assemblePruned(sc: Scratch, nStates: Int, that: Wfst,
-      pruneTh: Double, fwdFromSpfa: Boolean): Wfst = {
+      pruneTh: Double): Wfst = {
     if (nStates == 0) return Wfst.emptyFst
     val sink = sc.sink
     val thisFin = this.finalWeightDense
@@ -1346,36 +896,7 @@ final class Wfst private (
         if (wb.isInfinity) Double.PositiveInfinity else wa + wb
       }
     }
-    var qh = 0
-    var qt = 0
-    def qpush(t: Int): Unit = {
-      if (qt == sc.queue.length)
-        sc.queue = java.util.Arrays.copyOf(sc.queue, qt << 1)
-      sc.queue(qt) = t; qt += 1
-    }
-    // ---- forward distances
-    val fwd = sc.dist // bounded expansion left its exact distances here
-    if (!fwdFromSpfa) {
-      java.util.Arrays.fill(fwd, 0, nStates, Double.PositiveInfinity)
-      java.util.Arrays.fill(sc.flags, 0, nStates, false)
-      fwd(0) = 0.0
-      sc.flags(0) = true; qpush(0)
-      while (qh < qt) {
-        val u = sc.queue(qh); qh += 1
-        sc.flags(u) = false
-        val d = fwd(u)
-        var k = sc.rangeStart(u); val e = k + sc.rangeLen(u)
-        while (k < e) {
-          val nd = d + sink.wt(k)
-          val t = sink.ds(k)
-          if (nd < fwd(t) - 1e-15) {
-            fwd(t) = nd
-            if (!sc.flags(t)) { sc.flags(t) = true; qpush(t) }
-          }
-          k += 1
-        }
-      }
-    }
+    val fwd = sc.dist
     // ---- reverse CSR (with weights) over the live ranges
     sc.indeg = Scratch.ensureInt(sc.indeg, nStates)
     java.util.Arrays.fill(sc.indeg, 0, nStates, 0)
@@ -1411,7 +932,13 @@ final class Wfst private (
     val bwd = sc.bwd
     java.util.Arrays.fill(bwd, 0, nStates, Double.PositiveInfinity)
     java.util.Arrays.fill(sc.flags, 0, nStates, false)
-    qh = 0; qt = 0
+    var qh = 0
+    var qt = 0
+    def qpush(t: Int): Unit = {
+      if (qt == sc.queue.length)
+        sc.queue = java.util.Arrays.copyOf(sc.queue, qt << 1)
+      sc.queue(qt) = t; qt += 1
+    }
     var i = 0
     while (i < nStates) {
       val f = finW(i)
@@ -1436,7 +963,8 @@ final class Wfst private (
     val best = bwd(0)
     if (best.isInfinity) return Wfst.emptyFst
     val lim = best + pruneTh + 1e-9
-    // ---- remap + exact-size projected CSR (same criteria as prune)
+    // ---- remap + exact-size projected CSR (prune's state, arc and
+    // final criteria)
     sc.remap = Scratch.ensureInt(sc.remap, nStates)
     var kept = 0
     s = 0
@@ -1503,51 +1031,6 @@ final class Wfst private (
   }
 
   // ---------------------------------------------------------------- decoding
-
-  /** Single shortest path, tropical Viterbi (pynini `shortestpath`,
-    * lib/latticegen.py:142-147). Returns (input, output, weight) of the
-    * best accepting path, or None if the language is empty. */
-  def shortestPath: Option[(String, String, Double)] = {
-    if (numStates == 0 || finState.isEmpty) return None
-    val dist = Array.fill(numStates)(Double.PositiveInfinity)
-    val fromArc = new Array[Int](numStates)
-    java.util.Arrays.fill(fromArc, -1)
-    val fromState = new Array[Int](numStates)
-    dist(start) = 0.0
-    val pq = mutable.PriorityQueue.empty[(Double, Int)](Ordering.by(-_._1))
-    pq.enqueue((0.0, start))
-    while (pq.nonEmpty) {
-      val (d, u) = pq.dequeue()
-      if (d <= dist(u) + 1e-15) {
-        var k = off(u)
-        while (k < off(u + 1)) {
-          val nd = d + wt(k)
-          if (nd < dist(ds(k)) - 1e-15) {
-            dist(ds(k)) = nd; fromArc(ds(k)) = k; fromState(ds(k)) = u
-            pq.enqueue((nd, ds(k)))
-          }
-          k += 1
-        }
-      }
-    }
-    var bestS = -1; var bestW = Double.PositiveInfinity
-    var i = 0
-    while (i < finState.length) {
-      val w = dist(finState(i)) + finWt(i)
-      if (w < bestW) { bestW = w; bestS = finState(i) }
-      i += 1
-    }
-    if (bestS < 0) return None
-    var rev = List.empty[Int]
-    var cur = bestS
-    while (cur != start) { rev ::= fromArc(cur); cur = fromState(cur) }
-    val in = new StringBuilder; val outb = new StringBuilder
-    rev.foreach { k =>
-      if (il(k) > 0) in.appendAll(Character.toChars(il(k)))
-      if (ol(k) > 0) outb.appendAll(Character.toChars(ol(k)))
-    }
-    Some((in.result(), outb.result(), bestW))
-  }
 
   /** Enumerate all accepting paths (pynini `paths()`, used on pruned
     * acyclic window FSTs, lib/latticegen.py:150-181). Requires an acyclic

@@ -32,6 +32,19 @@ class QueriesSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("inputBytes: a failed size lookup is not cached") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-inputbytes")
+    val f = dir.resolve("later.bin")
+    try {
+      assert(Queries.inputBytes(spark, f.toString) == Long.MaxValue)
+      java.nio.file.Files.write(f, new Array[Byte](1234))
+      assert(Queries.inputBytes(spark, f.toString) == 1234L)
+    } finally {
+      java.nio.file.Files.deleteIfExists(f)
+      java.nio.file.Files.deleteIfExists(dir)
+    }
+  }
+
   test("langId identifies clear-cut samples") {
     assert(TextOps.langId("ich weiß nicht, daß der ſchöne Tag") == "de")
     assert(TextOps.langId("the quick brown fox is jumping over the lazy dog") == "en")

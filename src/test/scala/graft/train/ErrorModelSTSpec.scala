@@ -54,8 +54,8 @@ class ErrorModelSTSpec extends AnyFunSuite {
     val (probs, ngrProbs) = fitLocal(pairs, 3, 1)
     val mappings = matrixToMappings(probs, Seq("a", "b", "c"), 5.0)
     val fst = compileTransducer(mappings, ngrProbs, maxErrors = 3, maxContext = 1)
-    val hyp = graft.wfst.Wfst.acceptor("ac").compose(fst)
-      .projectOutput.prune(5.0).rmEpsilon.distinctOutputs()
+    val hyp = graft.wfst.Wfst.acceptor("ac").composePruned(fst, 5.0)
+      .rmEpsilon.distinctOutputs()
     assert(hyp.map(_._1).contains("ab"))
   }
 

@@ -1,6 +1,9 @@
 package graft.wfst
 
+import graft.Fixtures
 import graft.align.{Aligner, Distance}
+import graft.correct.CompiledModel
+import graft.tokenize.Tokenizer
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,7 +36,7 @@ class WfstPropertySpec extends AnyFunSuite {
     forAll(stringMapGen, stringMapGen) { (m1, m2) =>
       val f1 = Wfst.fromStrings(m1)
       val f2 = Wfst.fromStrings(m2).arcSort
-      val got = f1.compose(f2).paths().map(p => (p._2, p._3)).toMap
+      val got = f1.composePruned(f2, 100.0).paths().map(p => (p._2, p._3)).toMap
       val expected = for {
         (s, w1) <- m1
         w2 <- m2.get(s)
@@ -46,7 +49,7 @@ class WfstPropertySpec extends AnyFunSuite {
   test("shortestPath = min over enumerated paths") {
     forAll(stringMapGen) { m =>
       val f = Wfst.fromStrings(m)
-      val best = f.shortestPath.get._3
+      val best = f.distinctOutputs().map(_._2).min
       assert(math.abs(best - m.values.min) < 1e-9)
     }
   }
@@ -55,7 +58,9 @@ class WfstPropertySpec extends AnyFunSuite {
     forAll(stringMapGen, Gen.chooseNum(0.0, 4.0)) { (m, th) =>
       val f = Wfst.fromStrings(m)
       val best = m.values.min
-      val kept = f.prune(th).paths().map(p => (p._2, p._3)).toMap
+      // composing with the identity (sigma*) leaves only the prune
+      val kept = f.composePruned(Wfst.sigmaStar.arcSort, th)
+        .paths().map(p => (p._2, p._3)).toMap
       val expected = m.filter(_._2 <= best + th + 1e-9)
       assert(kept.keySet == expected.keySet)
     }
@@ -73,7 +78,7 @@ class WfstPropertySpec extends AnyFunSuite {
       expectedU.foreach { case (s, w) => assert(math.abs(uPaths(s) - w) < 1e-9) }
 
       val c = Wfst.fromStrings(m1).concat(Wfst.fromStrings(m2))
-      val cBest = c.shortestPath.get._3
+      val cBest = c.distinctOutputs().map(_._2).min
       assert(math.abs(cBest - (m1.values.min + m2.values.min)) < 1e-9)
     }
   }
@@ -92,44 +97,106 @@ class WfstPropertySpec extends AnyFunSuite {
     Gen.chooseNum(0, 12).flatMap(n =>
       Gen.stringOfN(n, Gen.oneOf('a', 'b', 'c', 'd', ' ', 'ſ', 'ä')))
 
-  test("fused composePruned == compose.projectOutput.prune (and the bounded form)") {
+  private def assertSameOutputs(got: Seq[(String, Double)],
+      want: Map[String, Double], clue: => String): Unit = {
+    assert(got.map(_._1).toSet == want.keySet, clue)
+    got.foreach { case (o, w) =>
+      assert(math.abs(w - want(o)) < 1e-9, s"$o: $w vs ${want(o)} ($clue)")
+    }
+  }
+
+  test("composePruned and composeBoundedPruned == RefFst on random acceptors") {
     forAll(stringMapGen, stringMapGen) { (m1, m2) =>
       val left = Wfst.fromStrings(m1)
       val right = Wfst.fromStrings(m2).arcSort
       for (th <- Seq(0.5, 2.0, 10.0)) {
-        val unfused = left.compose(right, trim = false)
-          .projectOutput.prune(th)
-          .distinctOutputs().toSeq
-        val fused = left.composePruned(right, th)
-          .distinctOutputs().toSeq
-        assert(fused == unfused, s"th=$th m1=$m1 m2=$m2")
-        val unfusedB = left.composeBounded(right, 6.0, trim = false)
-          .projectOutput.prune(th)
-          .distinctOutputs().toSeq
-        val fusedB = left.composeBoundedPruned(right, 6.0, th)
-          .distinctOutputs().toSeq
-        assert(fusedB == unfusedB, s"bounded th=$th m1=$m1 m2=$m2")
+        assertSameOutputs(left.composePruned(right, th).distinctOutputs(),
+          RefFst.outputs(RefFst.composePruned(left, right, th)),
+          s"th=$th m1=$m1 m2=$m2")
+        assertSameOutputs(left.composeBoundedPruned(right, 6.0, th).distinctOutputs(),
+          RefFst.outputs(RefFst.composeBoundedPruned(left, right, 6.0, th)),
+          s"bounded th=$th m1=$m1 m2=$m2")
       }
     }
   }
 
+  // the cascade's inputs: the CorrectorSpec fixture model and the
+  // 1..maxWindowSize-token windows of the fixture lines
+  private lazy val model =
+    CompiledModel.train(Fixtures.trainingPairs, Fixtures.wordlist)
+  private lazy val fixtureLines =
+    Fixtures.trainingPairs.flatMap(p => Seq(p._1, p._2)) ++ Fixtures.keyedOcr.map(_._2)
+  private def windowsOf(line: String): Seq[String] = {
+    val toks = Tokenizer.splitInputString(line)
+    for {
+      i <- toks.indices
+      j <- 1 to math.min(model.maxWindowSize, toks.length - i)
+    } yield toks.slice(i, i + j).mkString(" ")
+  }
+  private lazy val fixtureWindows = fixtureLines.flatMap(windowsOf).distinct
+
+  test("cascade steps == RefFst on fixture windows and random perturbations") {
+    val pw = model.pruningWeight
+    val err = model.errorFst.get
+    def outputs(f: Wfst): Seq[(String, Double)] =
+      try f.distinctOutputs()
+      catch { case _: IllegalStateException => f.rmEpsilon(trim = false).distinctOutputs() }
+    val rng = new scala.util.Random(20261017L)
+    val alphabet = fixtureLines.mkString.distinct
+    def perturb(s: String): String = {
+      val b = new StringBuilder(s)
+      for (_ <- 0 to rng.nextInt(2)) {
+        val i = rng.nextInt(b.length + 1)
+        rng.nextInt(3) match {
+          case 0 if i < b.length => b.deleteCharAt(i)
+          case 1 if i < b.length => b.setCharAt(i, alphabet(rng.nextInt(alphabet.length)))
+          case _ => b.insert(i, alphabet(rng.nextInt(alphabet.length)))
+        }
+      }
+      b.result()
+    }
+    val perturbed = Seq.fill(200)(perturb(fixtureWindows(rng.nextInt(fixtureWindows.size))))
+    for (win <- fixtureWindows ++ perturbed) {
+      val in = Wfst.acceptor(win)
+      val e = in.composeBoundedPruned(err, pw, pw)
+      val eRef = RefFst.composeBoundedPruned(in, err, pw, pw)
+      assertSameOutputs(outputs(e), RefFst.outputs(eRef), s"error step '$win'")
+      val l = e.rmEpsilon(trim = false).composePruned(model.windowFst, pw)
+      val lRef = RefFst.composePruned(eRef.rmEpsilon(trim = false), model.windowFst, pw)
+      assertSameOutputs(outputs(l), RefFst.outputs(lRef), s"lexicon step '$win'")
+    }
+    // two whole lines as one window under a window FST widened to their
+    // token count: left x right states exceed Scratch.DenseMax, so the
+    // lexicon step takes the hash-map state-id path (both sides compose
+    // the same error-step machine)
+    val line = Fixtures.trainingPairs(0)._2 + " " + Fixtures.trainingPairs(1)._2
+    val wide = model.withWordsPerWindow(Tokenizer.splitInputString(line).length)
+    val e = Wfst.acceptor(line).composeBoundedPruned(err, pw, pw).rmEpsilon(trim = false)
+    assert(e.numStates.toLong * wide.windowFst.numStates > Scratch.DenseMax)
+    val got = outputs(e.composePruned(wide.windowFst, pw))
+    assert(got.nonEmpty)
+    assertSameOutputs(got, RefFst.outputs(RefFst.composePruned(e, wide.windowFst, pw)),
+      "hash-path lexicon step")
+  }
+
   test("scratch isolation: 16 threads composing/pruning concurrently agree with serial") {
     // the hot path reuses ThreadLocal scratch buffers (Wfst.Scratch);
-    // this hammers compose/prune/rmEpsilon from many threads at once and
-    // asserts bit-identical results vs the serial run — any cross-call
-    // aliasing of scratch into results, or stale-prefix reads, diverges
-    val maps = samples(stringMapGen, 48)
-    val rights = samples(stringMapGen, 48).map(m => Wfst.fromStrings(m).arcSort)
-    def run(i: Int): Seq[(String, String, Double)] = {
-      val f = Wfst.fromStrings(maps(i))
-      f.compose(rights(i)).projectOutput.prune(2.0).rmEpsilon
-        .paths().sortBy(p => (p._1, p._2, p._3))
-    }
-    val serial = (0 until 48).map(run)
+    // this runs the cascade's sequence (composeBoundedPruned ->
+    // rmEpsilon -> composePruned -> distinctOutputs) from many threads at
+    // once and asserts bit-identical results vs the serial run — any
+    // cross-call aliasing of scratch into results, or stale-prefix
+    // reads, diverges
+    val wins = fixtureWindows.take(48)
+    val pw = model.pruningWeight
+    def run(i: Int): Seq[(String, Double)] =
+      Wfst.acceptor(wins(i)).composeBoundedPruned(model.errorFst.get, pw, pw)
+        .rmEpsilon(trim = false).composePruned(model.windowFst, pw)
+        .distinctOutputs()
+    val serial = wins.indices.map(run)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
     try {
-      val futures = (0 until 48).flatMap(i => (0 until 4).map { _ =>
-        pool.submit(new java.util.concurrent.Callable[(Int, Seq[(String, String, Double)])] {
+      val futures = wins.indices.flatMap(i => (0 until 4).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[(Int, Seq[(String, Double)])] {
           def call() = (i, run(i))
         })
       })

