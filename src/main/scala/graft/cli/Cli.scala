@@ -224,10 +224,8 @@ object Process {
         // persist: the corrections feed BOTH the write-back join and
         // the count — without it each consumer re-parses and
         // re-corrects every page file
-        val corrected = lines.mapPartitions { it =>
-          val m = bc.value
-          val cache = graft.correct.SharedWindowCache.forModel(m)
-          it.map { case (file, id, text) =>
+        val corrected = CorrectionJob.mapWithModel(lines, bc) {
+          (m, cache) => { case (file, id, text) =>
             (file, id, Corrector.correctLine(text, m, cache))
           }
         }.toDF("file", "line_id", "text").persist()
@@ -241,10 +239,8 @@ object Process {
           case None => Sources.loadPairsFromDir(spark, a("directory"),
             a("input-suffix")) // process.py:168-169
         }).as[(String, String)]
-        val out = in.mapPartitions { it =>
-          val m = bc.value
-          val cache = graft.correct.SharedWindowCache.forModel(m)
-          it.map { case (id, line) =>
+        val out = CorrectionJob.mapWithModel(in, bc) {
+          (m, cache) => { case (id, line) =>
             (id, Corrector.correctLine(line, m, cache))
           }
         }.toDF("line_id", "text")

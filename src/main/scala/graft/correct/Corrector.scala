@@ -94,10 +94,8 @@ object CompiledModel {
     val lexFst = LexiconBuilder.lexiconToFst(lexicon)
     val errorFst = ErrorModelTrainer.trainSimple(pairs, maxContext, maxErrors,
       preservePunct)
-    CompiledModel(Some(normalizeError(errorFst)),
-      windowFstFrom(lexFst, wordsPerWindow),
-      pruningWeight, rejectionWeight, maxWindowSize = 2, wordsPerWindow,
-      lexiconFst = Some(lexFst.arcSort))
+    fromFsts(lexFst, Some(errorFst), wordsPerWindow, pruningWeight,
+      rejectionWeight)
   }
 
   def fromFsts(lexiconFst: Wfst, errorFst: Option[Wfst],
@@ -177,10 +175,8 @@ object CompiledModel {
           ErrorModelTrainer.compileSingle(byN(n), preservePunct))
         ErrorModelTrainer.combineErrorTransducers(singles, maxErrors)
     }
-    CompiledModel(Some(normalizeError(errorFst)),
-      windowFstFrom(lexFst, wordsPerWindow),
-      pruningWeight, rejectionWeight, 2, wordsPerWindow,
-      lexiconFst = Some(lexFst.arcSort))
+    fromFsts(lexFst, Some(errorFst), wordsPerWindow, pruningWeight,
+      rejectionWeight)
   }
 }
 

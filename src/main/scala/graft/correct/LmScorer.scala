@@ -1,5 +1,7 @@
 package graft.correct
 
+import graft.pipeline.CorrectionJob
+import org.apache.spark.broadcast.Broadcast
 import scala.collection.mutable
 
 /** Pluggable language-model rescoring (SURVEY.md §2 row B12). The
@@ -182,22 +184,40 @@ object LmDecoder {
     (out.getOrElse(line), ns)
   }
 
+  /** Line corrector for one document: its lines, in order, share LM
+    * state (the wrapper's traceback threading, G7). */
+  private def lineCorrector(model: CompiledModel, lm: LmScorer, lmWeight: Double,
+      beamWidth: Int, cache: AltCache,
+      beamClusteringDist: Double = 0.0): String => String = {
+    var state = lm.initialState
+    line => {
+      val (out, ns) = correctLineLm(line, model, lm)(state, lmWeight,
+        beamWidth, cache, beamClusteringDist)
+      state = ns
+      out
+    }
+  }
+
   /** Document-level sequential fold: lines in offset order share LM
     * state; media spans pass through (and do not advance the LM). */
   def correctDocLm(doc: graft.pipeline.Doc, model: CompiledModel,
       lm: LmScorer, lmWeight: Double = 0.5, beamWidth: Int = 100,
       cache: AltCache = null,
-      beamClusteringDist: Double = 0.0): graft.pipeline.Doc = {
-    var state = lm.initialState
-    val spans = doc.spans.map { s =>
-      if (s.kind == "text") {
-        val (out, ns) = correctLineLm(s.text, model, lm)(state,
-          lmWeight, beamWidth, cache, beamClusteringDist)
-        state = ns
-        s.copy(text = out)
-      } else s
-    }
-    doc.copy(spans = spans)
+      beamClusteringDist: Double = 0.0): graft.pipeline.Doc =
+    CorrectionJob.correctSpans(doc, lineCorrector(model, lm, lmWeight,
+      beamWidth, cache, beamClusteringDist), None)
+
+  /** LM rescoring as a [[CorrectionJob.correctDocs]] decoder: the same
+    * fold as correctDocLm, docs embarrassingly parallel. A doc is scored
+    * by the `byContext` LM of its decade (scorerFor), else by `lm`. */
+  def decoder(lm: Broadcast[LmScorer], lmWeight: Double = 0.5,
+      beamWidth: Int = 100,
+      byContext: Option[Broadcast[Map[Int, LmScorer]]] = None)
+      : CorrectionJob.Decoder = { (m, cache) =>
+    val fallback = lm.value
+    val contexts = byContext.fold(Map.empty[Int, LmScorer])(_.value)
+    d => lineCorrector(m, scorerFor(contexts, fallback, d.doc_id),
+      lmWeight, beamWidth, cache)
   }
 
   /** G10 `_get_context_from_identifier` (wrapper/decode.py:254-262):

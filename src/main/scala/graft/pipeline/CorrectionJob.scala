@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import graft.correct.{CompiledModel, Corrector}
+import graft.correct.{AltCache, CompiledModel, Corrector, SharedWindowCache}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -36,109 +36,76 @@ object Metrics {
   *  - model is broadcast once per executor (torrent broadcast), NOT
   *    serialized per task;
   *  - docs are value-independent rows → embarrassingly parallel map;
-  *  - long-document skew is broken either by uniform re-hashing on
-  *    doc_id (`salt`) or by span-chunk splitting (`chunkSpans`), which
-  *    caps per-row work at `chunkSize` spans and reassembles with one
-  *    groupBy — use when doc length skew is extreme (SURVEY.md §7.4 #5).
+  *  - long-document skew is broken by uniform re-hashing on doc_id
+  *    (`saltPartitions`, SURVEY.md §7.4 #5).
   */
 object CorrectionJob {
 
   def broadcastModel(spark: SparkSession, model: CompiledModel): Broadcast[CompiledModel] =
     spark.sparkContext.broadcast(model)
 
-  private def correctSpan(s: Span, m: CompiledModel, metrics: Option[Metrics],
-      cache: graft.correct.AltCache = null): Span =
-    if (s.kind == "text") {
-      metrics.foreach { mx =>
-        mx.textSpans.add(1); mx.chars.add(s.text.length.toLong)
-      }
-      val corrected = Corrector.correctLine(s.text, m, cache)
-      if (corrected != s.text) metrics.foreach(_.spansChanged.add(1))
-      Span(s.kind, corrected, s.media_ref, s.offset)
-    } else {
-      metrics.foreach(_.mediaSpans.add(1))
-      s
+  /** How a partition corrects its docs' text spans. Called once per
+    * partition with the model and the window memo; the function it
+    * returns gives each doc its line corrector, which sees the doc's
+    * text spans in order and so may carry state from one span to the
+    * next (LM rescoring, [[graft.correct.LmDecoder.decoder]]). */
+  type Decoder = (CompiledModel, AltCache) => Doc => String => String
+
+  /** The default decoder: every line on its own, lattice Viterbi. */
+  val viterbi: Decoder = { (m, cache) =>
+    val line: String => String = Corrector.correctLine(_, m, cache)
+    _ => line
+  }
+
+  /** The one per-partition correction setup: each partition reads the
+    * broadcast model once and shares the executor-wide window memo
+    * ([[SharedWindowCache]]); `f` turns both into the per-row function.
+    * useCache = false is the bench's controlled miss-path measurement
+    * (the 10^12-doc regime where window diversity dwarfs any cache). */
+  def mapWithModel[A, B: Encoder](rows: Dataset[A], bc: Broadcast[CompiledModel],
+      useCache: Boolean = true)(f: (CompiledModel, AltCache) => A => B): Dataset[B] =
+    rows.mapPartitions { it =>
+      val m = bc.value
+      val row = f(m, if (useCache) SharedWindowCache.forModel(m) else null)
+      it.map(row)
     }
 
-  /** Default path: optional salted repartition (uniform doc spread),
-    * then a pure map over docs. */
+  /** Optional salted repartition (uniform doc spread), then a pure map
+    * over docs: `decoder` corrects each doc's text spans. */
   def correctDocs(docs: Dataset[Doc], bc: Broadcast[CompiledModel],
       metrics: Option[Metrics] = None,
       saltPartitions: Option[Int] = None,
-      useCache: Boolean = true): Dataset[Doc] = {
+      useCache: Boolean = true,
+      decoder: Decoder = viterbi): Dataset[Doc] = {
     val spark = docs.sparkSession
     import spark.implicits._
     val input = saltPartitions match {
       case Some(p) => docs.repartition(p, xxhash64($"doc_id"))
       case None    => docs
     }
-    input.mapPartitions { it =>
-      val m = bc.value
-      // useCache=false is the bench's controlled miss-path measurement
-      // (the 10^12-doc regime where window diversity dwarfs any cache)
-      val cache =
-        if (useCache) graft.correct.SharedWindowCache.forModel(m) else null
-      it.map { d =>
-        metrics.foreach(_.docs.add(1))
-        Doc(d.doc_id, d.spans.map(correctSpan(_, m, metrics, cache)))
-      }
+    mapWithModel(input, bc, useCache) { (m, cache) =>
+      val forDoc = decoder(m, cache)
+      d => correctSpans(d, forDoc(d), metrics)
     }
   }
 
-  /** LM-rescored path (G7): each doc is a sequential fold — lines share
-    * LM state in offset order — while docs stay embarrassingly parallel
-    * (the wrapper's page-at-a-time traceback threading, SURVEY.md §3.3).
-    */
-  def correctDocsLm(docs: Dataset[Doc], bc: Broadcast[CompiledModel],
-      bcLm: Broadcast[graft.correct.LmScorer],
-      lmWeight: Double = 0.5, beamWidth: Int = 100,
-      metrics: Option[Metrics] = None,
-      saltPartitions: Option[Int] = None): Dataset[Doc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val input = saltPartitions match {
-      case Some(p) => docs.repartition(p, xxhash64($"doc_id"))
-      case None    => docs
-    }
-    input.mapPartitions { it =>
-      val m = bc.value
-      val lm = bcLm.value
-      val cache = graft.correct.SharedWindowCache.forModel(m)
-      it.map { d =>
-        metrics.foreach(_.docs.add(1))
-        graft.correct.LmDecoder.correctDocLm(d, m, lm, lmWeight, beamWidth, cache)
-      }
-    }
-  }
-
-  /** Skew-splitting path: docs with more than `chunkSize` spans are
-    * split into chunks, corrected in parallel, and reassembled by
-    * doc_id with span order restored via offset sort. Costs one extra
-    * shuffle — only pays off under extreme doc-length skew. */
-  def correctDocsChunked(docs: Dataset[Doc], bc: Broadcast[CompiledModel],
-      chunkSize: Int = 64,
-      metrics: Option[Metrics] = None): Dataset[Doc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val chunks = docs.flatMap { d =>
-      d.spans.grouped(chunkSize).zipWithIndex.map { case (g, ci) =>
-        (d.doc_id, ci, g)
-      }
-    }
-    // spread chunks uniformly (a mega-doc's chunks land on many tasks)
-    val corrected = chunks
-      .repartition(col("_1"), col("_2"))
-      .mapPartitions { it =>
-        val m = bc.value
-        val cache = graft.correct.SharedWindowCache.forModel(m)
-        it.map { case (id, ci, g) =>
-          (id, ci, g.map(correctSpan(_, m, metrics, cache)))
+  /** The span loop: text spans through `fix` in order, media spans
+    * unchanged, everything counted into `metrics`. */
+  private[graft] def correctSpans(d: Doc, fix: String => String,
+      metrics: Option[Metrics]): Doc = {
+    metrics.foreach(_.docs.add(1))
+    Doc(d.doc_id, d.spans.map { s =>
+      if (s.kind == "text") {
+        metrics.foreach { mx =>
+          mx.textSpans.add(1); mx.chars.add(s.text.length.toLong)
         }
+        val corrected = fix(s.text)
+        if (corrected != s.text) metrics.foreach(_.spansChanged.add(1))
+        Span(s.kind, corrected, s.media_ref, s.offset)
+      } else {
+        metrics.foreach(_.mediaSpans.add(1))
+        s
       }
-    corrected.groupByKey(_._1).mapGroups { (id, it) =>
-      metrics.foreach(_.docs.add(1))
-      val spans = it.toSeq.sortBy(_._2).flatMap(_._3)
-      Doc(id, spans)
-    }
+    })
   }
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.align.Distance
 import graft.correct.{CompiledModel, Corrector}
-import graft.pipeline.DocGen
+import graft.pipeline.{CorrectionJob, DocGen}
 import graft.tokenize.Tokenizer
 import graft.train.{Category, ErrorModelTrainer, LexiconBuilder, NaiveBayes}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -58,11 +58,15 @@ object Queries {
   }
   private[queries] def fanOutSmall(df: DataFrame, path: String): DataFrame = {
     val s = df.sparkSession
-    // session-settable kill switch (spark.graft.fanout.enabled=false):
-    // cluster operators whose inputs are always well-split can opt out
-    // without a rebuild; default on — the size predicate below already
-    // self-disables on real-scale inputs
-    if (s.conf.get("spark.graft.fanout.enabled", "true") == "false") return df
+    // session-settable kill switch (spark.graft.fanout.enabled=false,
+    // any case): cluster operators whose inputs are always well-split
+    // can opt out without a rebuild; default on — the size predicate
+    // below already self-disables on real-scale inputs
+    val key = "spark.graft.fanout.enabled"
+    val raw = s.conf.get(key, "true")
+    val enabled = raw.toBooleanOption.getOrElse(throw
+      new IllegalArgumentException(s"$key must be true or false, got '$raw'"))
+    if (!enabled) return df
     val cores = s.sparkContext.defaultParallelism
     if (inputBytes(s, path) < cores.toLong * FanOutBytesPerCore)
       df.repartition(cores * 2) // 2 waves: straggler smoothing
@@ -515,21 +519,19 @@ object Queries {
     import s.implicits._
     val model = modelFor(s, dir)
     val bc = s.sparkContext.broadcast(model)
-    pairsDf(s, dir).select($"ocr", $"gt").as[(String, String)]
-      .mapPartitions { it =>
-        val m = bc.value
-        val cache = graft.correct.SharedWindowCache.forModel(m)
-        it.map { case (ocr, gt) =>
-          val cor = Corrector.correctLine(ocr, m, cache)
-          val (dOcr, lOcr) = Distance.adjustedDistance(ocr, gt)
-          val (dCor, lCor) = Distance.adjustedDistance(cor, gt)
-          val (tp, tn, fp, fn) = Distance.precisionRecall(ocr, cor, gt)
-          (Distance.levenshtein(ocr, gt).toLong,
-            Distance.levenshtein(cor, gt).toLong,
-            gt.codePointCount(0, gt.length).toLong,
-            dOcr, lOcr.toLong, dCor, lCor.toLong, tp, tn, fp, fn)
-        }
+    val pairs = pairsDf(s, dir).select($"ocr", $"gt").as[(String, String)]
+    CorrectionJob.mapWithModel(pairs, bc) {
+      (m, cache) => { case (ocr, gt) =>
+        val cor = Corrector.correctLine(ocr, m, cache)
+        val (dOcr, lOcr) = Distance.adjustedDistance(ocr, gt)
+        val (dCor, lCor) = Distance.adjustedDistance(cor, gt)
+        val (tp, tn, fp, fn) = Distance.precisionRecall(ocr, cor, gt)
+        (Distance.levenshtein(ocr, gt).toLong,
+          Distance.levenshtein(cor, gt).toLong,
+          gt.codePointCount(0, gt.length).toLong,
+          dOcr, lOcr.toLong, dCor, lCor.toLong, tp, tn, fp, fn)
       }
+    }
       .toDF("lev_ocr", "lev_cor", "len_gt", "adj_ocr", "alen_ocr",
         "adj_cor", "alen_cor", "tp", "tn", "fp", "fn")
       .agg(sum($"lev_ocr").as("lev_ocr"), sum($"lev_cor").as("lev_cor"),
@@ -567,15 +569,12 @@ object Queries {
     import s.implicits._
     val model = modelFor(s, dir)
     val bc = s.sparkContext.broadcast(model)
-    pairsDf(s, dir).as[(Long, String, String)]
-      .mapPartitions { it =>
-        val m = bc.value
-        val cache = graft.correct.SharedWindowCache.forModel(m)
-        it.map { case (id, ocr, gt) =>
-          val cor = Corrector.correctLine(ocr, m, cache)
-          (id, ocr, cor, gt, cor == gt)
-        }
+    CorrectionJob.mapWithModel(pairsDf(s, dir).as[(Long, String, String)], bc) {
+      (m, cache) => { case (id, ocr, gt) =>
+        val cor = Corrector.correctLine(ocr, m, cache)
+        (id, ocr, cor, gt, cor == gt)
       }
+    }
       .toDF("doc_id", "ocr", "corrected", "gt", "exact_match")
       .orderBy($"doc_id")
   }

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import graft.correct.CompiledModel
-import graft.pipeline.{CorrectionJob, Doc}
-import org.apache.spark.broadcast.Broadcast
+import graft.pipeline.Doc
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -34,8 +32,8 @@ object StreamingCorrection {
     * Doc rows — the streaming face of
     * [[graft.sources.WarcIO.docsFromWarc]]. Exactly-once shard
     * processing comes from the file-source checkpoint; the transform is
-    * stateless, so it composes with correctStream / dedupStream
-    * downstream. At 100 TB/day this is the front door: the crawler
+    * stateless, so it composes with CorrectionJob.correctDocs /
+    * dedupStream downstream. At 100 TB/day this is the front door: the crawler
     * drops shards into the directory and the pipeline keeps up
     * incrementally instead of re-scanning the corpus. */
   def warcDocStream(spark: SparkSession, path: String,
@@ -59,12 +57,6 @@ object StreamingCorrection {
           }
       }
   }
-
-  /** The flagship correction as a streaming transform (stateless; model
-    * broadcast once, shared memo per executor). */
-  def correctStream(docs: Dataset[Doc],
-      bc: Broadcast[CompiledModel]): Dataset[Doc] =
-    CorrectionJob.correctDocs(docs, bc) // no repartition: stateless map
 
   def toMemorySink(ds: Dataset[Doc], queryName: String): DataStreamWriter[Doc] =
     ds.writeStream.outputMode("append").format("memory").queryName(queryName)

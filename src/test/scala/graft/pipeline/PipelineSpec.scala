@@ -30,58 +30,86 @@ class PipelineSpec extends AnyFunSuite {
     assert((kinds - "text").nonEmpty) // media spans present
   }
 
+  /** The exact counts a correction of `in` into `out` must record. */
+  private def assertMetrics(mx: Metrics, in: Seq[Doc], out: Seq[Doc]): Unit = {
+    val spans = in.sortBy(_.doc_id).flatMap(_.spans)
+      .zip(out.sortBy(_.doc_id).flatMap(_.spans))
+    val text = spans.filter(_._1.kind == "text")
+    assert(mx.docs.value == in.length.toLong)
+    assert(mx.textSpans.value == text.length.toLong)
+    assert(mx.mediaSpans.value == (spans.length - text.length).toLong)
+    assert(mx.chars.value == text.map(_._1.text.length.toLong).sum)
+    assert(mx.spansChanged.value ==
+      text.count { case (a, b) => a.text != b.text }.toLong)
+  }
+
   test("correction preserves span-sequence (kind, media_ref, order) and fixes text") {
     val docs = DocGen.docs(spark, 40, seed = 11L, partitions = 4)
     val bc = CorrectionJob.broadcastModel(spark, model)
-    val metrics = Metrics(spark)
-    val out = CorrectionJob.correctDocs(docs, bc, Some(metrics),
-      saltPartitions = Some(4)).collect().map(d => d.doc_id -> d).toMap
     val in = docs.collect()
-    assert(out.size == in.length)
-    for (d <- in) {
-      val o = out(d.doc_id)
-      assert(o.spans.length == d.spans.length)
-      for ((s, os) <- d.spans.zip(o.spans)) {
-        assert(os.kind == s.kind)
-        assert(os.media_ref == s.media_ref)
-        assert(os.offset == s.offset)
-        if (s.kind != "text") assert(os.text == s.text) // media untouched
-        else assert(os.text == Corrector.correctLine(s.text, model))
+    val expected = in.map(d => d.doc_id -> d.spans.map(s =>
+      if (s.kind == "text") Corrector.correctLine(s.text, model) else s.text)).toMap
+    for (salt <- Seq(None, Some(4)); useCache <- Seq(true, false)) {
+      val metrics = Metrics(spark)
+      val job = CorrectionJob.correctDocs(docs, bc, Some(metrics),
+        saltPartitions = salt, useCache = useCache)
+      // no shuffle except the optional salting exchange
+      val plan = job.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.count(_.contains("Exchange")) == salt.size, plan)
+      val out = job.collect()
+      val byId = out.map(d => d.doc_id -> d).toMap
+      assert(byId.size == in.length)
+      for (d <- in) {
+        val o = byId(d.doc_id)
+        assert(o.spans.length == d.spans.length)
+        for ((s, os) <- d.spans.zip(o.spans)) {
+          assert(os.kind == s.kind)
+          assert(os.media_ref == s.media_ref)
+          assert(os.offset == s.offset)
+        }
+        // media untouched, text corrected line by line
+        assert(o.spans.map(_.text) == expected(d.doc_id), (salt, useCache))
       }
+      assertMetrics(metrics, in.toSeq, out.toSeq)
+      assert(metrics.textSpans.value > 0L)
+      assert(metrics.mediaSpans.value > 0L)
+      assert(metrics.spansChanged.value > 0L)
     }
-    assert(metrics.docs.value == 40L)
-    assert(metrics.textSpans.value > 0L)
-    assert(metrics.mediaSpans.value > 0L)
-    assert(metrics.spansChanged.value > 0L)
-  }
-
-  test("chunked (skew-splitting) path produces identical output") {
-    val docs = DocGen.docs(spark, 30, seed = 5L, partitions = 4)
-    val bc = CorrectionJob.broadcastModel(spark, model)
-    val a = CorrectionJob.correctDocs(docs, bc).collect()
-      .sortBy(_.doc_id).toSeq
-    val b = CorrectionJob.correctDocsChunked(docs, bc, chunkSize = 8)
-      .collect().sortBy(_.doc_id).toSeq
-    assert(a == b)
   }
 
   test("LM-rescored job equals the per-doc sequential fold") {
+    import spark.implicits._
+    import graft.correct.{CharNgramLm, LmDecoder, LmScorer}
     val docs = DocGen.docs(spark, 20, seed = 9L, partitions = 4)
-    val lm = graft.correct.CharNgramLm.train(
-      graft.Fixtures.trainingPairs.map(_._2), n = 4)
+    val lm = CharNgramLm.train(Fixtures.trainingPairs.map(_._2), n = 4)
     val bc = CorrectionJob.broadcastModel(spark, model)
-    val bcLm = spark.sparkContext
-      .broadcast(lm: graft.correct.LmScorer)
-    val got = CorrectionJob.correctDocsLm(docs, bc, bcLm,
-      saltPartitions = Some(4)).collect().sortBy(_.doc_id).toSeq
-    val expected = docs.collect().sortBy(_.doc_id).toSeq
-      .map(d => graft.correct.LmDecoder.correctDocLm(d, model, lm))
+    val bcLm = spark.sparkContext.broadcast(lm: LmScorer)
+    val metrics = Metrics(spark)
+    val got = CorrectionJob.correctDocs(docs, bc, Some(metrics),
+      saltPartitions = Some(4), decoder = LmDecoder.decoder(bcLm))
+      .collect().sortBy(_.doc_id).toSeq
+    val in = docs.collect().sortBy(_.doc_id).toSeq
+    val expected = in.map(d => LmDecoder.correctDocLm(d, model, lm))
     assert(got == expected)
     // media untouched, order preserved
     got.zip(expected).foreach { case (g, e) =>
       assert(g.spans.map(s => (s.kind, s.media_ref, s.offset)) ==
         e.spans.map(s => (s.kind, s.media_ref, s.offset)))
     }
+    // the LM path counts exactly as the Viterbi path does
+    assertMetrics(metrics, in, got)
+    // decade-contextual: every other doc is dated to the 1840s and
+    // scored by that decade's LM
+    val dated = docs.map(d =>
+      if (d.doc_id.last % 2 == 0) d
+      else d.copy(doc_id = d.doc_id + "_1847"))
+    val byDecade = Map(185 -> (CharNgramLm.train(Seq("ich nicht weiß"), n = 4): LmScorer))
+    val bcDecade = spark.sparkContext.broadcast(byDecade)
+    val gotCtx = CorrectionJob.correctDocs(dated, bc,
+      decoder = LmDecoder.decoder(bcLm, byContext = Some(bcDecade)))
+      .collect().sortBy(_.doc_id).toSeq
+    assert(gotCtx == dated.collect().sortBy(_.doc_id).toSeq
+      .map(d => LmDecoder.correctDocLmContextual(d, model, byDecade, lm)))
   }
 
   test("bucketed write commits manifests; resume completes and matches one-shot") {

@@ -45,6 +45,20 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("fanOutSmall: the kill switch parses any case and names its key on junk") {
+    val key = "spark.graft.fanout.enabled"
+    val df = spark.range(0, 100, 1, 1).toDF()
+    val path = s"$sf/documents.parquet" // small: fans out by default
+    try {
+      assert(Queries.fanOutSmall(df, path).rdd.getNumPartitions > 1)
+      spark.conf.set(key, "FALSE")
+      assert(Queries.fanOutSmall(df, path).rdd.getNumPartitions == 1)
+      spark.conf.set(key, "nope")
+      val e = intercept[IllegalArgumentException](Queries.fanOutSmall(df, path))
+      assert(e.getMessage.contains(key))
+    } finally spark.conf.unset(key)
+  }
+
   test("langId identifies clear-cut samples") {
     assert(TextOps.langId("ich weiß nicht, daß der ſchöne Tag") == "de")
     assert(TextOps.langId("the quick brown fox is jumping over the lazy dog") == "en")

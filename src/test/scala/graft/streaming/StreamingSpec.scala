@@ -24,7 +24,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val stream = StreamingCorrection.readDocStream(spark, dir)
     val q = StreamingCorrection
-      .toMemorySink(StreamingCorrection.correctStream(stream, bc), "corrected")
+      .toMemorySink(CorrectionJob.correctDocs(stream, bc), "corrected")
       .start()
     try {
       q.processAllAvailable()
@@ -167,8 +167,8 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("stream-restart-ckpt").toString
     val model = CompiledModel.train(Fixtures.trainingPairs, Fixtures.wordlist)
     val bc = CorrectionJob.broadcastModel(spark, model)
-    def start() = StreamingCorrection
-      .correctStream(StreamingCorrection.readDocStream(spark, in), bc)
+    def start() = CorrectionJob
+      .correctDocs(StreamingCorrection.readDocStream(spark, in), bc)
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", ckpt).start()
     // wave 1: 15 docs, process, then STOP (the kill)
