@@ -247,7 +247,12 @@ object Corrector {
     // accepting path, so weight-bounded composition at the pruning
     // threshold is EXACTLY compose-then-prune — the beam applies during
     // the search instead of after it (dense confusion tables would
-    // otherwise explode the product before prune sees it).
+    // otherwise explode the product before prune sees it). The
+    // expansion also looks one label ahead on the window's chain and
+    // never creates a product state that can neither read the next
+    // character nor finish (most of the hub fan-out); the pruned
+    // machine is array-identical to the one without the lookahead
+    // (Wfst.composeBoundedPruned).
     // trim = false throughout: prune drops non-coaccessible states
     // itself, and downstream compose / path enumeration explore only
     // from the start state, so the intermediate connect passes are

@@ -19,12 +19,19 @@ import org.apache.spark.storage.StorageLevel
   * survives — deterministic across runs and partitionings.
   *
   * Scale shape mirrors q_dedup_groups: every aggregation state is
-  * bounded (window-min exact edges, 2..bucketCap banded buckets before
+  * bounded (min+count exact edges, 2..bucketCap banded buckets before
   * any doc-list materializes, k-bounded collect), label propagation is
   * O(log diameter) rounds with eager localCheckpoints. Caches are
   * scoped to this call and released before returning — the returned
   * Dataset depends only on checkpointed labels and the input. */
 object Dedup {
+
+  /** Exact edges: min-doc_id star per content hash of the joined text
+    * (covers docs too short for shingles), from the same groupBy +
+    * join-back as q_dedup_groups — a window over the hash would sort a
+    * hot duplicated text in one task. */
+  private[pipeline] def exactEdges(txt: DataFrame): DataFrame =
+    Queries.exactDupEdges(txt.select(col("doc_id"), md5(col("text")).as("h")))
 
   def dropNearDuplicates(docs: Dataset[Doc], bucketCap: Int = 20): Dataset[Doc] = {
     val s = docs.sparkSession
@@ -35,13 +42,7 @@ object Dedup {
         d.spans.filter(_.kind == "text").map(_.text).mkString("\n")))
       .toDF("doc_id", "text")
 
-    // exact edges: min-doc_id star per content hash (covers short docs)
-    val exEdges = txt
-      .select($"doc_id", min($"doc_id").over(
-        org.apache.spark.sql.expressions.Window.partitionBy(md5($"text")))
-        .as("m"))
-      .where($"doc_id" =!= $"m")
-      .select($"m".as("a"), $"doc_id".as("b"))
+    val exEdges = exactEdges(txt)
 
     // near-dup edges: banded MinHash candidates, agreement-verified
     val mins = Queries.minhashMinsOf(txt).persist(StorageLevel.MEMORY_AND_DISK)

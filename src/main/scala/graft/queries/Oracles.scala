@@ -251,7 +251,7 @@ object Oracles {
       |         array_to_string(list_slice(ws, i*8 + 1, i*8 + 8), ' ') AS par
       |  FROM w, LATERAL (SELECT unnest(range(0, CAST(ceil(len(ws) / 8.0) AS BIGINT))) AS i) u),
       |keyed AS (SELECT doc_id, idx, par, md5(par) AS h,
-      |                 doc_id*100000 + idx AS pos64 FROM pars),
+      |                 (CAST(doc_id AS BIGINT) << 32) | idx AS pos64 FROM pars),
       |firsts AS (SELECT h, min(pos64) AS keep_pos FROM keyed GROUP BY h)
       |SELECT k.doc_id,
       |       CAST(count(*) AS BIGINT) AS n_pars,

@@ -595,7 +595,7 @@ object Queries {
     * paragraph already seen elsewhere in the corpus, keep the FIRST
     * occurrence in corpus order). Paragraphs here are deterministic
     * 8-word chunks of each doc (the synthetic docs are single-line);
-    * first occurrence = min(doc_id*100000 + idx) per paragraph hash, so
+    * first occurrence = min(doc_id << 32 | idx) per paragraph hash, so
     * the keep decision is a total order both engines share.
     *
     * Scale shape: paragraph stream → ONE hash agg on md5(par) whose
@@ -623,15 +623,17 @@ object Queries {
       .select($"doc_id", posexplode(transform(
         sequence(lit(0), ceil(size($"ws") / lit(8.0)).cast("int") - 1),
         i => concat_ws(" ", slice($"ws", i * lit(8) + 1, lit(8))))))
-      .select((col("doc_id") * 100000 + $"pos").as("pos64"), md5($"col").as("h"))
+      .select(shiftleft(col("doc_id").cast("long"), 32)
+        .bitwiseOR($"pos".cast("long")).as("pos64"),
+        md5($"col").as("h"))
     val firsts = skinny.groupBy($"h").agg(min($"pos64").as("keep_pos"))
     val verdicts = skinny.join(firsts, "h")
       .select($"pos64", ($"pos64" === $"keep_pos").as("kept"))
-      .groupBy(expr("pos64 div 100000").as("doc_id"))
+      .groupBy(shiftright($"pos64", 32).as("doc_id"))
       .agg(count(lit(1)).as("n_pars"),
         sum(when($"kept", 1L).otherwise(0L)).as("n_kept"),
         sort_array(collect_list(when($"kept",
-          expr("CAST(pos64 % 100000 AS INT)")))).as("keep_idx"))
+          $"pos64".bitwiseAND(lit(0xffffffffL)).cast("int")))).as("keep_idx"))
       .where($"n_kept" >= 1)
     // let-bind the token array via single-element transform (the qWinnow
     // idiom): a plain `ws` alias would be inlined by projection collapse
@@ -852,6 +854,20 @@ object Queries {
       .where($"jaccard" >= 0.2)
   }
 
+  /** Exact-duplicate star edges over (doc_id, h) rows: a = the min
+    * doc_id of each content hash shared by 2+ rows, b = every other row
+    * with that hash. One map-side-combinable groupBy (per-group state:
+    * a min and a count) plus a join back on h. */
+  private[graft] def exactDupEdges(hashed: DataFrame): DataFrame = {
+    val keepers = hashed.groupBy(col("h"))
+      .agg(min(col("doc_id")).as("m"), count(lit(1)).as("n"))
+      .where(col("n") >= 2)
+      .select(col("h"), col("m"))
+    hashed.join(keepers, "h")
+      .where(col("doc_id") =!= col("m"))
+      .select(col("m").as("a"), col("doc_id").as("b"))
+  }
+
   /** Dedup GROUP RESOLUTION — the artifact a training-data pipeline
     * actually consumes: a per-doc (doc_id, canon, keep) verdict
     * resolving the dedup family's pairwise outputs into groups.
@@ -891,14 +907,8 @@ object Queries {
     // single task's sort buffer; the groupBy's per-group state is one
     // BIGINT min and the n >= 2 cut keeps singleton groups (the vast
     // majority of the corpus) out of the join entirely.
-    val hashed = docsDfRaw(s, dir).select($"doc_id", md5($"text").as("h"))
-    val exKeepers = hashed.groupBy($"h")
-      .agg(min($"doc_id").as("m"), count(lit(1)).as("n"))
-      .where($"n" >= 2)
-      .select($"h", $"m")
-    val exEdges = hashed.join(exKeepers, "h")
-      .where($"doc_id" =!= $"m")
-      .select($"m".as("a"), $"doc_id".as("b"))
+    val exEdges = exactDupEdges(
+      docsDfRaw(s, dir).select($"doc_id", md5($"text").as("h")))
     val jacEdges = ngramJaccardScored(s, dir)
       .select($"ida".as("a"), $"idb".as("b"))
     // verified minhash candidates (see Scaladoc): bucket df-cut BEFORE

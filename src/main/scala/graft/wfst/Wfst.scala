@@ -36,6 +36,7 @@ private[wfst] final class Scratch {
   var rangeLen = new Array[Int](1 << 10)
   var flags = new Array[Boolean](1 << 10) // SPFA in-queue (false at state creation)
   var queue = new Array[Int](1 << 11)
+  var look = new Array[Int](1 << 6) // left-state lookahead labels (expandBounded)
   // reachability / trim / prune temporaries
   var mark = new Array[Boolean](1 << 10)
   var stack = new Array[Int](1 << 10)
@@ -115,6 +116,153 @@ private[wfst] final class ArcSink(cap0: Int = 64) {
   }
 }
 
+/** One-label lookahead tables of a machine used as the RIGHT operand of
+  * compose: the label-lookahead filter of OpenFst's generalized
+  * composition (Allauzen, Riley & Schalkwyk, Interspeech 2009). Built
+  * once per machine instance (`Wfst.lookahead`); read-only after that.
+  *
+  * `accepts(r, y)`: can a product state (p, r) move or finish when the
+  * left state p's only move reads y (y > 0), or when p has no move left
+  * (y = End)? A Σ-input arc of r matches any y and an eps-input arc moves
+  * r alone; with the input used up, only eps-input arcs and r's final
+  * weight can still lead to an accepting path. When it says no, (p, r)
+  * has no arc and no final weight: a dead leaf.
+  *
+  * `listAt`: for each group of `MinGroup` or more arcs that leave one
+  * state with one input label (the fan-out of an error model's Σ* hub),
+  * the group's arcs whose destination accepts y, in arc order, so the
+  * expander visits only those. Keyed by (the group's first arc, y); a y
+  * that no destination reads shares the `Other` list (Σ and eps-input
+  * destinations only). */
+private[wfst] final class Lookahead(m: Wfst) {
+  import Lookahead._
+
+  private val flags: Array[Byte] = {
+    val fin = m.finalWeightDense
+    Array.tabulate(m.numStates) { r =>
+      var b = if (fin(r).isInfinity) 0 else Final
+      var k = m.off(r)
+      while (k < m.off(r + 1) && m.il(k) <= Label.Eps) { // Σ, eps sort first
+        b |= (if (m.il(k) == Label.Eps) EpsIn else SigmaIn)
+        k += 1
+      }
+      b.toByte
+    }
+  }
+
+  def accepts(r: Int, y: Int): Boolean =
+    if (y == End) (flags(r) & (EpsIn | Final)) != 0
+    else (flags(r) & (EpsIn | SigmaIn)) != 0 || reads(r, y)
+
+  private def reads(r: Int, y: Int): Boolean = {
+    val end = m.off(r + 1)
+    var lo = m.off(r); var hi = end
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (m.il(mid) < y) lo = mid + 1 else hi = mid
+    }
+    lo < end && m.il(lo) == y
+  }
+
+  private def key(lo: Int, y: Int): Long = lo.toLong << 32 | (y & 0xffffffffL)
+  private val at = new LongIntMap(64)
+  /** Per indexed (group, y): the list length, then the arc ids. */
+  val lists: Array[Int] = buildLists()
+
+  /** Candidates for the list of y are the group's arcs into a Σ or
+    * eps-input state plus those whose destination has a y arc (all arcs
+    * for End); `accepts` filters them. Labels read by no such
+    * destination share the `Other` list. */
+  private def buildLists(): Array[Int] = {
+    val out = new IntList(256)
+    val wild = new IntList(64) // arcs into a Σ or eps-input state
+    val cand = new IntList(64)
+    var byLabel = new Array[Long](64) // (label << 32 | arc) per non-wild arc
+    def list(lo: Int, y: Int, from: IntList): Unit = {
+      val len = out.n
+      at.put(key(lo, y), len)
+      out.add(0)
+      var i = 0
+      while (i < from.n) {
+        if (accepts(m.ds(from.a(i)), y)) out.add(from.a(i))
+        i += 1
+      }
+      out.a(len) = out.n - len - 1
+    }
+    var q = 0
+    while (q < m.numStates) {
+      val qHi = m.off(q + 1)
+      var lo = m.off(q)
+      while (lo < qHi && m.il(lo) < Label.Eps) lo += 1 // Σ arcs: not indexed
+      while (lo < qHi) {
+        var hi = lo + 1
+        while (hi < qHi && m.il(hi) == m.il(lo)) hi += 1
+        if (hi - lo >= MinGroup) {
+          wild.n = 0; cand.n = 0
+          var nr = 0
+          var j = lo
+          while (j < hi) {
+            val r = m.ds(j)
+            cand.add(j)
+            if ((flags(r) & (EpsIn | SigmaIn)) != 0) wild.add(j)
+            else {
+              var k = m.off(r)
+              while (k < m.off(r + 1)) {
+                if (m.il(k) > 0 && (k == m.off(r) || m.il(k) != m.il(k - 1))) {
+                  if (nr == byLabel.length) byLabel = java.util.Arrays.copyOf(byLabel, nr << 1)
+                  byLabel(nr) = m.il(k).toLong << 32 | j; nr += 1
+                }
+                k += 1
+              }
+            }
+            j += 1
+          }
+          list(lo, End, cand)
+          list(lo, Other, wild)
+          java.util.Arrays.sort(byLabel, 0, nr)
+          var i = 0
+          while (i < nr) {
+            val y = (byLabel(i) >>> 32).toInt
+            cand.n = 0
+            var w = 0
+            while (i < nr && (byLabel(i) >>> 32).toInt == y) {
+              val a = byLabel(i).toInt
+              while (w < wild.n && wild.a(w) < a) { cand.add(wild.a(w)); w += 1 }
+              cand.add(a); i += 1
+            }
+            while (w < wild.n) { cand.add(wild.a(w)); w += 1 }
+            list(lo, y, cand)
+          }
+        }
+        lo = hi
+      }
+      q += 1
+    }
+    out.toArray
+  }
+
+  /** Offset in `lists` of the indexed group starting at arc `lo`,
+    * filtered for lookahead y. */
+  def listAt(lo: Int, y: Int): Int = {
+    val o = at.getOrElse(key(lo, y), -1)
+    if (o >= 0) o else at.getOrElse(key(lo, Other), -1)
+  }
+}
+
+private[wfst] object Lookahead {
+  /** Left-state lookahead: `Free` = no constraint (several moves, an
+    * eps-output move, or final with a move left), `End` = no move left,
+    * else the one label the left state reads next. `Other` stands for a
+    * label no destination of a group reads (not a code point). */
+  final val Free = Label.Eps
+  final val End = -2
+  final val Other = Int.MaxValue
+  final val MinGroup = 8
+  private final val SigmaIn = 1
+  private final val EpsIn = 2
+  private final val Final = 4
+}
+
 /** Immutable weighted finite-state transducer over the tropical semiring
   * (plus = min, times = +), the semiring of the reference's OpenFst
   * models (weights are -ln(relative_frequency), lib/helper.py:135).
@@ -170,6 +318,17 @@ final class Wfst private (
       finDense0 = d
     }
     d
+  }
+
+  /** Lookahead tables for this machine as a compose's right operand,
+    * built lazily once per instance and published like finDense0.
+    * Transient: never serialized, so broadcast and ModelIO bytes are
+    * those of the arrays alone. */
+  @transient @volatile private var look0: Lookahead = _
+  private[wfst] def lookahead: Lookahead = {
+    var l = look0
+    if (l == null) { l = new Lookahead(this); look0 = l }
+    l
   }
 
   /** Compatibility views (tests, debugging; not on the hot path). */
@@ -747,7 +906,21 @@ final class Wfst private (
     * path the prune keeps has total <= 0 + pruneTh, and with
     * non-negative weights all its prefixes are <= maxWeight too. This is
     * the beam-during-search that keeps dense error models (10^4+
-    * confusion types) from exploding the per-window product. */
+    * confusion types) from exploding the per-window product.
+    *
+    * Dead ends are never created (one-label lookahead, see `Lookahead`).
+    * When the left state p's only arc reads y, a product state (p, q) is
+    * created only if q has a y arc, a Σ-input arc or an eps-input arc;
+    * when p has no arc, only if q is final or has an eps-input arc; other
+    * left states (several arcs, an eps-output arc, or final with an arc)
+    * take every q. A skipped state has no arc and no final weight: it
+    * lies on no accepting path, so the prune (any finite pruneTh) would
+    * drop it and every arc into it, and as it is never expanded it
+    * changes no other state's distance, queue order, creation order or
+    * arcs. The result is array-identical to the unfiltered expansion's.
+    * In the error-model step the left machine is the window's chain, and
+    * on the benchmark model ~90% of the states the unfiltered expansion
+    * creates are such dead ends. */
   def composeBoundedPruned(that: Wfst, maxWeight: Double,
       pruneTh: Double): Wfst = {
     if (this.numStates == 0 || that.numStates == 0) return Wfst.emptyFst
@@ -766,8 +939,23 @@ final class Wfst private (
     // skipped in the final copy). No per-arc object allocation.
     val sink = sc.sink; sink.n = 0
     var nStates = 0
+    // lookahead label of every left state (Lookahead.Free/End/label)
+    val la = that.lookahead
+    sc.look = Scratch.ensureInt(sc.look, this.numStates)
+    val look = sc.look
+    val thisFin = this.finalWeightDense
+    var ls = 0
+    while (ls < this.numStates) {
+      val k = this.off(ls)
+      val n = this.off(ls + 1) - k
+      look(ls) =
+        if (n == 0) Lookahead.End
+        else if (n == 1 && this.ol(k) > 0 && thisFin(ls).isInfinity) this.ol(k)
+        else Lookahead.Free
+      ls += 1
+    }
     // dense fast path: direct-indexed id table when the product space
-    // fits (the error-model cascade step is ~30 x ~650 — one array
+    // fits (the error-model cascade step is ~12 x ~1,754 — one array
     // read replaces three dependent hash-probe cache misses)
     val rightN = that.numStates
     val dense = this.numStates.toLong * rightN <= Scratch.DenseMax
@@ -823,57 +1011,82 @@ final class Wfst private (
       val d0 = sc.dist(cur)
       val p = sc.pairA(cur); val q = sc.pairB(cur)
       val from = sink.n
-      var emitted = 0
       def emit(il2: Int, ol2: Int, w: Double, dp: Int, dq: Int): Unit = {
         val nd = d0 + w
         if (nd <= lim) {
           val t = id(dp, dq)
           sink.add(il2, ol2, w, t)
-          emitted += 1
           if (nd < sc.dist(t) - 1e-15) {
             sc.dist(t) = nd
             if (!sc.flags(t)) { sc.flags(t) = true; push(t) }
           }
         }
       }
+      // the right arcs [lo, hi) of one input label, paired with the left
+      // move into dp: a joint move adds the left arc's label and weight, a
+      // right-alone move (joint = false) stays at left state dp = p. Only
+      // arcs into right states that accept dp's lookahead are emitted.
+      def emitGroup(lo: Int, hi: Int, joint: Boolean, lil: Int, lw: Double,
+          dp: Int): Unit = {
+        def emitArc(j: Int): Unit =
+          emit(lil, that.ol(j), if (joint) lw + that.wt(j) else that.wt(j),
+            dp, that.ds(j))
+        val y = look(dp)
+        if (y == Lookahead.Free) {
+          var j = lo
+          while (j < hi) { emitArc(j); j += 1 }
+        } else if (hi - lo < Lookahead.MinGroup) {
+          var j = lo
+          while (j < hi) { if (la.accepts(that.ds(j), y)) emitArc(j); j += 1 }
+        } else {
+          val o = la.listAt(lo, y)
+          var k = o + 1
+          val e = k + la.lists(o)
+          while (k < e) { emitArc(la.lists(k)); k += 1 }
+        }
+      }
       val bLo = that.off(q); val bHi = that.off(q + 1)
       var sigmaEnd = bLo
       while (sigmaEnd < bHi && that.il(sigmaEnd) < Label.Eps) sigmaEnd += 1
       var be = sigmaEnd
-      while (be < bHi && that.il(be) == Label.Eps) {
-        emit(Label.Eps, that.ol(be), that.wt(be), p, that.ds(be))
-        be += 1
-      }
+      while (be < bHi && that.il(be) == Label.Eps) be += 1
+      emitGroup(sigmaEnd, be, joint = false, Label.Eps, 0.0, p)
       var ka = this.off(p)
       val kaHi = this.off(p + 1)
       while (ka < kaHi) {
         val aol = this.ol(ka)
+        val dp = this.ds(ka)
+        val y = look(dp)
         if (aol == Label.Eps) {
-          emit(this.il(ka), Label.Eps, this.wt(ka), this.ds(ka), q)
+          if (y == Lookahead.Free || la.accepts(q, y))
+            emit(this.il(ka), Label.Eps, this.wt(ka), dp, q)
         } else {
           var lo = be; var hi = bHi
           while (lo < hi) {
             val mid = (lo + hi) >>> 1
             if (that.il(mid) < aol) lo = mid + 1 else hi = mid
           }
-          var j = lo
-          while (j < bHi && that.il(j) == aol) {
-            emit(this.il(ka), that.ol(j), this.wt(ka) + that.wt(j),
-              this.ds(ka), that.ds(j))
-            j += 1
+          hi = bHi
+          var gHi = lo
+          while (gHi < hi) {
+            val mid = (gHi + hi) >>> 1
+            if (that.il(mid) <= aol) gHi = mid + 1 else hi = mid
           }
+          hi = gHi
+          emitGroup(lo, hi, joint = true, this.il(ka), this.wt(ka), dp)
           var si = bLo
           while (si < sigmaEnd) {
-            val o2 = if (that.ol(si) == Label.Sigma) aol else that.ol(si)
-            emit(this.il(ka), o2, this.wt(ka) + that.wt(si),
-              this.ds(ka), that.ds(si))
+            if (y == Lookahead.Free || la.accepts(that.ds(si), y)) {
+              val o2 = if (that.ol(si) == Label.Sigma) aol else that.ol(si)
+              emit(this.il(ka), o2, this.wt(ka) + that.wt(si), dp, that.ds(si))
+            }
             si += 1
           }
         }
         ka += 1
       }
       sc.rangeStart(cur) = from
-      sc.rangeLen(cur) = emitted
+      sc.rangeLen(cur) = sink.n - from
     }
     nStates
   }

@@ -1,7 +1,9 @@
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Throwaway: interleaved A/B of the scan fan-out on cheap queries. */
+/** Interleaved A/B of the scan fan-out on cheap queries. Every sample
+  * starts from released caches (the warm-up's persisted plans too), and
+  * the arm that runs first alternates between repetitions. */
 object ScratchFanAB extends App {
   val sf = sys.env.getOrElse("SF_DIR", "/root/testdata/sf0.1")
   val spark = SparkSession.builder().master("local[32]")
@@ -20,8 +22,9 @@ object ScratchFanAB extends App {
   names.foreach { n =>
     val fn = graft.SparkEntry.queries(n)
     fn(spark, sf).count() // warm codegen for this query shape
-    val series = (1 to 4).flatMap { _ =>
-      Seq(true, false).map { fan =>
+    graft.queries.Queries.releaseCaches()
+    val series = (1 to 4).flatMap { rep =>
+      (if (rep % 2 == 1) Seq(true, false) else Seq(false, true)).map { fan =>
         spark.conf.set("spark.graft.fanout.enabled", fan.toString)
         val t = sec { fn(spark, sf).count() }
         graft.queries.Queries.releaseCaches()

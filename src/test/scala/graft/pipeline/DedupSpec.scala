@@ -40,6 +40,25 @@ class DedupSpec extends AnyFunSuite {
     assert(out("d0").spans == doc("d0", longA, withMedia = true).spans)
   }
 
+  test("exact dups: a hot duplicated text resolves via star edges, not a window") {
+    import spark.implicits._
+    // one text duplicated across most docs (the viral-boilerplate shape)
+    // plus two unique docs: the exact edges come from a groupBy on the
+    // hash (per-group state: a min and a count), never a window that
+    // sorts the whole hot group in one task
+    val hot = "identical viral boilerplate page shared by almost every document in this corpus"
+    val docs = (0 until 40).map(i => doc(f"h$i%02d", hot)) ++
+      Seq(doc("u1", longA), doc("u2", longB))
+    val out = Dedup.dropNearDuplicates(docs.toDS()).collect().map(_.doc_id).toSet
+    assert(out == Set("h00", "u1", "u2"))
+    val txt = docs.map(d => (d.doc_id, d.spans.head.text)).toDF("doc_id", "text")
+    val edges = Dedup.exactEdges(txt)
+    val plan = edges.queryExecution.executedPlan.toString
+    assert(!plan.contains("Window"), plan)
+    assert(edges.collect().map(r => (r.getString(0), r.getString(1))).toSet ==
+      (1 until 40).map(i => ("h00", f"h$i%02d")).toSet)
+  }
+
   test("no false merges: distinct docs all survive") {
     import spark.implicits._
     val docs = Seq(doc("a", longA), doc("b", longB), doc("c", "tiny")).toDS()

@@ -995,6 +995,24 @@ class QueriesSpec extends AnyFunSuite {
       (1L, 2L, 1L, C)))
   }
 
+  test("paragraph dedup: a doc with 100,001 chunks keeps all its paragraphs") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-pdedup-big").toString
+    // doc 0's chunk 100000 must stay doc 0's: a decimal (doc_id, idx)
+    // packing with a 100,000 stride hands it to doc 1
+    val n = 100001
+    val big = (0 until n).map(i => s"p$i a a a a a a a").mkString(" ")
+    val B = (1 to 8).map(i => s"b$i").mkString(" ")
+    Seq((0L, big), (1L, B)).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val got = Queries.qParagraphDedup(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+    Queries.releaseCaches()
+    assert(got.map(r => (r._1, r._2, r._3)).toSeq == Seq((0L, n.toLong, n.toLong), (1L, 1L, 1L)))
+    assert(got(0)._4 == (0 until n).map(i => s"p$i a a a a a a a").mkString("\n"))
+    assert(got(1)._4 == B)
+  }
+
   test("pmi bigrams: collocated pair scores above independent pair; value matches local recompute") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-pmi").toString

@@ -107,6 +107,16 @@ class SourcesSpec extends AnyFunSuite {
     assert(w.numArcs == model.windowFst.numArcs)
   }
 
+  test("A6: a saved and loaded model corrects every fixture line like the original") {
+    val dir = Files.createTempDirectory("src-a6-lines")
+    val model = CompiledModel.train(Fixtures.trainingPairs, Fixtures.wordlist)
+    ModelIO.saveModel(model, s"$dir/model.bin")
+    val back = ModelIO.loadModel(s"$dir/model.bin")
+    val lines = Fixtures.trainingPairs.flatMap(p => Seq(p._1, p._2)) ++ Fixtures.keyedOcr.map(_._2)
+    for (l <- lines)
+      assert(Corrector.correctLine(l, back) == Corrector.correctLine(l, model), l)
+  }
+
   test("A8: ngram list round trip") {
     val dir = Files.createTempDirectory("src-a8")
     val ngrams = Seq("a", "b", "ab", "ch")

@@ -120,6 +120,72 @@ class WfstPropertySpec extends AnyFunSuite {
     }
   }
 
+  /** A random arc-sorted right machine mixing every shape the lookahead
+    * tells apart: Σ-input arcs, eps-input arcs (forward only, so the
+    * product stays acyclic), final states that also have arcs, single-label
+    * chain states, multi-label states and fan-out groups of
+    * `Lookahead.MinGroup`+ arcs on one label. Dyadic weights: every sum is
+    * exact, so weights compare bit for bit. */
+  private def randomRight(rng: scala.util.Random): Wfst = {
+    val n = 3 + rng.nextInt(6)
+    val labels = "abcd".map(_.toInt)
+    def lab = labels(rng.nextInt(labels.length))
+    def w = rng.nextInt(40) / 16.0
+    def out = if (rng.nextInt(4) == 0) Label.Eps else lab
+    val arcs = Array.tabulate(n) { s =>
+      val b = Array.newBuilder[Arc]
+      rng.nextInt(4) match {
+        case 0 => b += Arc(lab, out, w, rng.nextInt(n)) // chain state
+        case 1 => for (_ <- 0 to 1 + rng.nextInt(3)) b += Arc(lab, out, w, rng.nextInt(n))
+        case 2 =>
+          val l = lab
+          for (_ <- 0 until Lookahead.MinGroup + rng.nextInt(4)) b += Arc(l, out, w, rng.nextInt(n))
+        case _ =>
+      }
+      if (rng.nextInt(4) == 0)
+        b += Arc(Label.Sigma, if (rng.nextBoolean()) Label.Sigma else out, w, rng.nextInt(n))
+      if (s + 1 < n && rng.nextInt(3) == 0)
+        b += Arc(Label.Eps, out, w, s + 1 + rng.nextInt(n - s - 1))
+      b.result()
+    }
+    val finals = (0 until n).filter(_ => rng.nextInt(3) == 0).map(_ -> w).toMap
+    Wfst(0, finals, arcs).arcSort
+  }
+
+  /** A string acceptor: one chain (the cascade's window), or a trie over
+    * a few strings, possibly including the empty string and strings that
+    * are prefixes of others (finals mid-chain). */
+  private def randomLeft(rng: scala.util.Random): Wfst = {
+    def str = Seq.fill(rng.nextInt(6))("abcd"(rng.nextInt(4))).mkString
+    if (rng.nextBoolean()) Wfst.acceptor(str)
+    else {
+      val base = str
+      val strs = Seq.fill(1 + rng.nextInt(3))(str) ++
+        Seq(base, base.take(rng.nextInt(base.length + 1))) ++
+        (if (rng.nextInt(4) == 0) Seq("") else Nil)
+      Wfst.fromStrings(strs.map(_ -> rng.nextInt(16) / 16.0))
+    }
+  }
+
+  test("lookahead: composeBoundedPruned == RefFst bit for bit on random strings and machines") {
+    val rng = new scala.util.Random(4242L)
+    for (i <- 0 until 400) {
+      val left = randomLeft(rng)
+      val right = randomRight(rng)
+      for ((maxW, th) <- Seq((Double.PositiveInfinity, 100.0), (6.0, 6.0), (3.0, 1.0))) {
+        val got = RefFst.outputs(left.composeBoundedPruned(right, maxW, th)).toSeq
+        val want = RefFst.outputs(RefFst.composeBoundedPruned(left, right, maxW, th))
+        val clue = s"case $i maxW=$maxW th=$th left=${left.arcs.toSeq.map(_.toSeq)} " +
+          s"finals=${left.finals} right=${right.arcs.toSeq.map(_.toSeq)} finals=${right.finals}"
+        assert(got.map(_._1).toSet == want.keySet, clue)
+        got.foreach { case (o, wt) =>
+          assert(java.lang.Double.doubleToLongBits(wt) ==
+            java.lang.Double.doubleToLongBits(want(o)), s"$o: $wt vs ${want(o)} ($clue)")
+        }
+      }
+    }
+  }
+
   // the cascade's inputs: the CorrectorSpec fixture model and the
   // 1..maxWindowSize-token windows of the fixture lines
   private lazy val model =
@@ -179,25 +245,38 @@ class WfstPropertySpec extends AnyFunSuite {
       "hash-path lexicon step")
   }
 
+  private def serialize(m: CompiledModel): Array[Byte] = {
+    val bo = new java.io.ByteArrayOutputStream()
+    val oo = new java.io.ObjectOutputStream(bo)
+    oo.writeObject(m); oo.close()
+    bo.toByteArray
+  }
+
   test("scratch isolation: 16 threads composing/pruning concurrently agree with serial") {
     // the hot path reuses ThreadLocal scratch buffers (Wfst.Scratch);
     // this runs the cascade's sequence (composeBoundedPruned ->
     // rmEpsilon -> composePruned -> distinctOutputs) from many threads at
     // once and asserts bit-identical results vs the serial run — any
     // cross-call aliasing of scratch into results, or stale-prefix
-    // reads, diverges
+    // reads, diverges. The threads run on a freshly deserialized model,
+    // so they also race to build and read its lazy lookahead tables
+    // (Wfst.lookahead); those are transient: the model's bytes are the
+    // same before and after its first use.
     val wins = fixtureWindows.take(48)
     val pw = model.pruningWeight
-    def run(i: Int): Seq[(String, Double)] =
-      Wfst.acceptor(wins(i)).composeBoundedPruned(model.errorFst.get, pw, pw)
-        .rmEpsilon(trim = false).composePruned(model.windowFst, pw)
+    def run(m: CompiledModel, i: Int): Seq[(String, Double)] =
+      Wfst.acceptor(wins(i)).composeBoundedPruned(m.errorFst.get, pw, pw)
+        .rmEpsilon(trim = false).composePruned(m.windowFst, pw)
         .distinctOutputs()
-    val serial = wins.indices.map(run)
+    val serial = wins.indices.map(run(model, _))
+    val bytes = serialize(model)
+    val fresh = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
+      .readObject().asInstanceOf[CompiledModel]
     val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
     try {
       val futures = wins.indices.flatMap(i => (0 until 4).map { _ =>
         pool.submit(new java.util.concurrent.Callable[(Int, Seq[(String, Double)])] {
-          def call() = (i, run(i))
+          def call() = (i, run(fresh, i))
         })
       })
       futures.foreach { fu =>
@@ -205,6 +284,8 @@ class WfstPropertySpec extends AnyFunSuite {
         assert(got == serial(i), s"case $i diverged under concurrency")
       }
     } finally pool.shutdown()
+    assert(java.util.Arrays.equals(serialize(fresh), bytes),
+      "a used model serializes differently from its unused bytes")
   }
 
   test("aligner: projections reproduce inputs; gap-free positions equal chars") {
