@@ -45,7 +45,9 @@ object Queries {
   /** Input size in bytes, Long.MaxValue (never fan) when unknown. A
     * failed lookup is not cached (computeIfAbsent records nothing for a
     * null result), so a transient FS error or a path written later is
-    * looked up again on the next call. */
+    * looked up again on the next call; `releaseCaches()` forgets every
+    * size, so a path rewritten in a long-lived session is measured
+    * again. */
   private[queries] def inputBytes(s: SparkSession, path: String): Long = {
     val n = inputBytesCache.computeIfAbsent(path, p => {
       try {
@@ -116,7 +118,8 @@ object Queries {
     * harnesses (Bench, Verify, specs) call `releaseCaches()` after
     * materializing a query's result — otherwise repeated runs in one
     * session accumulate cached relations whose spilled disk blocks are
-    * only freed at session end. */
+    * only freed at session end. It also drops the input sizes
+    * [[inputBytes]] remembered. */
   private val persistedCaches = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[DataFrame, java.lang.Boolean]())
   private def registerCache(df: DataFrame): DataFrame = {
@@ -127,6 +130,7 @@ object Queries {
     // blocking: the bench protocol times the NEXT rep immediately after
     // this call — async eviction would overlap its measured window
     while (it.hasNext) { it.next().unpersist(blocking = true); it.remove() }
+    inputBytesCache.clear()
   }
 
   /** Observed-metrics plumbing: queries that bound coverage (the
@@ -1293,9 +1297,11 @@ object Queries {
   }
 
   /** WARC container round trip — the crawl-archive SOURCE path in
-    * front of the HTML extraction: documents are packed into 8
-    * synthetic `.warc.gz` crawl shards (one gzip member per response
-    * record, the Common Crawl convention — [[graft.sources.WarcIO]]),
+    * front of the HTML extraction: documents are packed into
+    * `defaultParallelism` synthetic `.warc.gz` crawl shards
+    * (`id % shards`, records in id order within a shard; one gzip
+    * member per response record, the Common Crawl convention —
+    * [[graft.sources.WarcIO]]),
     * then each shard is container-parsed (multi-member gunzip, WARC
     * framing by Content-Length, HTTP header split) and every response
     * page fed through the raw-HTML extractor. Oracle: the same
@@ -1309,8 +1315,9 @@ object Queries {
     * which production replaces with the crawler's output. */
   def qWarcExtract(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val nShards = math.max(1, s.sparkContext.defaultParallelism).toLong
     val shards = docsDfRaw(s, dir).select($"doc_id", $"text").as[(Long, String)]
-      .groupByKey { case (id, _) => id % 8 }
+      .groupByKey { case (id, _) => id % nShards }
       .mapGroups { (shard, it) =>
         val docs = it.toArray.sortBy(_._1) // deterministic record order
         val out = new java.io.ByteArrayOutputStream(1 << 16)

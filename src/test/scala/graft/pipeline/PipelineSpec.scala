@@ -229,6 +229,85 @@ class PipelineSpec extends AnyFunSuite {
     assert(TableIO.vacuum(p).isEmpty, "fully committed table has no orphans")
   }
 
+  /** The `part-` files on disk per bucket directory of a table's data. */
+  private def partFilesPerBucket(table: String): Map[String, Int] = {
+    val data = java.nio.file.Paths.get(table, "data")
+    val s = java.nio.file.Files.walk(data)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator.asScala.filter(_.getFileName.toString.startsWith("part-"))
+        .toSeq.groupBy(_.getParent.toString).map { case (d, fs) => d -> fs.size }
+    } finally s.close()
+  }
+
+  test("commit layout: one part- file per bucket (write and merge); readDocs starts no job") {
+    import spark.implicits._
+    val p = s"${Files.createTempDirectory("graft-io-layout")}/t"
+    val docs = DocGen.docs(spark, 60, seed = 3L, partitions = 4)
+    val ms = TableIO.writeDocs(docs, p, buckets = 8)
+    assert(ms.size == 8 && ms.forall(_.files.size == 1), ms.map(_.files))
+    assert(partFilesPerBucket(p).values.toSeq == Seq.fill(8)(1), partFilesPerBucket(p))
+    def id(i: Int): String = f"doc-$i%08d"
+    val upd = Seq.tabulate(10)(i =>
+      Doc(id(i), Seq(Span("text", s"updated $i", null, 0)))).toDS()
+    val merged = TableIO.mergeDocs(upd, p, buckets = 8, attemptId = "merge-0")
+    assert(merged.nonEmpty && merged.forall(_.files.size == 1), merged.map(_.files))
+    assert(TableIO.readManifests(p).forall(_.files.size == 1))
+
+    // building the reader starts no Spark job (no schema-inference or
+    // listing job): count the jobs of a tagged group, then flush the
+    // listener queue with a sentinel job of another group
+    val sc = spark.sparkContext
+    val probeJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("readDocs-probe") => probeJobs.incrementAndGet()
+          case Some("readDocs-sentinel") => sentinelDone.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("readDocs-probe", "build readDocs")
+      val reader = TableIO.readDocs(spark, p)
+      sc.setJobGroup("readDocs-sentinel", "flush listener queue")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      assert(sentinelDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(probeJobs.get == 0, s"${probeJobs.get} jobs while building readDocs")
+      assert(reader.count() == 60L)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("commit layout: a bucket over the advisory partition size splits into several files") {
+    val base = Files.createTempDirectory("graft-io-split").toString
+    val docs = DocGen.docs(spark, 200, seed = 5L, partitions = 4)
+    val one = TableIO.writeDocs(docs, s"$base/one", buckets = 2)
+    // a separate session shares the SparkContext but not the SQL conf
+    val small = spark.newSession()
+    small.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4k")
+    val split = TableIO.writeDocs(
+      DocGen.docs(small, 200, seed = 5L, partitions = 4), s"$base/split", buckets = 2)
+    assert(one.forall(_.files.size == 1), one.map(_.files))
+    assert(split.exists(_.files.size > 1), split.map(_.files))
+    // the manifest lists every data file its bucket directory holds
+    val onDisk = partFilesPerBucket(s"$base/split")
+    for (m <- split) {
+      val dirs = m.files.map(f => new java.io.File(new java.net.URI(f)).getParent).distinct
+      assert(dirs.size == 1 && onDisk(dirs.head) == m.files.size, (m.files, onDisk))
+    }
+    def key(ms: Seq[TableIO.BucketManifest]) =
+      ms.map(m => (m.bucket, m.numDocs, m.numSpans, m.checksum)).sortBy(_._1)
+    assert(key(split) == key(one))
+    assert(TableIO.readDocs(spark, s"$base/split").collect().sortBy(_.doc_id).toSeq ==
+      TableIO.readDocs(spark, s"$base/one").collect().sortBy(_.doc_id).toSeq)
+  }
+
   test("extraction pipeline e2e: boilerplate strip -> correct -> commit -> read back") {
     import spark.implicits._
     // inject the same footer span into every doc — the cross-doc repeated

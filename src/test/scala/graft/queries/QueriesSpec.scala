@@ -45,6 +45,20 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("inputBytes: releaseCaches forgets sizes, so a rewritten path is measured again") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft-inputbytes-rw")
+      .resolve("t.parquet").toString
+    Seq(1L).toDF("x").coalesce(1).write.parquet(path)
+    val small = Queries.inputBytes(spark, path)
+    spark.range(0, 100000).toDF("x").coalesce(1).write.mode("overwrite").parquet(path)
+    val rewritten = Queries.inputBytes(spark, path)
+    Queries.releaseCaches()
+    val fresh = Queries.inputBytes(spark, path)
+    assert(rewritten == small, "a size is remembered until releaseCaches")
+    assert(fresh > small, s"$fresh bytes after release, $small before the rewrite")
+  }
+
   test("fanOutSmall: the kill switch parses any case and names its key on junk") {
     val key = "spark.graft.fanout.enabled"
     val df = spark.range(0, 100, 1, 1).toDF()
