@@ -104,21 +104,6 @@ final class SequenceMatcher(a: Array[Int], b: Array[Int]) {
     }
     answer.toSeq
   }
-
-  /** difflib.quick_ratio: 2*M/T upper bound via character multisets. */
-  def quickRatio: Double = {
-    val fullbcount = mutable.HashMap.empty[Int, Int]
-    b.foreach(e => fullbcount(e) = fullbcount.getOrElse(e, 0) + 1)
-    val avail = mutable.HashMap.empty[Int, Int]
-    var matches = 0
-    a.foreach { e =>
-      val numb = avail.getOrElse(e, fullbcount.getOrElse(e, 0))
-      avail(e) = numb - 1
-      if (numb > 0) matches += 1
-    }
-    val length = a.length + b.length
-    if (length == 0) 1.0 else 2.0 * matches / length
-  }
 }
 
 object Aligner {
@@ -171,6 +156,20 @@ object Aligner {
     out.toArray
   }
 
-  def quickRatio(aStr: String, bStr: String): Double =
-    new SequenceMatcher(cps(aStr), cps(bStr)).quickRatio
+  /** difflib.quick_ratio: the 2*M/T upper bound, M the size of the
+    * intersection of the two code-point multisets. It needs character
+    * counts only, so it merges the sorted code points instead of
+    * building a matcher. */
+  def quickRatio(aStr: String, bStr: String): Double = {
+    val a = cps(aStr); val b = cps(bStr)
+    java.util.Arrays.sort(a); java.util.Arrays.sort(b)
+    var i = 0; var j = 0; var matches = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) == b(j)) { matches += 1; i += 1; j += 1 }
+      else if (a(i) < b(j)) i += 1
+      else j += 1
+    }
+    val length = a.length + b.length
+    if (length == 0) 1.0 else 2.0 * matches / length
+  }
 }

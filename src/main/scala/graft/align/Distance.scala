@@ -12,8 +12,11 @@ object Distance {
   /** Umlaut-aware edit distance (scripts/evaluate.py:49-103): a base
     * letter + U+0364 combining-e vs the precomposed umlaut counts as a
     * single edit. Returns (distance, len(l2)). */
-  def adjustedDistance(l1: String, l2: String): (Double, Int) = {
-    val alignment = Aligner.align(l1, l2)
+  def adjustedDistance(l1: String, l2: String): (Double, Int) =
+    (adjustedDistance(Aligner.align(l1, l2)), l2.codePointCount(0, l2.length))
+
+  /** [[adjustedDistance]] over an alignment `Aligner.align(l1, l2)`. */
+  def adjustedDistance(alignment: Array[(Int, Int)]): Double = {
     var d = 0.0
     var sourceUmlaut = false
     var targetUmlaut = false
@@ -34,14 +37,18 @@ object Distance {
       }
     }
     if (sourceUmlaut || targetUmlaut) d += 1.0
-    (d, l2.codePointCount(0, l2.length))
+    d
   }
 
   /** Char-level TP/TN/FP/FN of OCR vs COR vs GT via merged pairwise
     * alignments (scripts/evaluate.py:106-152). */
-  def precisionRecall(ocr: String, cor: String, gt: String): (Long, Long, Long, Long) = {
-    val al1 = Aligner.align(ocr, gt)
-    val al2 = Aligner.align(cor, gt)
+  def precisionRecall(ocr: String, cor: String, gt: String): (Long, Long, Long, Long) =
+    precisionRecall(Aligner.align(ocr, gt), Aligner.align(cor, gt))
+
+  /** [[precisionRecall]] over the alignments `al1 = Aligner.align(ocr, gt)`
+    * and `al2 = Aligner.align(cor, gt)`. */
+  def precisionRecall(al1: Array[(Int, Int)],
+      al2: Array[(Int, Int)]): (Long, Long, Long, Long) = {
     var tp = 0L; var tn = 0L; var fp = 0L; var fn = 0L
     var i1 = 0; var i2 = 0
     if (al1.isEmpty || al2.isEmpty) return (0L, 0L, 0L, 0L)

@@ -1,6 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Observation, Row,
+  SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.conf.Configuration
@@ -121,7 +123,7 @@ object TableIO {
     val withBucket = docs
       .withColumn("bucket", pmod(xxhash64($"doc_id"), lit(buckets)).cast("int"))
       .where($"bucket".isin(pending: _*))
-    commitBuckets(fs, root, withBucket, pending, attemptId, failAfterBuckets,
+    commitBuckets(fs, root, withBucket, buckets, pending, attemptId, failAfterBuckets,
       (snapN, all) => {
         // job metrics ride the snapshot (the Iceberg snapshot-summary
         // analogue); read after the write job has filled them
@@ -135,37 +137,46 @@ object TableIO {
   }
 
   /** The one commit of [[writeDocs]] and [[mergeDocs]]: write `rows`
-    * (Doc columns + `bucket`) once under a fresh attempt dir, take the
-    * per-bucket lineage stats, publish one manifest per bucket in
-    * `buckets` (in order; `failAfterBuckets` throws after that many),
-    * then the snapshot `snapshot(snapN, allCommittedBuckets)`.
+    * (Doc columns + `bucket` in `[0, numBuckets)`) once under a fresh
+    * attempt dir, publish one manifest per bucket in `buckets` (in
+    * order; `failAfterBuckets` throws after that many), then the
+    * snapshot `snapshot(snapN, allCommittedBuckets)`.
+    *
+    * One Spark job: the per-bucket lineage stats are observed in the
+    * write's result stage (`observe` after the rebalance exchange), the
+    * task-side analogue of commit messages. Only successful task
+    * attempts count, so a retried write task is counted once, and the
+    * rows are computed once — no persist and no second pass over them.
     *
     * Layout: the write clusters rows by bucket (a rebalance exchange),
     * so each bucket is written by one task — one file — unless it
     * exceeds the adaptive advisory partition size, when AQE splits it
     * over several tasks (files) rather than putting a whole bucket of a
-    * large table in one task. The exchange sits between the persist
-    * and the write, not inside the persisted plan: a cached plan runs
-    * without AQE (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
-    * defaults to false), where a rebalance is a fixed hash exchange
-    * that never splits a bucket. */
+    * large table in one task. */
   private def commitBuckets(fs: FileSystem, root: Path, rows: DataFrame,
-      buckets: Seq[Int], attemptId: String, failAfterBuckets: Option[Int],
+      numBuckets: Int, buckets: Seq[Int], attemptId: String,
+      failAfterBuckets: Option[Int],
       snapshot: (Int, Seq[Int]) => String): Seq[BucketManifest] = {
-    // persisted: the parquet write and the lineage-stats aggregation both
-    // consume this frame — without the persist the upstream correction
-    // job (and its accumulators) would run twice, double-counting metrics
-    val persisted = rows
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val attemptDir = freshAttemptDir(fs, root, attemptId)
-    // per-bucket lineage stats (second pass over the persisted rows; at
-    // real cluster scale these come from task-side commit messages instead)
-    val stats =
-      try {
-        persisted.hint("rebalance", col("bucket")).write.mode(SaveMode.ErrorIfExists)
-          .partitionBy("bucket").parquet(attemptDir.toString)
-        bucketStats(persisted, attemptId)
-      } finally persisted.unpersist(blocking = false)
+    val observed = Observation("tableio_bucket_stats")
+    rows.hint("rebalance", col("bucket"))
+      .observe(observed, udaf(new BucketStatsAgg(numBuckets), Encoders.product[StatsIn])(
+        col("bucket"), col("doc_id"), size(col("spans")),
+        xxhash64(col("doc_id"), to_json(col("spans")))).as("stats"))
+      .write.mode(SaveMode.ErrorIfExists)
+      .partitionBy("bucket").parquet(attemptDir.toString)
+    // empty when the write ran no task over a row (an empty input)
+    val stats = observed.get.get("stats").map { v =>
+      val r = v.asInstanceOf[Row]
+      StatsBuf(r.getSeq[Long](0).toArray, r.getSeq[Long](1).toArray,
+        r.getSeq[String](2).toArray, r.getSeq[String](3).toArray,
+        r.getSeq[Long](4).toArray)
+    }
+    def manifest(b: Int): BucketManifest = stats match {
+      case Some(s) if s.docs(b) > 0 => BucketManifest(b, s.docs(b), s.spans(b),
+        s.minIds(b), s.maxIds(b), s.xors(b), attemptId)
+      case _ => BucketManifest(b, 0L, 0L, "", "", 0L, attemptId)
+    }
 
     // the manifest records the ABSOLUTE file list; data files stay where
     // the tasks wrote them — the manifest CREATE is the commit. One
@@ -179,10 +190,14 @@ object TableIO {
     val files = fs.listStatus(bucketDirs).toSeq.map(_.getPath)
       .filter(_.getName.startsWith("part-"))
       .groupMap(_.getParent.getName.stripPrefix("bucket=").toInt)(_.toString)
+    // a bucket gets a data file only from a row, so a file without an
+    // observed row means the stats were lost: fail before any commit
+    val unobserved = files.keys.filter(manifest(_).numDocs == 0)
+    if (unobserved.nonEmpty) throw new IllegalStateException(
+      s"buckets ${unobserved.toSeq.sorted.mkString(",")} have data files but no observed rows")
     val committed = scala.collection.mutable.ArrayBuffer.empty[BucketManifest]
     for (b <- buckets) {
-      val m = stats.getOrElse(b, BucketManifest(b, 0L, 0L, "", "", 0L, attemptId))
-        .copy(files = files.getOrElse(b, Nil).sorted)
+      val m = manifest(b).copy(files = files.getOrElse(b, Nil).sorted)
       publishString(fs, new Path(manifestDir(root), s"bucket-$b.json"),
         manifestJson(m))
       committed += m
@@ -200,20 +215,72 @@ object TableIO {
     committed.toSeq
   }
 
-  /** Per-bucket lineage stats over a bucketed Doc frame. */
-  private def bucketStats(withBucket: DataFrame,
-      attemptId: String): Map[Int, BucketManifest] =
-    withBucket
-      .select(col("bucket"), col("doc_id"), size(col("spans")).as("ns"),
-        xxhash64(col("doc_id"), to_json(col("spans"))).as("h"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("numDocs"), sum(col("ns")).as("numSpans"),
-        min(col("doc_id")).as("minId"), max(col("doc_id")).as("maxId"),
-        expr("bit_xor(h)").as("checksum"))
-      .collect()
-      .map(r => r.getInt(0) -> BucketManifest(r.getInt(0), r.getLong(1),
-        r.getLong(2), r.getString(3), r.getString(4), r.getLong(5), attemptId))
-      .toMap
+  /** One row of [[BucketStatsAgg]]: a doc's bucket, id, span count and
+    * row hash. */
+  private[pipeline] final case class StatsIn(bucket: Int, docId: String,
+      numSpans: Int, hash: Long)
+  /** Per-bucket lineage stats, slot b for bucket b: doc count, span sum,
+    * min and max doc_id (null while the bucket has no id) and the
+    * `bit_xor` of the row hashes. */
+  private[pipeline] final case class StatsBuf(docs: Array[Long],
+      spans: Array[Long], minIds: Array[String], maxIds: Array[String],
+      xors: Array[Long])
+
+  /** The five per-bucket stats of `numBuckets` buckets as one typed
+    * aggregate: one array slot per bucket instead of five conditional
+    * aggregates per bucket, each evaluated on every row. Ids are ordered
+    * like Spark's `min`/`max` on strings. */
+  private[pipeline] final class BucketStatsAgg(numBuckets: Int)
+      extends Aggregator[StatsIn, StatsBuf, StatsBuf] {
+    def zero: StatsBuf = StatsBuf(new Array[Long](numBuckets),
+      new Array[Long](numBuckets), new Array[String](numBuckets),
+      new Array[String](numBuckets), new Array[Long](numBuckets))
+    def reduce(s: StatsBuf, r: StatsIn): StatsBuf = {
+      val b = r.bucket
+      s.docs(b) += 1
+      s.spans(b) += r.numSpans
+      s.xors(b) ^= r.hash
+      s.minIds(b) = minId(s.minIds(b), r.docId)
+      s.maxIds(b) = maxId(s.maxIds(b), r.docId)
+      s
+    }
+    def merge(s: StatsBuf, t: StatsBuf): StatsBuf = {
+      var b = 0
+      while (b < numBuckets) {
+        s.docs(b) += t.docs(b)
+        s.spans(b) += t.spans(b)
+        s.xors(b) ^= t.xors(b)
+        s.minIds(b) = minId(s.minIds(b), t.minIds(b))
+        s.maxIds(b) = maxId(s.maxIds(b), t.maxIds(b))
+        b += 1
+      }
+      s
+    }
+    def finish(s: StatsBuf): StatsBuf = s
+    def bufferEncoder: Encoder[StatsBuf] = Encoders.product[StatsBuf]
+    def outputEncoder: Encoder[StatsBuf] = Encoders.product[StatsBuf]
+  }
+
+  private def minId(x: String, y: String): String =
+    if (x == null || (y != null && compareCodePoints(y, x) < 0)) y else x
+  private def maxId(x: String, y: String): String =
+    if (x == null || (y != null && compareCodePoints(y, x) > 0)) y else x
+
+  /** Spark's string order: UTF-8 bytes, which is code-point order.
+    * `String.compareTo` compares UTF-16 units, which put U+E000–U+FFFF
+    * above the supplementary characters. */
+  private def compareCodePoints(x: String, y: String): Int = {
+    var i = 0
+    var j = 0
+    while (i < x.length && j < y.length) {
+      val cx = x.codePointAt(i)
+      val cy = y.codePointAt(j)
+      if (cx != cy) return Integer.compare(cx, cy)
+      i += Character.charCount(cx)
+      j += Character.charCount(cy)
+    }
+    Integer.compare(x.length - i, y.length - j)
+  }
 
   /** Copy-on-write MERGE — the Iceberg `MERGE INTO` (COW strategy)
     * analogue: upsert `updates` into the committed table by doc_id.
@@ -234,9 +301,10 @@ object TableIO {
     * files (manifest-driven pruning — an update touching 3 of 4096
     * buckets scans 3 buckets of a 100-TB table); both sides carry the
     * same xxhash64(doc_id) % buckets key so the anti-join
-    * co-partitions; lineage stats ride one pass over the persisted
-    * merged frame, exactly like writeDocs. `updates` must carry
-    * unique doc_ids (the MERGE contract). */
+    * co-partitions; lineage stats are observed in the one write job,
+    * exactly like writeDocs. The keyed updates stay persisted: the
+    * affected-bucket collect and the merge both consume them.
+    * `updates` must carry unique doc_ids (the MERGE contract). */
   def mergeDocs(updates: Dataset[Doc], path: String, buckets: Int = 32,
       attemptId: String = "merge-0"): Seq[BucketManifest] = {
     val spark = updates.sparkSession
@@ -258,7 +326,7 @@ object TableIO {
     val merged = up
       .unionByName(existing.join(up.select($"doc_id"), Seq("doc_id"), "left_anti")
         .select(up.columns.map(col).toSeq: _*))
-    try commitBuckets(fs, root, merged, affected.toSeq, attemptId, None,
+    try commitBuckets(fs, root, merged, buckets, affected.toSeq, attemptId, None,
       (snapN, all) => s"""{"snapshot":$snapN,"attempt":"$attemptId","merge":true,""" +
         s""""rewrittenBuckets":[${affected.mkString(",")}],""" +
         s""""buckets":[${all.mkString(",")}]}""")
@@ -308,23 +376,28 @@ object TableIO {
     * (failed-attempt orphans). Returns the deleted paths. NOT called
     * automatically: against a live concurrent writer this is the table
     * owner's maintenance decision, exactly like Iceberg's
-    * remove_orphan_files. */
+    * remove_orphan_files. Lists one directory level per multi-path
+    * `listStatus` (attempt dirs, then bucket dirs, then files), not
+    * through a recursive `listFiles`, for the reason given in
+    * [[commitBuckets]]. */
   def vacuum(path: String, conf: Configuration = null): Seq[String] = {
     val c = Option(conf).getOrElse(defaultConf())
     val (fs, root) = fsFor(c, path)
     val dd = dataDir(root)
     if (!fs.exists(dd)) return Seq.empty
     val referenced = readManifests(path, c).flatMap(_.files).toSet
-    val it = fs.listFiles(dd, true)
     val deleted = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      val p = st.getPath.toString
-      if (st.isFile && st.getPath.getName.startsWith("part-")
-          && !referenced.contains(p)) {
-        fs.delete(st.getPath, false)
-        deleted += p
+    var level = Array(dd)
+    while (level.nonEmpty) {
+      val (dirs, files) = fs.listStatus(level).partition(_.isDirectory)
+      for (st <- files) {
+        val p = st.getPath.toString
+        if (st.getPath.getName.startsWith("part-") && !referenced.contains(p)) {
+          fs.delete(st.getPath, false)
+          deleted += p
+        }
       }
+      level = dirs.map(_.getPath)
     }
     deleted.toSeq
   }

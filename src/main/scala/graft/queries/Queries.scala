@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.align.Distance
+import graft.align.{Aligner, Distance}
 import graft.correct.{CompiledModel, Corrector}
 import graft.pipeline.{CorrectionJob, DocGen}
 import graft.tokenize.Tokenizer
@@ -527,13 +527,16 @@ object Queries {
     CorrectionJob.mapWithModel(pairs, bc) {
       (m, cache) => { case (ocr, gt) =>
         val cor = Corrector.correctLine(ocr, m, cache)
-        val (dOcr, lOcr) = Distance.adjustedDistance(ocr, gt)
-        val (dCor, lCor) = Distance.adjustedDistance(cor, gt)
-        val (tp, tn, fp, fn) = Distance.precisionRecall(ocr, cor, gt)
+        // each pair aligned once, for both the adjusted distance and
+        // precision/recall
+        val alOcr = Aligner.align(ocr, gt)
+        val alCor = Aligner.align(cor, gt)
+        val (tp, tn, fp, fn) = Distance.precisionRecall(alOcr, alCor)
+        val lenGt = gt.codePointCount(0, gt.length).toLong
         (Distance.levenshtein(ocr, gt).toLong,
-          Distance.levenshtein(cor, gt).toLong,
-          gt.codePointCount(0, gt.length).toLong,
-          dOcr, lOcr.toLong, dCor, lCor.toLong, tp, tn, fp, fn)
+          Distance.levenshtein(cor, gt).toLong, lenGt,
+          Distance.adjustedDistance(alOcr), lenGt,
+          Distance.adjustedDistance(alCor), lenGt, tp, tn, fp, fn)
       }
     }
       .toDF("lev_ocr", "lev_cor", "len_gt", "adj_ocr", "alen_ocr",

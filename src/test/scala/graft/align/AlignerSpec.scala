@@ -45,6 +45,29 @@ class AlignerSpec extends AnyFunSuite {
     }
   }
 
+  test("quick_ratio equals difflib's multiset count on random pairs (repeats, empty, surrogate pairs)") {
+    // difflib.quick_ratio's own loop: each char of a takes one of b's
+    // remaining copies
+    def difflibQuickRatio(a: Array[Int], b: Array[Int]): Double = {
+      val avail = scala.collection.mutable.HashMap.empty[Int, Int]
+      b.foreach(c => avail(c) = avail.getOrElse(c, 0) + 1)
+      var matches = 0
+      a.foreach { c =>
+        val n = avail.getOrElse(c, 0)
+        if (n > 0) { matches += 1; avail(c) = n - 1 }
+      }
+      val length = a.length + b.length
+      if (length == 0) 1.0 else 2.0 * matches / length
+    }
+    val alphabet = Seq("a", "b", "e", "ſ", "\u0364", "\uFFFD", "\uD83D\uDE00", " ")
+    val rnd = new scala.util.Random(17)
+    def draw(): String = Seq.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.size))).mkString
+    for (_ <- 0 until 500) {
+      val (a, b) = (draw(), draw())
+      assert(Aligner.quickRatio(a, b) == difflibQuickRatio(Aligner.cps(a), Aligner.cps(b)), s"<$a> <$b>")
+    }
+  }
+
   test("alignment projections reproduce the inputs (gap-free)") {
     for ((a, b, _, _, _) <- cases) {
       val al = Aligner.align(a, b)

@@ -3,7 +3,10 @@ package graft.pipeline
 import graft.Fixtures
 import graft.correct.{CompiledModel, Corrector}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+import org.scalatest.concurrent.TimeLimits.failAfter
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span => TimeSpan}
 
 /** Spark end-to-end per SURVEY.md §5.4: synthesized interleaved Doc
   * table, full job on local[*], span-sequence equality invariant,
@@ -148,9 +151,10 @@ class PipelineSpec extends AnyFunSuite {
       java.nio.file.Paths.get(p3, "_snapshot-0.json"))
     assert(snap.contains("\"metrics\""))
     assert(snap.contains("\"textSpans\""))
-    // exact VALUES, not just keys: writeDocs persists its input before the
-    // parquet write + stats scans, so the accumulators count each doc ONCE
-    // (an unpersisted input would recompute the correction and double-count)
+    // exact VALUES, not just keys: the commit is one job (the lineage
+    // stats are observed in the write, not read by a second pass over the
+    // rows), so the correction runs once and the accumulators count each
+    // doc ONCE
     assert(mx.docs.value == 60L, s"docs accumulator = ${mx.docs.value}")
     val totalSpans = docs.collect().map(_.spans.length.toLong).sum
     assert(mx.textSpans.value + mx.mediaSpans.value == totalSpans,
@@ -306,6 +310,68 @@ class PipelineSpec extends AnyFunSuite {
     assert(key(split) == key(one))
     assert(TableIO.readDocs(spark, s"$base/split").collect().sortBy(_.doc_id).toSeq ==
       TableIO.readDocs(spark, s"$base/one").collect().sortBy(_.doc_id).toSeq)
+  }
+
+  test("commit stats: doc ids ordered by code point like Spark's min/max (U+FFFD and U+1F600 in one bucket)") {
+    import spark.implicits._
+    val p = s"${Files.createTempDirectory("graft-io-order")}/t"
+    // UTF-16 order puts the surrogate pair of U+1F600 below U+E000 and
+    // U+FFFD; code-point (UTF-8 byte) order puts it above them
+    val ids = Seq("\uFFFD", "\uD83D\uDE00", "\uFFFDa", "\uD83D\uDE00b", "\uE000")
+    val docs = ids.map(id => Doc(id, Seq(Span("text", id, null, 0)))).toDS()
+    val ms = TableIO.writeDocs(docs, p, buckets = 1)
+    assert(ms.map(TableIOStats.of) == Seq(TableIOStats.reference(docs, 1)(0)))
+    assert(ms.head.minDocId == "\uE000" && ms.head.maxDocId == "\uD83D\uDE00b",
+      (ms.head.minDocId, ms.head.maxDocId))
+  }
+
+  test("commit stats: an empty write and a sparse write commit zero-stat manifests for empty buckets") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-io-sparse").toString
+    implicit val signaler: Signaler = ThreadSignaler
+    failAfter(TimeSpan(120, Seconds)) { // the stats must not wait for a task that never ran
+      val empty = TableIO.writeDocs(spark.emptyDataset[Doc], s"$base/empty", buckets = 4)
+      assert(empty.map(m => (m.bucket, TableIOStats.of(m), m.files)) ==
+        (0 until 4).map(b => (b, TableIOStats.Zero, Nil)))
+      assert(TableIO.readDocs(spark, s"$base/empty").count() == 0L)
+
+      val docs = DocGen.docs(spark, 5, seed = 11L, partitions = 2)
+      val sparse = TableIO.writeDocs(docs, s"$base/sparse", buckets = 16)
+      val ref = TableIOStats.reference(docs, 16)
+      assert(ref.size < 16)
+      assert(sparse.map(m => m.bucket -> TableIOStats.of(m)) ==
+        (0 until 16).map(b => b -> ref.getOrElse(b, TableIOStats.Zero)))
+      assert(sparse.forall(m => m.files.size == (if (ref.contains(m.bucket)) 1 else 0)),
+        sparse.map(_.files))
+      assert(TableIO.readDocs(spark, s"$base/sparse").collect().sortBy(_.doc_id).toSeq ==
+        docs.collect().sortBy(_.doc_id).toSeq)
+    }
+  }
+
+  test("vacuum: deletes exactly the unreferenced part- files among several hundred orphans") {
+    val p = s"${Files.createTempDirectory("graft-io-vacuum")}/t"
+    val docs = DocGen.docs(spark, 60, seed = 3L, partitions = 4)
+    val ms = TableIO.writeDocs(docs, p, buckets = 8)
+    val before = TableIO.readDocs(spark, p).collect().sortBy(_.doc_id).toSeq
+    def local(uri: String) = java.nio.file.Paths.get(new java.net.URI(uri))
+    val committedAttempt = local(ms.head.files.head).getParent.getParent
+    // 300 orphans beside the committed files, 200 in an attempt no
+    // manifest names, each with a non-part file vacuum must leave alone
+    val (orphans, kept) = (0 until 500).map { k =>
+      val attempt =
+        if (k < 300) committedAttempt
+        else java.nio.file.Paths.get(p, "data", "attempt-9-0")
+      val dir = java.nio.file.Files.createDirectories(attempt.resolve(s"bucket=${k % 8}"))
+      (java.nio.file.Files.writeString(dir.resolve(f"part-$k%05d-orphan.parquet"), ""),
+        java.nio.file.Files.writeString(dir.resolve(s"_keep-$k"), ""))
+    }.unzip
+    val deleted = TableIO.vacuum(p)
+    assert(deleted.map(local(_).toString).sorted == orphans.map(_.toString).sorted)
+    assert(orphans.forall(!java.nio.file.Files.exists(_)))
+    assert(kept.forall(java.nio.file.Files.exists(_)))
+    assert(partFilesPerBucket(p).values.sum == 8)
+    assert(TableIO.readDocs(spark, p).collect().sortBy(_.doc_id).toSeq == before)
+    assert(TableIO.vacuum(p).isEmpty)
   }
 
   test("extraction pipeline e2e: boilerplate strip -> correct -> commit -> read back") {
