@@ -1,7 +1,8 @@
 package graft.correct
 
 import graft.tokenize.Tokenizer
-import graft.train.{ErrorModelTrainer, Lexicon, LexiconBuilder}
+import graft.train.{Category, ErrorModelST, ErrorModelTrainer, Lexicon,
+  LexiconBuilder}
 import graft.wfst.Wfst
 import scala.collection.mutable
 
@@ -79,9 +80,62 @@ object CompiledModel {
     w.arcSort
   }
 
-  /** Driver-side compile from training pairs + optional wordlist —
-    * the full train-then-load path (scripts/train.py + FSTLatticeGenerator
-    * init, lib/latticegen.py:198-212). */
+  /** Per-pair training emissions — the ONE definition both training
+    * folds count, so trainSpark == train by construction (the shape of
+    * CharNgramLm.lineKeys): the (0, category, token) lexicon rows of the
+    * GT line (C2, lib/lexicon.py:105-139) and, `withConfusion`, the
+    * (n, raw, gt) confusion n-grams of the aligned pair (D1,
+    * lib/error_simp.py:52-102; n >= 1, a key space disjoint from the
+    * lexicon's n = 0). */
+  private def pairEmissions(ocr: String, gt: String, maxContext: Int,
+      withConfusion: Boolean): Seq[((Int, String, String), Long)] = {
+    val lex = LexiconBuilder.lineEmissions(gt)
+      .map { case (c, t, f) => ((0, c, t), f) }
+    if (!withConfusion) lex
+    else lex ++ ErrorModelTrainer.confusionEmissions(ocr, gt, maxContext)
+      .map { case (n, r, g) => ((n, r, g), 1L) }
+  }
+
+  /** The ONE model build of both training folds, from the summed
+    * [[pairEmissions]] counts (scripts/train.py + FSTLatticeGenerator
+    * init, lib/latticegen.py:198-212): the lexicon split by category
+    * with the wordlist merged in verbatim (lib/lexicon.py:144-147) ->
+    * lexiconToFst; the error model is `errorFst` when given (the ST
+    * model) or else the n = 1..maxContext confusion dicts ->
+    * compileSingle each -> combineErrorTransducers
+    * (scripts/train.py:155-183). The counts are taken as they come,
+    * not sorted: the FST compiles number states in map iteration order. */
+  private def build(counts: Array[((Int, String, String), Long)],
+      wordlist: Map[String, Long], errorFst: Option[Wfst],
+      maxContext: Int, maxErrors: Int, wordsPerWindow: Int,
+      pruningWeight: Double, rejectionWeight: Double,
+      preservePunct: Boolean, addedWordCost: Double,
+      unweightedLexicon: Boolean): CompiledModel = {
+    val lexRows = counts.collect { case ((0, c, t), f) => (c, t, f) } ++
+      wordlist.map { case (w, f) => (Category.Words, w, f) }
+    def cat(c: String): Map[String, Long] =
+      lexRows.filter(_._1 == c).groupBy(_._2)
+        .map { case (t, rows) => t -> rows.map(_._3).sum }
+    val lexicon = Lexicon(cat(Category.OpeningBracket),
+      cat(Category.ClosingBracket), cat(Category.Punctuation),
+      cat(Category.Words))
+    val lexFst =
+      LexiconBuilder.lexiconToFst(lexicon, addedWordCost, unweightedLexicon)
+    val err = errorFst.getOrElse {
+      val singles = (1 to maxContext).map { n =>
+        ErrorModelTrainer.compileSingle(
+          counts.collect { case ((`n`, r, g), c) => ((r, g), c) }.toMap,
+          preservePunct)
+      }
+      ErrorModelTrainer.combineErrorTransducers(singles, maxErrors)
+    }
+    fromFsts(lexFst, Some(err), wordsPerWindow, pruningWeight,
+      rejectionWeight)
+  }
+
+  /** Driver-side training from (ocr, gt) pairs + optional wordlist: the
+    * local fold of [[pairEmissions]] into one count map, then [[build]]
+    * — the same emissions and the same build as [[trainSpark]]. */
   def train(pairs: Iterable[(String, String)],
       wordlist: Map[String, Long] = Map.empty,
       maxContext: Int = 3, maxErrors: Int = 3,
@@ -89,13 +143,15 @@ object CompiledModel {
       pruningWeight: Double = 5.0,
       rejectionWeight: Double = 1.5,
       preservePunct: Boolean = false): CompiledModel = {
-    val gtLines = pairs.map(_._2)
-    val lexicon = LexiconBuilder.buildLexicon(gtLines, wordlist)
-    val lexFst = LexiconBuilder.lexiconToFst(lexicon)
-    val errorFst = ErrorModelTrainer.trainSimple(pairs, maxContext, maxErrors,
-      preservePunct)
-    fromFsts(lexFst, Some(errorFst), wordsPerWindow, pruningWeight,
-      rejectionWeight)
+    val counts = mutable.HashMap.empty[(Int, String, String), Long]
+    pairs.foreach { case (ocr, gt) =>
+      pairEmissions(ocr, gt, maxContext, withConfusion = true).foreach {
+        case (k, f) => counts(k) = counts.getOrElse(k, 0L) + f
+      }
+    }
+    build(counts.toArray, wordlist, None, maxContext, maxErrors,
+      wordsPerWindow, pruningWeight, rejectionWeight, preservePunct,
+      addedWordCost = 0.0, unweightedLexicon = false)
   }
 
   def fromFsts(lexiconFst: Wfst, errorFst: Option[Wfst],
@@ -106,11 +162,13 @@ object CompiledModel {
       pruningWeight, rejectionWeight, 2, wordsPerWindow,
       lexiconFst = Some(lexiconFst.arcSort))
 
-  /** Distributed training: the counting passes (lexicon C2, confusion
-    * D1) run as Spark hash aggregations over the full pair table; only
-    * the AGGREGATED dicts (bounded: vocabulary / confusion-type sized)
-    * are collected for the driver-side FST compile — the shape that
-    * holds at 100 TB (SURVEY.md §3.2). */
+  /** Distributed training: the distributed fold of [[pairEmissions]] —
+    * lexicon (C2) and confusion (D1) counts in ONE hash aggregation over
+    * the full pair table — then the same [[build]] as [[train]]. Only
+    * the aggregated counts (vocabulary / confusion-type sized) reach the
+    * driver, the shape that holds at 100 TB (SURVEY.md §3.2). The "st"
+    * error model (train.py -T st) needs no confusion counts: it is fit
+    * by ErrorModelST.trainSt. */
   def trainSpark(spark: org.apache.spark.sql.SparkSession,
       pairs: org.apache.spark.sql.Dataset[(String, String)],
       wordlist: Map[String, Long] = Map.empty,
@@ -123,60 +181,20 @@ object CompiledModel {
       addedWordCost: Double = 0.0, // lexicon_to_fst added_word_cost
       unweightedLexicon: Boolean = false): CompiledModel = {
     import spark.implicits._
-    // C2 + D1 in ONE distributed pass (round 6): the lexicon counts
-    // (tag n = 0) and the confusion n-gram counts (n >= 1 — disjoint
-    // key space by construction) share a single flatMap + typed
-    // reduce job. The aggregates are identical to the previous
-    // two-job formulation (sum of freqs / count = sum of 1s); what
-    // the merge removes is a whole extra first-queries-of-the-session
-    // job — cold-start measurement put the second job at ~1 s of pure
-    // scheduling/codegen overhead on the battery's largest entry. For
-    // the "st" error model the confusion alignments are not needed,
-    // so that branch keeps the lexicon-only pass.
-    def collectCounts(withConfusion: Boolean)
-        : Array[((Int, String, String), Long)] =
-      pairs.flatMap { case (ocr, gt) =>
-        val lex = LexiconBuilder.lineEmissions(gt)
-          .map { case (c, t, f) => ((0, c, t), f) }
-        if (!withConfusion) lex
-        else lex ++ ErrorModelTrainer.confusionEmissions(ocr, gt, maxContext)
-          .map { case (n, r, g) => ((n, r, g), 1L) }
+    val st = errorModelType == "st"
+    val counts = pairs
+      .flatMap { case (ocr, gt) =>
+        pairEmissions(ocr, gt, maxContext, withConfusion = !st)
       }
-        .groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
-        .collect()
-    val counts = collectCounts(withConfusion = errorModelType != "st")
-    val lexRows = counts.collect { case ((0, c, t), f) => (c, t, f) }
-    val withWordlist = lexRows ++
-      wordlist.map { case (w, f) => (graft.train.Category.Words, w, f) }
-    def cat(c: String): Map[String, Long] =
-      withWordlist.filter(_._1 == c).groupBy(_._2)
-        .map { case (t, rows) => t -> rows.map(_._3).sum }
-    val lexicon = Lexicon(cat(graft.train.Category.OpeningBracket),
-      cat(graft.train.Category.ClosingBracket),
-      cat(graft.train.Category.Punctuation), cat(graft.train.Category.Words))
-    val lexFst =
-      LexiconBuilder.lexiconToFst(lexicon, addedWordCost, unweightedLexicon)
-    val errorFst = errorModelType match {
-      case "st" =>
-        // E-rows: EM-fit stochastic transducer (train.py -T st)
-        val st = graft.train.ErrorModelST.fitSpark(spark, pairs,
-          maxN = maxContext, maxNgrams = 1000)
-        val mappings = graft.train.ErrorModelST.matrixToMappings(
-          st.probs, st.ngrams, weightThreshold = 5.0)
-        graft.train.ErrorModelST.compileTransducer(
-          mappings, st.ngrProbs, maxErrors, maxContext)
-      case _ =>
-        // D1: confusion n-gram counts from the shared pass
-        val byN: Map[Int, Map[(String, String), Long]] =
-          (1 to maxContext).map { n =>
-            n -> counts.collect { case ((`n`, r, g), c) => ((r, g), c) }.toMap
-          }.toMap
-        val singles = (1 to maxContext).map(n =>
-          ErrorModelTrainer.compileSingle(byN(n), preservePunct))
-        ErrorModelTrainer.combineErrorTransducers(singles, maxErrors)
-    }
-    fromFsts(lexFst, Some(errorFst), wordsPerWindow, pruningWeight,
-      rejectionWeight)
+      .groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
+      .collect()
+    val stFst =
+      if (st) Some(ErrorModelST.trainSt(spark, pairs, maxN = maxContext,
+        maxNgrams = 1000, maxErrors = maxErrors)._2)
+      else None
+    build(counts, wordlist, stFst, maxContext, maxErrors, wordsPerWindow,
+      pruningWeight, rejectionWeight, preservePunct, addedWordCost,
+      unweightedLexicon)
   }
 }
 

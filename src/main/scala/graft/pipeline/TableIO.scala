@@ -132,7 +132,8 @@ object TableIO {
             s""""mediaSpans":${m.mediaSpans.value},"spansChanged":${m.spansChanged.value},""" +
             s""""chars":${m.chars.value}}"""
         }.getOrElse("")
-        s"""{"snapshot":$snapN,"attempt":"$attemptId","buckets":[${all.mkString(",")}]$metricsJson}"""
+        s"""{"snapshot":$snapN,"attempt":${jsonString(attemptId)},""" +
+          s""""buckets":[${all.mkString(",")}]$metricsJson}"""
       })
   }
 
@@ -327,7 +328,7 @@ object TableIO {
       .unionByName(existing.join(up.select($"doc_id"), Seq("doc_id"), "left_anti")
         .select(up.columns.map(col).toSeq: _*))
     try commitBuckets(fs, root, merged, buckets, affected.toSeq, attemptId, None,
-      (snapN, all) => s"""{"snapshot":$snapN,"attempt":"$attemptId","merge":true,""" +
+      (snapN, all) => s"""{"snapshot":$snapN,"attempt":${jsonString(attemptId)},"merge":true,""" +
         s""""rewrittenBuckets":[${affected.mkString(",")}],""" +
         s""""buckets":[${all.mkString(",")}]}""")
     finally up.unpersist(blocking = false)
@@ -339,7 +340,6 @@ object TableIO {
     val (fs, root) = fsFor(Option(conf).getOrElse(defaultConf()), path)
     val dir = manifestDir(root)
     if (!fs.exists(dir)) return Seq.empty
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     fs.listStatus(dir).iterator
       .filter { st =>
         val n = st.getPath.getName
@@ -348,7 +348,7 @@ object TableIO {
       .map { st =>
         val in = fs.open(st.getPath)
         val node =
-          try mapper.readTree(in)
+          try Json.readTree(in)
           finally in.close()
         import scala.jdk.CollectionConverters._
         BucketManifest(
@@ -402,11 +402,18 @@ object TableIO {
     deleted.toSeq
   }
 
+  /** The one JSON mapper of manifests and snapshots (Jackson rides in
+    * with Spark): every string they hold — doc ids, attempt ids, file
+    * paths — is written by it and read back by it. */
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** `s` as a quoted JSON string literal. */
+  private def jsonString(s: String): String = Json.writeValueAsString(s)
+
   private def manifestJson(m: BucketManifest): String = {
-    val files = m.files.map(f => "\"" + f.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\"").mkString("[", ",", "]")
+    val files = m.files.map(jsonString).mkString("[", ",", "]")
     s"""{"bucket":${m.bucket},"numDocs":${m.numDocs},"numSpans":${m.numSpans},""" +
-      s""""minDocId":"${m.minDocId}","maxDocId":"${m.maxDocId}",""" +
-      s""""checksum":${m.checksum},"attemptId":"${m.attemptId}","files":$files}"""
+      s""""minDocId":${jsonString(m.minDocId)},"maxDocId":${jsonString(m.maxDocId)},""" +
+      s""""checksum":${m.checksum},"attemptId":${jsonString(m.attemptId)},"files":$files}"""
   }
 }

@@ -127,9 +127,14 @@ object Queries {
   }
   def releaseCaches(): Unit = {
     val it = persistedCaches.iterator()
-    // blocking: the bench protocol times the NEXT rep immediately after
-    // this call — async eviction would overlap its measured window
-    while (it.hasNext) { it.next().unpersist(blocking = true); it.remove() }
+    while (it.hasNext) {
+      val df = it.next()
+      it.remove()
+      // a stopped context has freed its blocks and cannot unpersist.
+      // blocking: the bench protocol times the NEXT rep immediately
+      // after this call — async eviction would overlap its measured window
+      if (!df.sparkSession.sparkContext.isStopped) df.unpersist(blocking = true)
+    }
     inputBytesCache.clear()
   }
 

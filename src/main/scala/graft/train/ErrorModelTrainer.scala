@@ -50,20 +50,6 @@ object ErrorModelTrainer {
     sb.result()
   }
 
-  /** Driver-side get_confusion_dicts over line pairs: counts per n. */
-  def confusionCounts(pairs: Iterable[(String, String)],
-      maxN: Int): Map[Int, Map[(String, String), Long]] = {
-    val m = mutable.HashMap.empty[(Int, String, String), Long]
-    pairs.foreach { case (raw, gt) =>
-      confusionEmissions(raw, gt, maxN).foreach { k =>
-        m(k) = m.getOrElse(k, 0L) + 1L
-      }
-    }
-    (1 to maxN).map { n =>
-      n -> m.collect { case ((`n`, r, g), c) => ((r, g), c) }.toMap
-    }.toMap
-  }
-
   /** preprocess_confusion_dict (lib/error_simp.py:107-156): relative
     * frequency per input ngram, with the ε-to-ε count fix-up. */
   def preprocessConfusions(
@@ -159,16 +145,5 @@ object ErrorModelTrainer {
       // vocabulary sizes (measured 204M arcs on the sf0.1 confusions —
       // every chain leaf's eps-closure copies every hub's fan-out)
       .concat(Wfst.sigmaStar).arcSort
-  }
-
-  /** End-to-end simple-model training from line pairs
-    * (scripts/train.py:155-183). `pairs` are (ocr, gt). */
-  def trainSimple(pairs: Iterable[(String, String)], maxContext: Int = 3,
-      maxErrors: Int = 3, preservePunct: Boolean = false): Wfst = {
-    val dicts = confusionCounts(pairs, maxContext)
-    val singles = (1 to maxContext).map { n =>
-      compileSingle(dicts(n), preservePunct)
-    }
-    combineErrorTransducers(singles, maxErrors)
   }
 }

@@ -2,7 +2,6 @@ package graft.train
 
 import graft.tokenize.Tokenizer
 import graft.wfst.Wfst
-import scala.collection.mutable
 import scala.util.matching.Regex
 
 /** Token category (the four count dicts of lib/lexicon.py:19-21). */
@@ -81,25 +80,6 @@ object LexiconBuilder {
   def lineEmissions(line: String): Seq[(String, String, Long)] =
     if (line.codePointCount(0, line.length) < MinLineLength) Seq.empty
     else Tokenizer.tokenize(line).flatMap(classify(_))
-
-  /** Driver-side build_lexicon (lib/lexicon.py:67-149); `wordlist` is the
-    * optional type->freq dict merged in verbatim (:144-147). */
-  def buildLexicon(lines: Iterable[String],
-      wordlist: Map[String, Long] = Map.empty): Lexicon = {
-    val counts = mutable.HashMap.empty[(String, String), Long]
-    lines.foreach { line =>
-      lineEmissions(line).foreach { case (c, t, f) =>
-        counts((c, t)) = counts.getOrElse((c, t), 0L) + f
-      }
-    }
-    wordlist.foreach { case (w, f) =>
-      counts((Category.Words, w)) = counts.getOrElse((Category.Words, w), 0L) + f
-    }
-    def cat(c: String): Map[String, Long] =
-      counts.collect { case ((`c`, t), f) => (t, f) }.toMap
-    Lexicon(cat(Category.OpeningBracket), cat(Category.ClosingBracket),
-      cat(Category.Punctuation), cat(Category.Words))
-  }
 
   /** convert_to_log_relative_freq (lib/helper.py:117-136): total over ALL
     * counts first, prune (abs<=3 && rel<threshold), weight -ln(rel). */

@@ -150,7 +150,7 @@ object PlanDump extends App {
     "HITS hubs/authorities: persisted edge list feeds every round; each half-step is ONE node-sized join + ONE hash agg; the L-inf normalizer is a 1-row max broadcast IN-PLAN; each half-step table persists (two consumers) so lineage never re-derives earlier rounds (2^rounds blowup without it — measured 77s -> 18s at sf0.01).")
   dump("q_winnow", graft.queries.Queries.qWinnow(spark, sf),
     "Winnowing fingerprints: pure per-row pipeline (gram hash -> zip_with min-tree -> distinct -> xor checksum) with the gram-hash array LET-BOUND via single-element transform (a lambda variable evaluates once; inlined references re-evaluate per use — measured 109s vs 3.6s at sf0.1) and the result struct emitted through inline(); the only Exchange is the presentation sort.")
-  Files.writeString(Paths.get("/root/repo/PLANS.md"),
+  Files.writeString(Paths.get("PLANS.md"),
     "# PLANS — physical plans of the headline jobs (sf0.001, local[8], AQE on)\n\n" +
     "Generated by `Test/runMain PlanDump`. Annotations state the intended\nplan shape; QueriesSpec asserts the critical properties (pruned\nReadSchema, PushedFilters, broadcast join, codegen residency).\n\n" + sb.result())
   println("written PLANS.md")

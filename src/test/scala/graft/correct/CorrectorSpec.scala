@@ -127,11 +127,12 @@ class CorrectorSpec extends AnyFunSuite {
   }
 
   test("error model: confusion emissions carry the gap fix-up downstream") {
-    val counts = ErrorModelTrainer.confusionCounts(
-      Seq(("niht", "nicht")), maxN = 1)
+    // the 1-gram confusion dict of one pair, counted from its emissions
+    val counts = ErrorModelTrainer.confusionEmissions("niht", "nicht", maxN = 1)
+      .groupMapReduce { case (_, r, g) => (r, g) }(_ => 1L)(_ + _)
     // alignment: ni_ht -> nicht, so 1-gram row GAP->c appears once
-    assert(counts(1)((ErrorModelTrainer.GapString, "c")) == 1L)
-    val rel = ErrorModelTrainer.preprocessConfusions(counts(1))
+    assert(counts((ErrorModelTrainer.GapString, "c")) == 1L)
+    val rel = ErrorModelTrainer.preprocessConfusions(counts)
     // total=5, insertions=1 -> GAP->GAP set to 4; GAP row relfreqs: c=1/5
     val gapC = rel.find(r => r._1 == ErrorModelTrainer.GapString && r._2 == "c").get
     assert(math.abs(gapC._3 - 0.2) < 1e-12)

@@ -325,6 +325,29 @@ class PipelineSpec extends AnyFunSuite {
       (ms.head.minDocId, ms.head.maxDocId))
   }
 
+  test("commit stats: ids with a quote, a backslash, a newline and U+0001 read back exactly") {
+    import spark.implicits._
+    val p = s"${Files.createTempDirectory("graft-io-escape")}/t"
+    val ids = Seq("a\"b", "C:\\new", "x\ny", "\u0001", "\u0001z")
+    val docs = ids.map(id => Doc(id, Seq(Span("text", id, null, 0)))).toDS()
+    val ms = TableIO.writeDocs(docs, p, buckets = 1, attemptId = "attempt\"0")
+    val read = TableIO.readManifests(p)
+    assert(read.map(TableIOStats.of) == Seq(TableIOStats.reference(docs, 1)(0)))
+    assert(read.map(_.minDocId) == Seq("\u0001") && read.map(_.maxDocId) == Seq("x\ny"),
+      read.map(m => (m.minDocId, m.maxDocId)))
+    assert(read == ms)
+    assert(TableIO.readDocs(spark, p).collect().map(_.doc_id).sorted.toSeq == ids.sorted)
+    // both snapshot builders write the attempt id as a JSON string
+    TableIO.mergeDocs(Seq(Doc("C:\\new", Nil)).toDS(), p, buckets = 1,
+      attemptId = "merge\"0")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val attempts = Seq(0, 1).map(k => json.readTree(
+      new java.io.File(p, s"_snapshot-$k.json")).get("attempt").asText())
+    assert(attempts == Seq("attempt\"0", "merge\"0"))
+    assert(TableIO.readDocs(spark, p).collect().map(d => d.doc_id -> d.spans.size)
+      .toMap == ids.map(id => id -> (if (id == "C:\\new") 0 else 1)).toMap)
+  }
+
   test("commit stats: an empty write and a sparse write commit zero-stat manifests for empty buckets") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-io-sparse").toString
