@@ -311,16 +311,32 @@ object ErrorModelST {
       val bcProbs = spark.sparkContext.broadcast(probs)
       val bcNgr = spark.sparkContext.broadcast(ngrProbs)
       val n = ngrams.length
-      val (counts2, ngrCounts) = idPairs.rdd.mapPartitions { it =>
+      val partials = idPairs.rdd.mapPartitions { it =>
         val cs: Mat = Array.fill(n, n)(0.0)
         val ns = new Array[Double](maxN)
         it.foreach { case (in, out) =>
           accumulateExpectedCounts(in, out, bcProbs.value, bcNgr.value, cs, ns)
         }
         Iterator.single((cs, ns))
-      }.treeReduce { case ((c1, n1), (c2, n2)) =>
-        (matAdd(c1, c2), { var i = 0; while (i < n1.length) { n1(i) += n2(i); i += 1 }; n1 })
       }
+      // sum the partials in partition order, each as soon as its
+      // predecessors are in: a merge in task completion order (reduce,
+      // treeReduce) rounds differently run to run, and so does the model
+      val counts2: Mat = Array.fill(n, n)(0.0)
+      val ngrCounts = new Array[Double](maxN)
+      val early = mutable.Map.empty[Int, (Mat, Array[Double])]
+      var next = 0
+      spark.sparkContext.runJob(partials, (it: Iterator[(Mat, Array[Double])]) => it.next(),
+        (i: Int, part: (Mat, Array[Double])) => {
+          early(i) = part
+          while (early.contains(next)) {
+            val (cs, ns) = early.remove(next).get
+            matAdd(counts2, cs)
+            var k = 0
+            while (k < maxN) { ngrCounts(k) += ns(k); k += 1 }
+            next += 1
+          }
+        })
       val newProbs = computeNewProbs(counts2, probs)
       val s = ngrCounts.sum
       if (s > 0) ngrProbs = ngrCounts.map(_ / s)

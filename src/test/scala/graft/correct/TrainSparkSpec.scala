@@ -66,4 +66,17 @@ class TrainSparkSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("st error model: 5 consecutive trainSpark calls serialize to equal bytes") {
+    import spark.implicits._
+    def bytes(m: CompiledModel): Seq[Byte] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(buf)
+      try out.writeObject(m) finally out.close()
+      buf.toByteArray.toSeq
+    }
+    val runs = Seq.fill(5)(bytes(CompiledModel.trainSpark(spark,
+      Fixtures.trainingPairs.toDS(), Fixtures.wordlist, errorModelType = "st")))
+    assert(runs.distinct.size == 1, s"${runs.distinct.size} distinct models of 5")
+  }
 }
