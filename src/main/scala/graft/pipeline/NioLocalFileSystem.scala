@@ -3,8 +3,7 @@ package graft.pipeline
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
 
@@ -51,23 +50,12 @@ object NioLocalFileSystem {
     s
   }
 
-  /** True when `p` resolves to the local store under `conf` (a `file:`
-    * path, or a path without a scheme under a `file:` default FS). */
-  def isLocal(p: Path, conf: Configuration): Boolean =
-    Option(p.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"
-
-  /** A fresh instance (it holds no resources; nothing to close). */
-  def apply(conf: Configuration): NioLocalFileSystem = {
-    val fs = new NioLocalFileSystem
-    fs.initialize(java.net.URI.create("file:///"), conf)
-    fs
-  }
-
-  /** `DataFrameWriter` options that resolve `file:` to this class in the
-    * write job's Hadoop conf only: Spark copies writer options into the
-    * job's conf, which reaches the committer's job set-up and commit and
-    * the tasks' file writers. The cache is off for `file:` in that conf,
-    * so no JVM-wide `FileSystem` cache entry is read or replaced. */
+  /** Hadoop conf entries that resolve `file:` to this class and bind no
+    * other scheme. As `DataFrameWriter` options they reach the write
+    * job's Hadoop conf only: Spark copies writer options into the job's
+    * conf, which reaches the committer's job set-up and commit and the
+    * tasks' file writers. The cache is off for `file:` in that conf, so
+    * no JVM-wide `FileSystem` cache entry is read or replaced. */
   val WriteOptions: Map[String, String] = Map(
     "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")

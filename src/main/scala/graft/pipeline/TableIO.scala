@@ -43,8 +43,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * [[NioLocalFileSystem]], in the table calls here and, through writer
   * options, in the data write job: stock `LocalFileSystem` semantics
   * (modes, `.crc` sidecars), but without libhadoop it starts no `chmod`
-  * process per created file and directory. Other schemes are resolved
-  * by the Hadoop conf as before. */
+  * process per created file and directory. The options bind only the
+  * `file` scheme, so other schemes resolve as the Hadoop conf says. */
 object TableIO {
 
   final case class BucketManifest(bucket: Int, numDocs: Long, numSpans: Long,
@@ -54,11 +54,14 @@ object TableIO {
   /** Test-only failure injection: throw after committing N buckets. */
   final class InjectedFailure(msg: String) extends RuntimeException(msg)
 
-  /** The table root's FileSystem: [[NioLocalFileSystem]] for a `file:`
-    * root, the configured one for any other scheme. */
+  /** The table root's FileSystem under a copy of `conf` with
+    * [[NioLocalFileSystem.WriteOptions]] set: [[NioLocalFileSystem]] for
+    * a `file:` root, the configured one for any other scheme. */
   private def fsFor(conf: Configuration, path: String): (FileSystem, Path) = {
+    val c = new Configuration(conf)
+    NioLocalFileSystem.WriteOptions.foreach { case (k, v) => c.set(k, v) }
     val p = new Path(path)
-    (if (NioLocalFileSystem.isLocal(p, conf)) NioLocalFileSystem(conf) else p.getFileSystem(conf), p)
+    (p.getFileSystem(c), p)
   }
   /** Active-session Hadoop conf when one exists; a plain Configuration
     * otherwise — table inspection must work SESSIONLESS (e.g. checking
@@ -172,8 +175,7 @@ object TableIO {
         col("bucket"), col("doc_id"), size(col("spans")),
         xxhash64(col("doc_id"), to_json(col("spans")))).as("stats"))
       .write.mode(SaveMode.ErrorIfExists)
-      .options(if (fs.isInstanceOf[NioLocalFileSystem]) NioLocalFileSystem.WriteOptions
-        else Map.empty[String, String])
+      .options(NioLocalFileSystem.WriteOptions)
       .partitionBy("bucket").parquet(attemptDir.toString)
     // empty when the write ran no task over a row (an empty input)
     val stats = observed.get.get("stats").map { v =>

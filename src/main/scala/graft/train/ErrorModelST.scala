@@ -1,13 +1,15 @@
 package graft.train
 
 import graft.wfst.{Arc, Label, Wfst}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Dataset, SparkSession}
 import scala.collection.mutable
 
 /** Port of the stochastic-transducer (EM) error model, lib/error_st.py.
   * The E-step is the distributed piece: per-pair expected counts are
-  * dense-matrix accumulations summed with `treeReduce` (SURVEY.md §2
-  * row E6); the M-step and the final FST compile run on the driver.
+  * dense-matrix accumulations summed per partition, then over the
+  * partitions in a fixed two-level order (SURVEY.md §2 row E6); the
+  * M-step and the final FST compile run on the driver.
   */
 object ErrorModelST {
 
@@ -232,7 +234,8 @@ object ErrorModelST {
 
   /** fit (:183-198) — driver EM loop; E-step runs distributed when a
     * Dataset is supplied (matrices broadcast each iteration, partial
-    * counts treeReduce'd — the classic Spark EM shape). */
+    * counts summed in a fixed two-level order — the classic Spark EM
+    * shape). */
   def fitLocal(pairs: Seq[(Array[Array[Int]], Array[Array[Int]])],
       nNgrams: Int, maxN: Int, threshold: Double = 1e-4,
       maxIters: Int = 50): (Mat, Array[Double]) = {
@@ -283,6 +286,20 @@ object ErrorModelST {
       .limit(maxNgrams + 1)
   }
 
+  /** The sum of E-step partials (expected counts, n-gram order counts),
+    * added in the order given into fresh arrays. */
+  private def sumPartials(ps: Iterable[(Mat, Array[Double])], n: Int,
+      maxN: Int): (Mat, Array[Double]) = {
+    val cs: Mat = Array.fill(n, n)(0.0)
+    val ns = new Array[Double](maxN)
+    ps.foreach { case (c, v) =>
+      matAdd(cs, c)
+      var k = 0
+      while (k < maxN) { ns(k) += v(k); k += 1 }
+    }
+    (cs, ns)
+  }
+
   /** Distributed E-step EM over (gt, ocr) line pairs. */
   def fitSpark(spark: SparkSession, pairs: Dataset[(String, String)],
       maxN: Int = 3, maxNgrams: Int = 1000, threshold: Double = 1e-4,
@@ -303,6 +320,9 @@ object ErrorModelST {
       (stringToNgramIds(gt, bcIdx.value, maxN),
         stringToNgramIds(ocr, bcIdx.value, maxN))
     }.persist()
+    val pairsRdd = idPairs.rdd
+    val width = math.max(1, math.ceil(math.sqrt(pairsRdd.getNumPartitions)).toInt)
+    val groups = math.max(1, (pairsRdd.getNumPartitions + width - 1) / width)
     var probs = initializeProbs(ngrams.length)
     var ngrProbs = Array.fill(maxN)(1.0 / maxN)
     var klDiv = Double.PositiveInfinity
@@ -311,32 +331,22 @@ object ErrorModelST {
       val bcProbs = spark.sparkContext.broadcast(probs)
       val bcNgr = spark.sparkContext.broadcast(ngrProbs)
       val n = ngrams.length
-      val partials = idPairs.rdd.mapPartitions { it =>
+      // a sum of fixed shape: the partials of partitions 0..P-1 in
+      // groups of `width` consecutive indices, each group summed on an
+      // executor in index order, the group sums folded here in group
+      // order. A merge in task completion order (reduce, treeReduce)
+      // rounds differently run to run, and so does the model; like
+      // treeReduce, the driver receives about sqrt(P) n x n matrices.
+      val (counts2, ngrCounts) = sumPartials(pairsRdd.mapPartitionsWithIndex { (i, it) =>
         val cs: Mat = Array.fill(n, n)(0.0)
         val ns = new Array[Double](maxN)
         it.foreach { case (in, out) =>
           accumulateExpectedCounts(in, out, bcProbs.value, bcNgr.value, cs, ns)
         }
-        Iterator.single((cs, ns))
-      }
-      // sum the partials in partition order, each as soon as its
-      // predecessors are in: a merge in task completion order (reduce,
-      // treeReduce) rounds differently run to run, and so does the model
-      val counts2: Mat = Array.fill(n, n)(0.0)
-      val ngrCounts = new Array[Double](maxN)
-      val early = mutable.Map.empty[Int, (Mat, Array[Double])]
-      var next = 0
-      spark.sparkContext.runJob(partials, (it: Iterator[(Mat, Array[Double])]) => it.next(),
-        (i: Int, part: (Mat, Array[Double])) => {
-          early(i) = part
-          while (early.contains(next)) {
-            val (cs, ns) = early.remove(next).get
-            matAdd(counts2, cs)
-            var k = 0
-            while (k < maxN) { ngrCounts(k) += ns(k); k += 1 }
-            next += 1
-          }
-        })
+        Iterator.single((i / width, (i, (cs, ns))))
+      }.groupByKey(new HashPartitioner(groups))
+        .map { case (g, ps) => (g, sumPartials(ps.toSeq.sortBy(_._1).map(_._2), n, maxN)) }
+        .collect().sortBy(_._1).map(_._2), n, maxN)
       val newProbs = computeNewProbs(counts2, probs)
       val s = ngrCounts.sum
       if (s > 0) ngrProbs = ngrCounts.map(_ / s)

@@ -124,7 +124,8 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
 
   test("setPermission: rwx bits without a process, a sticky bit through Hadoop's own path") {
     val base = Files.createTempDirectory("graft-io-chmod")
-    val fs = NioLocalFileSystem(conf)
+    val fs = new NioLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), conf)
     val dir = new Path(s"$base/d")
     assert(fs.mkdirs(dir))
     def chmod(m: String): Seq[String] =
@@ -135,5 +136,21 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     val sticky = chmod("1755")
     if (!NativeIO.isAvailable) assert(sticky.nonEmpty, "a sticky bit did not take Hadoop's chmod path")
     assert(mode(Paths.get(s"$base/d")) == octal("1755"))
+  }
+
+  test("under a setgid parent: the modes a stock LocalFileSystem gives (chmod keeps a directory's setgid bit)") {
+    val base = Files.createTempDirectory("graft-io-setgid")
+    Files.setAttribute(base, "unix:mode", mode(base) | octal("2000"))
+    assert((mode(base) & octal("2000")) != 0, "the parent did not take the setgid bit")
+    /** Modes of `name`, `name/dir` and `name/file` created through `fs`. */
+    def create(fs: LocalFileSystem, name: String): Seq[Int] = {
+      fs.initialize(java.net.URI.create("file:///"), conf)
+      assert(fs.mkdirs(new Path(s"$base/$name/dir")))
+      fs.create(new Path(s"$base/$name/file")).close()
+      Seq(name, s"$name/dir", s"$name/file").map(q => mode(Paths.get(s"$base/$q")))
+    }
+    val stock = create(new LocalFileSystem(), "stock")
+    val nio = create(new NioLocalFileSystem, "nio")
+    assert(nio == stock, s"${nio.map(_.toOctalString)}, stock ${stock.map(_.toOctalString)}")
   }
 }

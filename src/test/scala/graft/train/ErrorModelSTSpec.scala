@@ -83,6 +83,38 @@ class ErrorModelSTSpec extends AnyFunSuite {
       assert(math.abs(st.ngrProbs(k) - ngrL(k)) < 1e-9)
   }
 
+  test("fitSpark over 64 partitions: equal on every run, matches fitLocal") {
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
+    import spark.implicits._
+    val words = Seq("nicht", "ich", "sich", "licht", "recht", "acht")
+    val raw = (0 until 128).map { i =>
+      val gt = s"${words(i % 6)} ${words((i * 5 + 1) % 6)}"
+      (if (i % 3 == 0) gt.replaceFirst("c", "") else gt, gt)
+    }
+    def fit(): StModel = fitSpark(spark, spark.sparkContext.parallelize(raw, 64).toDS(),
+      maxN = 2, maxNgrams = 50, maxIters = 3, threshold = 0.0)
+    val st = fit()
+    for (_ <- 1 to 2) {
+      val again = fit()
+      assert(again.ngrams == st.ngrams)
+      val differ = for (i <- st.probs.indices; j <- st.probs(i).indices
+        if again.probs(i)(j) != st.probs(i)(j)) yield (i, j)
+      assert(differ.isEmpty, s"${differ.size} cells of probs differ, first ${differ.headOption}")
+      assert(again.ngrProbs.toSeq == st.ngrProbs.toSeq)
+    }
+    val idx = st.ngrams.zipWithIndex.toMap
+    val pairs = raw.map { case (ocr, gt) =>
+      (stringToNgramIds(gt, idx, 2), stringToNgramIds(ocr, idx, 2))
+    }
+    val (probsL, ngrL) = fitLocal(pairs, st.ngrams.length, 2, threshold = 0.0, maxIters = 3)
+    for (i <- probsL.indices; j <- probsL.indices)
+      assert(math.abs(st.probs(i)(j) - probsL(i)(j)) < 1e-9, s"probs($i)($j)")
+    for (k <- ngrL.indices)
+      assert(math.abs(st.ngrProbs(k) - ngrL(k)) < 1e-9)
+  }
+
   test("topNgramCounts bounds the driver to maxNgrams+1 rows via top-k") {
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.ui.enabled", "false")
