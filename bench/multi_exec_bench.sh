@@ -32,10 +32,29 @@ NDOCS8="${1:-12000}"
 NDOCS2="$((NDOCS8 / 4))"
 PASSES="${2:-2}"
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
-JOPTS="-Xms4g -Xmx4g -XX:+AlwaysPreTouch --add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC"
+EXECUTORS=4   # executors at the 4N level
+A_STRIDE=2    # cores per executor, constant-share protocol
+B_STRIDE=8    # cores per executor, saturating protocol
+HEAP_GB=4     # fixed heap per executor JVM
+
+# Fit check before the first JVM starts: the 4N levels pin cores up to
+# EXECUTORS*B_STRIDE-1 and hold EXECUTORS pre-touched heaps at once; on
+# a smaller box taskset or the kernel's OOM killer would fail mid-run.
+HIGHEST_CORE=$((EXECUTORS * B_STRIDE - 1))
+if [ "$(nproc)" -le "$HIGHEST_CORE" ]; then
+  echo "multi_exec_bench.sh: pins cores 0-$HIGHEST_CORE but nproc is $(nproc)" >&2
+  exit 1
+fi
+MEM_KB=$(awk '/^MemTotal:/ {print $2}' /proc/meminfo)
+if [ "$MEM_KB" -lt $((EXECUTORS * HEAP_GB * 1024 * 1024)) ]; then
+  echo "multi_exec_bench.sh: $EXECUTORS heaps of ${HEAP_GB}g do not fit in MemTotal ${MEM_KB} kB" >&2
+  exit 1
+fi
+
+JOPTS="-Xms${HEAP_GB}g -Xmx${HEAP_GB}g -XX:+AlwaysPreTouch --add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC"
 
 run_executor() { # $1=cores $2=seed $3=threads $4=ndocs -> spans_per_sec
-  taskset -c "$1" java $JOPTS -cp "$CP" graft.ExecutorBench "$2" "$3" "$4" 2>/dev/null \
+  taskset -c "$1" java $JOPTS -cp "$CP" graft.Bench executor "$2" "$3" "$4" 2>/dev/null \
     | tail -1 | python3 -c 'import sys,json; print(json.load(sys.stdin)["spans_per_sec"])'
 }
 
@@ -46,7 +65,7 @@ protocol() { # $1=threads $2=ndocs $3=stride(cores per executor) -> prints "best
     local thr_n
     thr_n=$(run_executor "0-$((stride-1))" "$pass" "$threads" "$ndocs")
     local pids=() outs=()
-    for i in 0 1 2 3; do
+    for i in $(seq 0 $((EXECUTORS - 1))); do
       local out; out=$(mktemp); outs+=("$out")
       ( run_executor "$((i*stride))-$((i*stride+stride-1))" "$((100*pass + i))" "$threads" "$ndocs" > "$out" ) & pids+=($!)
     done
@@ -62,14 +81,15 @@ protocol() { # $1=threads $2=ndocs $3=stride(cores per executor) -> prints "best
   echo "$best_n $best_4n"
 }
 
-read -r a_n a_4n < <(protocol 2 "$NDOCS2" 2)
-read -r b_n b_4n < <(protocol 8 "$NDOCS8" 8)
-python3 - "$a_n" "$a_4n" "$b_n" "$b_4n" <<'PY'
+read -r a_n a_4n < <(protocol "$A_STRIDE" "$NDOCS2" "$A_STRIDE")
+read -r b_n b_4n < <(protocol "$B_STRIDE" "$NDOCS8" "$B_STRIDE")
+python3 - "$a_n" "$a_4n" "$b_n" "$b_4n" "$EXECUTORS" "$A_STRIDE" "$B_STRIDE" <<'PY'
 import sys
 an, a4, bn, b4 = map(float, sys.argv[1:5])
-print(f'{{"metric":"executor_scaling_efficiency","value":{a4/an/4:.3f},"unit":"ratio",'
-      f'"protocol":"constant-share (2 threads/executor, 1 vs 4 pinned JVMs)",'
+k, sa, sb = map(int, sys.argv[5:8])
+print(f'{{"metric":"executor_scaling_efficiency","value":{a4/an/k:.3f},"unit":"ratio",'
+      f'"protocol":"constant-share ({sa} threads/executor, 1 vs {k} pinned JVMs)",'
       f'"spans_per_sec_n":{an:.1f},"spans_per_sec_4n":{a4:.1f},'
-      f'"saturating_protocol":{{"value":{b4/bn/4:.3f},"threads_per_executor":8,'
+      f'"saturating_protocol":{{"value":{b4/bn/k:.3f},"threads_per_executor":{sb},'
       f'"spans_per_sec_n":{bn:.1f},"spans_per_sec_4n":{b4:.1f}}}}}')
 PY

@@ -281,9 +281,11 @@ object Evaluate {
         .select($"ocr", $"cor", $"gt").as[(String, String, String)]
       metric match {
         case "Levenshtein" =>
+          // edits and length both in code points, like adjustedDistance
           val (eo, lo, ec, lc) = trip.map { case (o, c, g) =>
-            (Distance.levenshtein(o, g).toLong, g.length.toLong,
-              Distance.levenshtein(c, g).toLong, g.length.toLong)
+            val n = g.codePointCount(0, g.length).toLong
+            (Distance.levenshtein(o, g).toLong, n,
+              Distance.levenshtein(c, g).toLong, n)
           }.reduce((x, y) => (x._1 + y._1, x._2 + y._2, x._3 + y._3, x._4 + y._4))
           println(s"Aggregate CER OCR:        ${eo.toDouble / lo}")
           println(s"Aggregate CER Corrected:  ${ec.toDouble / lc}")

@@ -59,14 +59,12 @@ object CorrectionJob {
 
   /** The one per-partition correction setup: each partition reads the
     * broadcast model once and shares the executor-wide window memo
-    * ([[SharedWindowCache]]); `f` turns both into the per-row function.
-    * useCache = false is the bench's controlled miss-path measurement
-    * (the 10^12-doc regime where window diversity dwarfs any cache). */
-  def mapWithModel[A, B: Encoder](rows: Dataset[A], bc: Broadcast[CompiledModel],
-      useCache: Boolean = true)(f: (CompiledModel, AltCache) => A => B): Dataset[B] =
+    * ([[SharedWindowCache]]); `f` turns both into the per-row function. */
+  def mapWithModel[A, B: Encoder](rows: Dataset[A], bc: Broadcast[CompiledModel])(
+      f: (CompiledModel, AltCache) => A => B): Dataset[B] =
     rows.mapPartitions { it =>
       val m = bc.value
-      val row = f(m, if (useCache) SharedWindowCache.forModel(m) else null)
+      val row = f(m, SharedWindowCache.forModel(m))
       it.map(row)
     }
 
@@ -75,7 +73,6 @@ object CorrectionJob {
   def correctDocs(docs: Dataset[Doc], bc: Broadcast[CompiledModel],
       metrics: Option[Metrics] = None,
       saltPartitions: Option[Int] = None,
-      useCache: Boolean = true,
       decoder: Decoder = viterbi): Dataset[Doc] = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -83,7 +80,7 @@ object CorrectionJob {
       case Some(p) => docs.repartition(p, xxhash64($"doc_id"))
       case None    => docs
     }
-    mapWithModel(input, bc, useCache) { (m, cache) =>
+    mapWithModel(input, bc) { (m, cache) =>
       val forDoc = decoder(m, cache)
       d => correctSpans(d, forDoc(d), metrics)
     }

@@ -1330,24 +1330,14 @@ object Oracles {
       |   OR (g % 3 = 2)
       |GROUP BY url ORDER BY url""".stripMargin
 
-  /** Integer fixed-point PageRank: every operation is an integer
-    * mul/div (DuckDB's `//` = Spark's `div` for non-negative longs),
-    * so three unrolled iterations are bit-identical across engines —
-    * the oracle gates the ITERATION, not a float approximation. */
-  /** The shared pagerank CTE chain (edge synthesis through r3),
-    * reused verbatim by qPagerank and qCrawlFrontier. */
-  private val pagerankCtes: String = {
+  /** The link-graph edge CTE `e(src, dst, w)` that the PageRank, HITS,
+    * co-citation and crawl-frontier oracles share: two out-links per
+    * document, counted per (src, dst). */
+  private val linkEdges: String = {
     val host = "CASE (%s) %% 3 WHEN 0 THEN 'news.example.org' " +
       "WHEN 1 THEN 'blog.example.org' ELSE 'www.example.net' END"
     val srcUrl = s"'https://' || ${host.format("doc_id % 97")} || '/articles/' || CAST(doc_id % 97 AS VARCHAR)"
     val dstUrl = s"'https://' || ${host.format("(doc_id * 7 + 13) % 97")} || '/articles/' || CAST((doc_id * 7 + 13) % 97 AS VARCHAR)"
-    def step(prev: String, cur: String): String =
-      s"""$cur AS (SELECT n.url, CAST(150000000000 + COALESCE(s.c, 0) AS BIGINT) AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS url,
-         |           CAST(sum(((p.r * e.w) // o.ow) * 85 // 100) AS BIGINT) AS c
-         |    FROM e JOIN $prev p ON e.src = p.url JOIN o ON o.src = e.src
-         |    GROUP BY e.dst) s ON n.url = s.url)""".stripMargin
     s"""e AS (
        |  SELECT src, dst, CAST(count(*) AS BIGINT) AS w FROM (
        |    SELECT $srcUrl AS src,
@@ -1355,7 +1345,24 @@ object Oracles {
        |    FROM documents
        |    UNION ALL
        |    SELECT $srcUrl, $dstUrl FROM documents)
-       |  GROUP BY src, dst),
+       |  GROUP BY src, dst)""".stripMargin
+  }
+
+  /** Integer fixed-point PageRank: every operation is an integer
+    * mul/div (DuckDB's `//` = Spark's `div` for non-negative longs),
+    * so three unrolled iterations are bit-identical across engines —
+    * the oracle gates the ITERATION, not a float approximation. */
+  /** The shared pagerank CTE chain (edge synthesis through r3),
+    * reused verbatim by qPagerank and qCrawlFrontier. */
+  private val pagerankCtes: String = {
+    def step(prev: String, cur: String): String =
+      s"""$cur AS (SELECT n.url, CAST(150000000000 + COALESCE(s.c, 0) AS BIGINT) AS r
+         |  FROM nodes n LEFT JOIN (
+         |    SELECT e.dst AS url,
+         |           CAST(sum(((p.r * e.w) // o.ow) * 85 // 100) AS BIGINT) AS c
+         |    FROM e JOIN $prev p ON e.src = p.url JOIN o ON o.src = e.src
+         |    GROUP BY e.dst) s ON n.url = s.url)""".stripMargin
+    s"""$linkEdges,
        |nodes AS (SELECT DISTINCT url FROM (SELECT src AS url FROM e UNION ALL SELECT dst FROM e)),
        |o AS (SELECT src, CAST(sum(w) AS BIGINT) AS ow FROM e GROUP BY src),
        |r0 AS (SELECT url, CAST(1000000000000 AS BIGINT) AS r FROM nodes),
@@ -1372,10 +1379,6 @@ object Oracles {
     * auth/hub rounds with integer max-normalization (`//` = Spark's
     * `div` on positives). */
   val qHits: String = {
-    val host = "CASE (%s) %% 3 WHEN 0 THEN 'news.example.org' " +
-      "WHEN 1 THEN 'blog.example.org' ELSE 'www.example.net' END"
-    val srcUrl = s"'https://' || ${host.format("doc_id % 97")} || '/articles/' || CAST(doc_id % 97 AS VARCHAR)"
-    val dstUrl = s"'https://' || ${host.format("(doc_id * 7 + 13) % 97")} || '/articles/' || CAST((doc_id * 7 + 13) % 97 AS VARCHAR)"
     def authStep(hubPrev: String, cur: String): String =
       s"""${cur}r AS (
          |  SELECT e.dst AS url, CAST(sum(h.h * e.w) AS BIGINT) AS a
@@ -1392,14 +1395,7 @@ object Oracles {
          |$cur AS (
          |  SELECT n.url, CAST(COALESCE(r.h, 0) * 1000000 // m.mx AS BIGINT) AS h
          |  FROM nodes n LEFT JOIN ${cur}r r ON n.url = r.url, ${cur}m m)""".stripMargin
-    s"""WITH e AS (
-       |  SELECT src, dst, CAST(count(*) AS BIGINT) AS w FROM (
-       |    SELECT $srcUrl AS src,
-       |           'https://www.example.net/?page=' || CAST(doc_id % 4 AS VARCHAR) || '&sort=asc' AS dst
-       |    FROM documents
-       |    UNION ALL
-       |    SELECT $srcUrl, $dstUrl FROM documents)
-       |  GROUP BY src, dst),
+    s"""WITH $linkEdges,
        |nodes AS (SELECT DISTINCT url FROM (SELECT src AS url FROM e UNION ALL SELECT dst FROM e)),
        |h0 AS (SELECT url, CAST(1000000 AS BIGINT) AS h FROM nodes),
        |${authStep("h0", "a1")},
@@ -1474,18 +1470,7 @@ object Oracles {
   /** Co-citation: same edge synthesis, self-join on source, exact
     * integer counts + min-weight strength. */
   val qCocitation: String = {
-    val host = "CASE (%s) %% 3 WHEN 0 THEN 'news.example.org' " +
-      "WHEN 1 THEN 'blog.example.org' ELSE 'www.example.net' END"
-    val srcUrl = s"'https://' || ${host.format("doc_id % 97")} || '/articles/' || CAST(doc_id % 97 AS VARCHAR)"
-    val dstUrl = s"'https://' || ${host.format("(doc_id * 7 + 13) % 97")} || '/articles/' || CAST((doc_id * 7 + 13) % 97 AS VARCHAR)"
-    s"""WITH e AS (
-       |  SELECT src, dst, CAST(count(*) AS BIGINT) AS w FROM (
-       |    SELECT $srcUrl AS src,
-       |           'https://www.example.net/?page=' || CAST(doc_id % 4 AS VARCHAR) || '&sort=asc' AS dst
-       |    FROM documents
-       |    UNION ALL
-       |    SELECT $srcUrl, $dstUrl FROM documents)
-       |  GROUP BY src, dst)
+    s"""WITH $linkEdges
        |SELECT a.dst AS u, b.dst AS v, CAST(count(*) AS BIGINT) AS n_src,
        |       CAST(sum(least(a.w, b.w)) AS BIGINT) AS strength
        |FROM e a JOIN e b ON a.src = b.src AND a.dst < b.dst

@@ -158,4 +158,22 @@ class CliSpec extends AnyFunSuite {
     val stLines = Files.readString(Paths.get(outSt)).trim.linesIterator.toSeq
     assert(stLines.size == 2, stLines)
   }
+
+  test("evaluate -M Levenshtein divides by the GT length in code points") {
+    spark.sparkContext.setLogLevel("WARN")
+    val dir = Files.createTempDirectory("graft-cli-cer").toString
+    def tsv(name: String, line: String): String = {
+      val p = s"$dir/$name.tsv"
+      Files.writeString(Paths.get(p), s"l1\t$line"); p
+    }
+    // U+1D504 is two UTF-16 units: one edit over 3 code points, not 4
+    val bos = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
+      Evaluate.main(Array("-i", tsv("ocr", "Abc"), "-o", tsv("cor", "\uD835\uDD04bc"),
+        "-g", tsv("gt", "\uD835\uDD04bc"), "-M", "Levenshtein", "-Q", "4"))
+    }
+    val out = bos.toString("UTF-8")
+    assert(out.contains(s"Aggregate CER OCR:        ${1.0 / 3}"), out)
+    assert(out.contains("Aggregate CER Corrected:  0.0"), out)
+  }
 }

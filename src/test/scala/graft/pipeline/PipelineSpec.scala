@@ -52,10 +52,16 @@ class PipelineSpec extends AnyFunSuite {
     val in = docs.collect()
     val expected = in.map(d => d.doc_id -> d.spans.map(s =>
       if (s.kind == "text") Corrector.correctLine(s.text, model) else s.text)).toMap
+    // the shared window memo, and a decoder that bypasses it
+    val uncached: CorrectionJob.Decoder = { (m, _) =>
+      val line: String => String = Corrector.correctLine(_, m, null)
+      _ => line
+    }
     for (salt <- Seq(None, Some(4)); useCache <- Seq(true, false)) {
       val metrics = Metrics(spark)
       val job = CorrectionJob.correctDocs(docs, bc, Some(metrics),
-        saltPartitions = salt, useCache = useCache)
+        saltPartitions = salt,
+        decoder = if (useCache) CorrectionJob.viterbi else uncached)
       // no shuffle except the optional salting exchange
       val plan = job.queryExecution.executedPlan.toString
       assert(plan.linesIterator.count(_.contains("Exchange")) == salt.size, plan)
