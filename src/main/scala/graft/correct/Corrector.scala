@@ -271,6 +271,15 @@ object Corrector {
     // character nor finish (most of the hub fan-out); the pruned
     // machine is array-identical to the one without the lookahead
     // (Wfst.composeBoundedPruned).
+    // Completion check: the step is given the window FST as `next`. When
+    // no output string of its expansion is a window-FST input (most
+    // windows of novel text), it returns the empty machine at once and
+    // skips the assembly, and the lexicon step below costs next to
+    // nothing. The result is the same machine as without the check:
+    //  - every arc of the pruned error machine is an arc of the expansion;
+    //  - rmEpsilon keeps the language;
+    //  - the lexicon step returns Wfst.emptyFst whenever its product has
+    //    no accepting path.
     // trim = false throughout: prune drops non-coaccessible states
     // itself, and downstream compose / path enumeration explore only
     // from the start state, so the intermediate connect passes are
@@ -285,7 +294,7 @@ object Corrector {
     // distances — Wfst.assemblePruned)
     for (fst <- model.errorFst) {
       w = w.composeBoundedPruned(fst, model.pruningWeight,
-        model.pruningWeight).rmEpsilon(trim = false)
+        model.pruningWeight, model.windowFst).rmEpsilon(trim = false)
     }
     // the final cascade step keeps its eps arcs: nothing composes with
     // this machine again, and paths()/distinctOutputs skip eps labels —

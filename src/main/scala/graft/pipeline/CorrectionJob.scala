@@ -13,7 +13,7 @@ final case class Metrics(
     textSpans: LongAccumulator,
     mediaSpans: LongAccumulator,
     spansChanged: LongAccumulator,
-    chars: LongAccumulator)
+    chars: LongAccumulator) // code points of text spans, as Spark's length()
 
 object Metrics {
   def apply(spark: SparkSession): Metrics = {
@@ -94,7 +94,8 @@ object CorrectionJob {
     Doc(d.doc_id, d.spans.map { s =>
       if (s.kind == "text") {
         metrics.foreach { mx =>
-          mx.textSpans.add(1); mx.chars.add(s.text.length.toLong)
+          mx.textSpans.add(1)
+          mx.chars.add(s.text.codePointCount(0, s.text.length).toLong)
         }
         val corrected = fix(s.text)
         if (corrected != s.text) metrics.foreach(_.spansChanged.add(1))

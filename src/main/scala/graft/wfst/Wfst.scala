@@ -47,6 +47,15 @@ private[wfst] final class Scratch {
   var remap = new Array[Int](1 << 10)
   var fwd = new Array[Double](1 << 10)
   var bwd = new Array[Double](1 << 10)
+  // completion check (composeBoundedPruned's `next`): the visited
+  // (product state, next state) pairs, as a bitset over the pair space
+  // when it fits Scratch.DenseMax (all zero between calls: the check
+  // clears the bits of the pairs it lists in reachSeen) or else as a
+  // hash set, and the search stack
+  var reachBits = new Array[Long](1 << 8)
+  var reachSeen = new Array[Int](1 << 8)
+  val reachSet = new LongIntMap(1 << 6)
+  var reachStack = new Array[Long](1 << 8)
   // rmEpsilon closure FIFO (SPFA relaxation; scala PriorityQueue was
   // tried first — it routes every enqueue through Seq+addAll+iterator
   // and boxes tuples — then a primitive heap, but closures are tiny
@@ -87,8 +96,12 @@ private[wfst] final class Scratch {
 private[wfst] object Scratch {
   /** Max product-space size for the dense compose id table: 1M entries
     * = 8 MB of per-thread scratch worst-case (grown lazily to the max
-    * actually used — the cascade's error-model step needs ~20k). Above
-    * this the hash map takes over (the lexicon windowFst compose). */
+    * actually used). On perfbench's model the error-model step needs
+    * up to ~42k (window chain × 1,754 error-FST states) and the lexicon
+    * step ≈70–220 error-step states × 1,803 window-FST states (≈125k–
+    * 400k), so both take the dense path. Above this the hash map takes
+    * over; in the specs only the widened window of `WfstPropertySpec`
+    * gets there. */
   val DenseMax = 1 << 20
 
   def ensureInt(a: Array[Int], n: Int): Array[Int] =
@@ -97,6 +110,8 @@ private[wfst] object Scratch {
     if (a.length >= n) a else new Array[Boolean](math.max(a.length << 1, n))
   def ensureDouble(a: Array[Double], n: Int): Array[Double] =
     if (a.length >= n) a else new Array[Double](math.max(a.length << 1, n))
+  def ensureLong(a: Array[Long], n: Int): Array[Long] =
+    if (a.length >= n) a else new Array[Long](math.max(a.length << 1, n))
 }
 
 /** Growable primitive arc store used by all builders. */
@@ -920,12 +935,107 @@ final class Wfst private (
     * arcs. The result is array-identical to the unfiltered expansion's.
     * In the error-model step the left machine is the window's chain, and
     * on the benchmark model ~90% of the states the unfiltered expansion
-    * creates are such dead ends. */
+    * creates are such dead ends.
+    *
+    * `next` (arcSort'd, optional) is the machine the result will be
+    * composed with next. When it is given and no output string of the
+    * expanded product is read by `next` (see `completes`), the result
+    * is `Wfst.emptyFst` and the assembly is skipped. That is exact for a
+    * caller that composes the result with `next` and keeps nothing when
+    * that product has no accepting path, as `composePruned` does: the
+    * pruned result's arcs are a subset of the expansion's, so it has no
+    * string `next` reads either. */
   def composeBoundedPruned(that: Wfst, maxWeight: Double,
-      pruneTh: Double): Wfst = {
+      pruneTh: Double, next: Wfst = null): Wfst = {
     if (this.numStates == 0 || that.numStates == 0) return Wfst.emptyFst
     val sc = Wfst.scratch.get()
-    assemblePruned(sc, expandBounded(that, maxWeight, sc), that, pruneTh)
+    val n = expandBounded(that, maxWeight, sc)
+    if (next != null && !completes(sc, n, that, next)) Wfst.emptyFst
+    else assemblePruned(sc, n, that, pruneTh)
+  }
+
+  /** The completion check (label lookahead one cascade step ahead,
+    * Allauzen, Riley & Schalkwyk 2009): can some accepting path of the
+    * product just expanded into scratch (`nStates` states, live ranges
+    * in sc.sink, state 0 the start) be matched by an accepting path of
+    * `next`? An unweighted search over pairs (product state, next state)
+    * with the expander's trivial-eps-filter moves: joint on a product
+    * arc's output equal to `next`'s input label or to its Σ, left alone
+    * on an eps-output arc, right alone on an eps-input arc. It stops at
+    * the first pair that is final in both machines. */
+  private def completes(sc: Scratch, nStates: Int, that: Wfst,
+      next: Wfst): Boolean = {
+    if (next.numStates == 0) return false
+    val sink = sc.sink
+    val thisFin = this.finalWeightDense
+    val thatFin = that.finalWeightDense
+    val nextFin = next.finalWeightDense
+    val nextN = next.numStates
+    val dense = nStates.toLong * nextN <= Scratch.DenseMax
+    if (dense) sc.reachBits = Scratch.ensureLong(sc.reachBits, (nStates * nextN + 63) >>> 6)
+    else sc.reachSet.clear()
+    val bits = sc.reachBits
+    var n = 0  // bits set, their indices in sc.reachSeen
+    var sp = 0 // pairs still to expand, in sc.reachStack
+    def visit(s: Int, r: Int): Unit = {
+      val k = s.toLong << 32 | r
+      val fresh =
+        if (dense) {
+          val i = s * nextN + r
+          val word = bits(i >>> 6)
+          val unseen = (word & 1L << i) == 0
+          if (unseen) {
+            bits(i >>> 6) = word | 1L << i
+            if (n == sc.reachSeen.length)
+              sc.reachSeen = java.util.Arrays.copyOf(sc.reachSeen, n << 1)
+            sc.reachSeen(n) = i; n += 1
+          }
+          unseen
+        } else sc.reachSet.getOrElse(k, -1) < 0 && { sc.reachSet.put(k, 0); true }
+      if (fresh) {
+        if (sp == sc.reachStack.length)
+          sc.reachStack = java.util.Arrays.copyOf(sc.reachStack, sp << 1)
+        sc.reachStack(sp) = k; sp += 1
+      }
+    }
+    // depth first: the last move pushed is expanded first, and the
+    // expander emits a state's Σ (identity) arcs last, so a window the
+    // next machine reads as it stands completes without a wide search
+    visit(0, next.start)
+    var found = false
+    while (sp > 0 && !found) {
+      sp -= 1
+      val s = (sc.reachStack(sp) >>> 32).toInt
+      val r = sc.reachStack(sp).toInt
+      if (!thisFin(sc.pairA(s)).isInfinity && !thatFin(sc.pairB(s)).isInfinity &&
+          !nextFin(r).isInfinity) found = true
+      else {
+        val rLo = next.off(r); val rHi = next.off(r + 1)
+        var sigmaEnd = rLo
+        while (sigmaEnd < rHi && next.il(sigmaEnd) < Label.Eps) sigmaEnd += 1
+        var be = sigmaEnd
+        while (be < rHi && next.il(be) == Label.Eps) { visit(s, next.ds(be)); be += 1 }
+        var k = sc.rangeStart(s); val e = k + sc.rangeLen(s)
+        while (k < e) {
+          val o = sink.ol(k); val d = sink.ds(k)
+          if (o == Label.Eps) visit(d, r)
+          else {
+            var j = rLo
+            while (j < sigmaEnd) { visit(d, next.ds(j)); j += 1 }
+            var lo = be; var hi = rHi
+            while (lo < hi) {
+              val mid = (lo + hi) >>> 1
+              if (next.il(mid) < o) lo = mid + 1 else hi = mid
+            }
+            while (lo < rHi && next.il(lo) == o) { visit(d, next.ds(lo)); lo += 1 }
+          }
+          k += 1
+        }
+      }
+    }
+    var v = 0
+    while (v < n) { bits(sc.reachSeen(v) >>> 6) = 0L; v += 1 } // all zero again
+    found
   }
 
   /** Weight-bounded SPFA product expansion into scratch; returns the

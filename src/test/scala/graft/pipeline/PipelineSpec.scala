@@ -41,7 +41,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(mx.docs.value == in.length.toLong)
     assert(mx.textSpans.value == text.length.toLong)
     assert(mx.mediaSpans.value == (spans.length - text.length).toLong)
-    assert(mx.chars.value == text.map(_._1.text.length.toLong).sum)
+    assert(mx.chars.value ==
+      text.map { case (s, _) => s.text.codePointCount(0, s.text.length).toLong }.sum)
     assert(mx.spansChanged.value ==
       text.count { case (a, b) => a.text != b.text }.toLong)
   }
@@ -84,6 +85,14 @@ class PipelineSpec extends AnyFunSuite {
       assert(metrics.mediaSpans.value > 0L)
       assert(metrics.spansChanged.value > 0L)
     }
+  }
+
+  test("Metrics.chars counts code points, as Spark's length() does") {
+    val mx = Metrics(spark)
+    val text = "\uD835\uDD04bc" // 𝔄bc: a surrogate pair and two letters
+    CorrectionJob.correctSpans(Doc("d", Seq(Span("text", text, "", 0))), identity, Some(mx))
+    assert(mx.chars.value == 3L)
+    assert(spark.sql(s"SELECT length('$text')").head().getInt(0) == 3)
   }
 
   test("LM-rescored job equals the per-doc sequential fold") {

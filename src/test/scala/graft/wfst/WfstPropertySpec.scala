@@ -2,7 +2,7 @@ package graft.wfst
 
 import graft.Fixtures
 import graft.align.{Aligner, Distance}
-import graft.correct.CompiledModel
+import graft.correct.{CompiledModel, Corrector}
 import graft.tokenize.Tokenizer
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -201,27 +201,31 @@ class WfstPropertySpec extends AnyFunSuite {
   }
   private lazy val fixtureWindows = fixtureLines.flatMap(windowsOf).distinct
 
+  /** distinctOutputs with windowAlternatives' retry on the eps-free
+    * machine (eps-cyclic or over-budget last steps). */
+  private def outputs(f: Wfst): Seq[(String, Double)] =
+    try f.distinctOutputs()
+    catch { case _: IllegalStateException => f.rmEpsilon(trim = false).distinctOutputs() }
+  private lazy val alphabet = fixtureLines.mkString.distinct
+  /** One to three random edits (delete, substitute, insert) of `s`. */
+  private def perturb(s: String, rng: scala.util.Random): String = {
+    val b = new StringBuilder(s)
+    for (_ <- 0 to rng.nextInt(2)) {
+      val i = rng.nextInt(b.length + 1)
+      rng.nextInt(3) match {
+        case 0 if i < b.length => b.deleteCharAt(i)
+        case 1 if i < b.length => b.setCharAt(i, alphabet(rng.nextInt(alphabet.length)))
+        case _ => b.insert(i, alphabet(rng.nextInt(alphabet.length)))
+      }
+    }
+    b.result()
+  }
+
   test("cascade steps == RefFst on fixture windows and random perturbations") {
     val pw = model.pruningWeight
     val err = model.errorFst.get
-    def outputs(f: Wfst): Seq[(String, Double)] =
-      try f.distinctOutputs()
-      catch { case _: IllegalStateException => f.rmEpsilon(trim = false).distinctOutputs() }
     val rng = new scala.util.Random(20261017L)
-    val alphabet = fixtureLines.mkString.distinct
-    def perturb(s: String): String = {
-      val b = new StringBuilder(s)
-      for (_ <- 0 to rng.nextInt(2)) {
-        val i = rng.nextInt(b.length + 1)
-        rng.nextInt(3) match {
-          case 0 if i < b.length => b.deleteCharAt(i)
-          case 1 if i < b.length => b.setCharAt(i, alphabet(rng.nextInt(alphabet.length)))
-          case _ => b.insert(i, alphabet(rng.nextInt(alphabet.length)))
-        }
-      }
-      b.result()
-    }
-    val perturbed = Seq.fill(200)(perturb(fixtureWindows(rng.nextInt(fixtureWindows.size))))
+    val perturbed = Seq.fill(200)(perturb(fixtureWindows(rng.nextInt(fixtureWindows.size)), rng))
     for (win <- fixtureWindows ++ perturbed) {
       val in = Wfst.acceptor(win)
       val e = in.composeBoundedPruned(err, pw, pw)
@@ -245,6 +249,110 @@ class WfstPropertySpec extends AnyFunSuite {
       "hash-path lexicon step")
   }
 
+  /** A machine's arrays, weights as their bits: equal iff the machines
+    * are bit-identical. */
+  private def arrays(f: Wfst): Seq[Seq[Long]] =
+    Seq(Seq(f.start.toLong, f.numStates.toLong), f.off.toSeq.map(_.toLong),
+      f.il.toSeq.map(_.toLong), f.ol.toSeq.map(_.toLong),
+      f.wt.toSeq.map(java.lang.Double.doubleToLongBits), f.ds.toSeq.map(_.toLong),
+      f.finState.toSeq.map(_.toLong), f.finWt.toSeq.map(java.lang.Double.doubleToLongBits))
+
+  private def altBits(alts: Seq[(String, Double)]): Seq[(String, Long)] =
+    alts.map { case (t, w) => (t, java.lang.Double.doubleToLongBits(w)) }
+
+  test("completion check: windowAlternatives == the unchecked cascade bit for bit") {
+    val pw = model.pruningWeight
+    val err = model.errorFst.get
+    // the cascade without the completion check (3-argument error step)
+    def unchecked(win: String): Seq[(String, Double)] = {
+      var w = Wfst.acceptor(win).composeBoundedPruned(err, pw, pw)
+        .rmEpsilon(trim = false).composePruned(model.windowFst, pw)
+      if (!win.contains(' ')) {
+        val len = win.codePointCount(0, win.length)
+        w = w.union(Wfst.acceptor(win, model.rejectionWeight * (len + 2)))
+      }
+      outputs(w)
+    }
+    def inLexicon(win: String): Boolean =
+      Wfst.acceptor(win).composePruned(model.windowFst, pw).finState.nonEmpty
+    val rng = new scala.util.Random(20261019L)
+    val letters = alphabet.filter(_.isLetter)
+    val oov = Iterator.continually(
+      Seq.fill(2 + rng.nextInt(8))(letters(rng.nextInt(letters.length))).mkString)
+      .filterNot(inLexicon).take(300).toSeq
+    val perturbed = Seq.fill(200)(perturb(fixtureWindows(rng.nextInt(fixtureWindows.size)), rng))
+    val wins = (fixtureWindows ++ perturbed ++ oov ++
+      oov.sliding(2).map(_.mkString(" "))).distinct
+    var skipped = 0
+    for (win <- wins) {
+      val got = Corrector.windowAlternatives(win, model, null)
+        .map(a => (a.text, java.lang.Double.doubleToLongBits(a.weight)))
+      assert(got == altBits(unchecked(win)), s"window '$win'")
+      val checked = Wfst.acceptor(win).composeBoundedPruned(err, pw, pw, model.windowFst)
+      if (checked eq Wfst.emptyFst) skipped += 1
+      else assert(arrays(checked) ==
+        arrays(Wfst.acceptor(win).composeBoundedPruned(err, pw, pw)), s"error step '$win'")
+    }
+    // both branches: random tokens the window FST cannot complete, and
+    // every in-lexicon fixture window completes
+    assert(oov.exists(t =>
+      Wfst.acceptor(t).composeBoundedPruned(err, pw, pw, model.windowFst) eq Wfst.emptyFst))
+    val inLex = fixtureWindows.filter(inLexicon)
+    assert(inLex.nonEmpty)
+    for (win <- inLex) {
+      val checked = Wfst.acceptor(win).composeBoundedPruned(err, pw, pw, model.windowFst)
+      assert(checked.finState.nonEmpty, s"in-lexicon window '$win' skipped")
+    }
+    assert(skipped > 0 && skipped < wins.size, s"$skipped of ${wins.size} skipped")
+    // two lines as one window: the window FST widened to their token
+    // count reads it (a pair space over Scratch.DenseMax, so the check
+    // takes its hash-set path), the 3-word window FST does not
+    val line = Fixtures.trainingPairs(0)._2 + " " + Fixtures.trainingPairs(1)._2
+    val wide = model.withWordsPerWindow(Tokenizer.splitInputString(line).length)
+    val in = Wfst.acceptor(line)
+    val plain = in.composeBoundedPruned(err, pw, pw)
+    assert(plain.numStates.toLong * wide.windowFst.numStates > Scratch.DenseMax)
+    assert(arrays(in.composeBoundedPruned(err, pw, pw, wide.windowFst)) == arrays(plain))
+    assert(in.composeBoundedPruned(err, pw, pw, model.windowFst) eq Wfst.emptyFst)
+  }
+
+  test("completion check: a hand-built next with Σ and eps-input arcs == RefFst") {
+    import Label.{Eps, Sigma}
+    val (a, b, c) = ('a'.toInt, 'b'.toInt, 'c'.toInt)
+    // next1 reads [a] Σ [b]: eps-input arcs skip the a (weighted) and
+    // the b (with output c)
+    val next1 = Wfst(0, Map(3 -> 0.5), Array(
+      Array(Arc(Eps, Eps, 0.25, 1), Arc(a, a, 0.0, 1)),
+      Array(Arc(Sigma, Sigma, 0.0, 2)),
+      Array(Arc(b, b, 0.0, 3), Arc(Eps, c, 0.5, 3)),
+      Array.empty[Arc])).arcSort
+    // next2 reads [c] [Σ], eps-input arcs (one with output a) skipping each
+    val next2 = Wfst(0, Map(2 -> 0.0), Array(
+      Array(Arc(c, c, 0.0, 1), Arc(Eps, a, 0.0, 1)),
+      Array(Arc(Eps, Eps, 0.0, 2), Arc(Sigma, b, 0.0, 2)),
+      Array.empty[Arc])).arcSort
+    val rng = new scala.util.Random(4243L)
+    var empties, kept = 0
+    for (i <- 0 until 400; next <- Seq(next1, next2)) {
+      val left = randomLeft(rng)
+      val right = randomRight(rng)
+      for ((maxW, th) <- Seq((Double.PositiveInfinity, 100.0), (6.0, 6.0), (3.0, 1.0))) {
+        val plain = left.composeBoundedPruned(right, maxW, th)
+        val checked = left.composeBoundedPruned(right, maxW, th, next)
+        val completes = RefFst.outputs(RefFst.composePruned(
+          RefFst.composeBoundedPruned(left, right, maxW, th), next, 100.0)).nonEmpty
+        val clue = s"case $i maxW=$maxW th=$th left=${left.arcs.toSeq.map(_.toSeq)} " +
+          s"finals=${left.finals} right=${right.arcs.toSeq.map(_.toSeq)} finals=${right.finals}"
+        if (checked eq Wfst.emptyFst) {
+          assert(!completes, clue); empties += 1
+        } else {
+          assert(arrays(checked) == arrays(plain), clue); kept += 1
+        }
+      }
+    }
+    assert(empties > 0 && kept > 0, s"$empties empty, $kept kept")
+  }
+
   private def serialize(m: CompiledModel): Array[Byte] = {
     val bo = new java.io.ByteArrayOutputStream()
     val oo = new java.io.ObjectOutputStream(bo)
@@ -262,12 +370,16 @@ class WfstPropertySpec extends AnyFunSuite {
     // so they also race to build and read its lazy lookahead tables
     // (Wfst.lookahead); those are transient: the model's bytes are the
     // same before and after its first use.
+    // Each thread also runs Corrector.processWindow, whose completion
+    // check uses the scratch between the expansion and the assembly;
+    // its machine must match the serial one array for array.
     val wins = fixtureWindows.take(48)
     val pw = model.pruningWeight
-    def run(m: CompiledModel, i: Int): Seq[(String, Double)] =
-      Wfst.acceptor(wins(i)).composeBoundedPruned(m.errorFst.get, pw, pw)
+    def run(m: CompiledModel, i: Int): (Seq[(String, Double)], Seq[Seq[Long]]) =
+      (Wfst.acceptor(wins(i)).composeBoundedPruned(m.errorFst.get, pw, pw)
         .rmEpsilon(trim = false).composePruned(m.windowFst, pw)
-        .distinctOutputs()
+        .distinctOutputs(),
+        arrays(Corrector.processWindow(wins(i), m)))
     val serial = wins.indices.map(run(model, _))
     val bytes = serialize(model)
     val fresh = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
@@ -275,7 +387,7 @@ class WfstPropertySpec extends AnyFunSuite {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
     try {
       val futures = wins.indices.flatMap(i => (0 until 4).map { _ =>
-        pool.submit(new java.util.concurrent.Callable[(Int, Seq[(String, Double)])] {
+        pool.submit(new java.util.concurrent.Callable[(Int, (Seq[(String, Double)], Seq[Seq[Long]]))] {
           def call() = (i, run(fresh, i))
         })
       })
