@@ -273,9 +273,10 @@ object Corrector {
     // (Wfst.composeBoundedPruned).
     // Completion check: the step is given the window FST as `next`. When
     // no output string of its expansion is a window-FST input (most
-    // windows of novel text), it returns the empty machine at once and
-    // skips the assembly, and the lexicon step below costs next to
-    // nothing. The result is the same machine as without the check:
+    // windows of novel text), it returns the empty machine and stops the
+    // expansion at the first chain layer where the check's search has
+    // nothing left, and the lexicon step below costs next to nothing.
+    // The result is the same machine as without the check:
     //  - every arc of the pruned error machine is an arc of the expansion;
     //  - rmEpsilon keeps the language;
     //  - the lexicon step returns Wfst.emptyFst whenever its product has

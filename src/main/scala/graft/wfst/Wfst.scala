@@ -47,15 +47,24 @@ private[wfst] final class Scratch {
   var remap = new Array[Int](1 << 10)
   var fwd = new Array[Double](1 << 10)
   var bwd = new Array[Double](1 << 10)
-  // completion check (composeBoundedPruned's `next`): the visited
-  // (product state, next state) pairs, as a bitset over the pair space
-  // when it fits Scratch.DenseMax (all zero between calls: the check
-  // clears the bits of the pairs it lists in reachSeen) or else as a
-  // hash set, and the search stack
+  // completion check (composeBoundedPruned's `next`), run inside
+  // expandBounded. The visited (product state s, next state r) pairs:
+  // pair index s * next.numStates + r below Scratch.DenseMax in the
+  // bitset reachBits (all zero between calls: every exit of the search
+  // clears the reachSeenN bits it lists in reachSeen), above it in the
+  // hash set reachSet. The pairs still to expand are the first
+  // reachDepth entries of reachStack; while the search is paused, the
+  // top one is the parked pair, whose layer is not final yet.
   var reachBits = new Array[Long](1 << 8)
   var reachSeen = new Array[Int](1 << 8)
+  var reachSeenN = 0
   val reachSet = new LongIntMap(1 << 6)
   var reachStack = new Array[Long](1 << 8)
+  var reachDepth = 0
+  // queued product states per left-machine layer: an entry counts from
+  // its push until its pop's expansion ends, so a layer whose count and
+  // every lower layer's count are 0 gets no state, distance or arc again
+  var layerQueued = new Array[Int](1 << 6)
   // rmEpsilon closure FIFO (SPFA relaxation; scala PriorityQueue was
   // tried first — it routes every enqueue through Seq+addAll+iterator
   // and boxes tuples — then a primitive heap, but closures are tiny
@@ -82,6 +91,40 @@ private[wfst] final class Scratch {
     denseEpoch += 1
   }
 
+  /** Marks the completion search's pair (s, r) visited (`nextN` =
+    * next.numStates) and pushes it when it was not. */
+  def reach(s: Int, r: Int, nextN: Int): Unit = {
+    val k = s.toLong << 32 | r
+    val i = s.toLong * nextN + r
+    val fresh =
+      if (i < Scratch.DenseMax) {
+        val w = i.toInt >>> 6
+        if (w >= reachBits.length) reachBits = java.util.Arrays.copyOf(reachBits,
+          math.min(math.max(reachBits.length << 1, w + 1), Scratch.DenseMax >>> 6))
+        val word = reachBits(w)
+        val unseen = (word & 1L << i) == 0
+        if (unseen) {
+          reachBits(w) = word | 1L << i
+          if (reachSeenN == reachSeen.length)
+            reachSeen = java.util.Arrays.copyOf(reachSeen, reachSeenN << 1)
+          reachSeen(reachSeenN) = i.toInt; reachSeenN += 1
+        }
+        unseen
+      } else reachSet.getOrElse(k, -1) < 0 && { reachSet.put(k, 0); true }
+    if (fresh) {
+      if (reachDepth == reachStack.length)
+        reachStack = java.util.Arrays.copyOf(reachStack, reachDepth << 1)
+      reachStack(reachDepth) = k; reachDepth += 1
+    }
+  }
+
+  /** Ends a completion search: its bits are zero again, its stack empty. */
+  def endReach(): Unit = {
+    var v = 0
+    while (v < reachSeenN) { reachBits(reachSeen(v) >>> 6) = 0L; v += 1 }
+    reachSeenN = 0; reachDepth = 0
+  }
+
   def growStates(n: Int): Unit = if (n > pairA.length) {
     val c = math.max(pairA.length << 1, n)
     pairA = java.util.Arrays.copyOf(pairA, c)
@@ -101,7 +144,14 @@ private[wfst] object Scratch {
     * step ≈70–220 error-step states × 1,803 window-FST states (≈125k–
     * 400k), so both take the dense path. Above this the hash map takes
     * over; in the specs only the widened window of `WfstPropertySpec`
-    * gets there. */
+    * gets there.
+    *
+    * It also bounds the completion check's visited bitset
+    * (`reachBits`, 128 KB at most): a (product state, next state) pair
+    * whose index s * next.numStates + r is below it takes a bit, and
+    * one at or above it goes to the hash set `reachSet`. The product's
+    * state count is not known while the search runs inside the
+    * expansion, so the split is per pair. */
   val DenseMax = 1 << 20
 
   def ensureInt(a: Array[Int], n: Int): Array[Int] =
@@ -938,110 +988,117 @@ final class Wfst private (
     * creates are such dead ends.
     *
     * `next` (arcSort'd, optional) is the machine the result will be
-    * composed with next. When it is given and no output string of the
-    * expanded product is read by `next` (see `completes`), the result
-    * is `Wfst.emptyFst` and the assembly is skipped. That is exact for a
-    * caller that composes the result with `next` and keeps nothing when
-    * that product has no accepting path, as `composePruned` does: the
-    * pruned result's arcs are a subset of the expansion's, so it has no
-    * string `next` reads either. */
+    * composed with next. When it is given, the expansion runs a
+    * completion check (label lookahead one cascade step ahead,
+    * Allauzen, Riley & Schalkwyk 2009): an unweighted depth-first search
+    * over (product state, `next` state) pairs with the expander's
+    * trivial-eps-filter moves (joint on a product arc's output equal to
+    * `next`'s input label or to its Σ, left alone on an eps-output arc,
+    * right alone on an eps-input arc), which stops at the first pair
+    * final in all three machines. When it finds none, no output string
+    * of the expanded product is read by `next`, and the result is
+    * `Wfst.emptyFst`. That is exact for a caller that composes the
+    * result with `next` and keeps nothing when that product has no
+    * accepting path, as `composePruned` does: the pruned result's arcs
+    * are a subset of the expansion's, so it has no string `next` reads
+    * either.
+    *
+    * The search runs inside the expansion (Mohri 2002: a distance is
+    * final once everything before it in topological order is).
+    *  - Layers. When every arc of `this` leads to a higher state id (a
+    *    forward-numbered machine, as `Wfst.acceptor` chains are), a
+    *    product state's layer is its left state, and no product arc
+    *    leads to a lower layer. Any other left machine, cyclic ones
+    *    included, is one layer.
+    *  - Finality invariant. The expander counts its queued states per
+    *    layer, each until its pop's expansion ends. States at layers
+    *    <= k are created, re-queued and expanded only by the expansion
+    *    of states at layers <= k, so once none of them is queued, their
+    *    set, their distances and their arc ranges are final: those of
+    *    the finished expansion.
+    *  - The search expands a pair only once its layer is final. When the
+    *    pair on top of its stack is at a later layer, it pauses there
+    *    (the pair is parked) until that layer is final, so it visits the
+    *    pairs in the order a search after the expansion would, and a
+    *    window that completes costs the same search.
+    *  - Abort rule. When the search has no pair left to expand, parked
+    *    or not, it has expanded every pair it can reach, each on its
+    *    final arcs, and none is final: the expansion stops at once and
+    *    the result is `Wfst.emptyFst`. Otherwise the expansion runs to
+    *    its end and the result is assembled as without `next`, array for
+    *    array. A one-layer machine's layer is final only when the queue
+    *    drains, so its search runs after the expansion. */
   def composeBoundedPruned(that: Wfst, maxWeight: Double,
       pruneTh: Double, next: Wfst = null): Wfst = {
     if (this.numStates == 0 || that.numStates == 0) return Wfst.emptyFst
     val sc = Wfst.scratch.get()
-    val n = expandBounded(that, maxWeight, sc)
-    if (next != null && !completes(sc, n, that, next)) Wfst.emptyFst
-    else assemblePruned(sc, n, that, pruneTh)
+    val n = expandBounded(that, maxWeight, sc, next)
+    if (n < 0) Wfst.emptyFst else assemblePruned(sc, n, that, pruneTh)
   }
 
-  /** The completion check (label lookahead one cascade step ahead,
-    * Allauzen, Riley & Schalkwyk 2009): can some accepting path of the
-    * product just expanded into scratch (`nStates` states, live ranges
-    * in sc.sink, state 0 the start) be matched by an accepting path of
-    * `next`? An unweighted search over pairs (product state, next state)
-    * with the expander's trivial-eps-filter moves: joint on a product
-    * arc's output equal to `next`'s input label or to its Σ, left alone
-    * on an eps-output arc, right alone on an eps-input arc. It stops at
-    * the first pair that is final in both machines. */
-  private def completes(sc: Scratch, nStates: Int, that: Wfst,
-      next: Wfst): Boolean = {
-    if (next.numStates == 0) return false
+  /** Advances the completion search of `composeBoundedPruned` over the
+    * product in scratch: pops pairs from sc.reachStack and expands those
+    * whose layer is below `low` (final), pushing the unseen pairs their
+    * moves reach. Returns `Wfst.SearchFound` at the first pair final in
+    * all three machines, `Wfst.SearchDone` when no pair is left, or else
+    * the layer of the parked pair on top of the stack. The first two
+    * exits clear the visited bits. */
+  private def completionSearch(sc: Scratch, that: Wfst, next: Wfst,
+      low: Int, layerMask: Int): Int = {
     val sink = sc.sink
     val thisFin = this.finalWeightDense
     val thatFin = that.finalWeightDense
     val nextFin = next.finalWeightDense
     val nextN = next.numStates
-    val dense = nStates.toLong * nextN <= Scratch.DenseMax
-    if (dense) sc.reachBits = Scratch.ensureLong(sc.reachBits, (nStates * nextN + 63) >>> 6)
-    else sc.reachSet.clear()
-    val bits = sc.reachBits
-    var n = 0  // bits set, their indices in sc.reachSeen
-    var sp = 0 // pairs still to expand, in sc.reachStack
-    def visit(s: Int, r: Int): Unit = {
-      val k = s.toLong << 32 | r
-      val fresh =
-        if (dense) {
-          val i = s * nextN + r
-          val word = bits(i >>> 6)
-          val unseen = (word & 1L << i) == 0
-          if (unseen) {
-            bits(i >>> 6) = word | 1L << i
-            if (n == sc.reachSeen.length)
-              sc.reachSeen = java.util.Arrays.copyOf(sc.reachSeen, n << 1)
-            sc.reachSeen(n) = i; n += 1
-          }
-          unseen
-        } else sc.reachSet.getOrElse(k, -1) < 0 && { sc.reachSet.put(k, 0); true }
-      if (fresh) {
-        if (sp == sc.reachStack.length)
-          sc.reachStack = java.util.Arrays.copyOf(sc.reachStack, sp << 1)
-        sc.reachStack(sp) = k; sp += 1
-      }
-    }
     // depth first: the last move pushed is expanded first, and the
     // expander emits a state's Σ (identity) arcs last, so a window the
     // next machine reads as it stands completes without a wide search
-    visit(0, next.start)
-    var found = false
-    while (sp > 0 && !found) {
-      sp -= 1
-      val s = (sc.reachStack(sp) >>> 32).toInt
-      val r = sc.reachStack(sp).toInt
+    var result = Wfst.SearchDone
+    while (sc.reachDepth > 0 && result == Wfst.SearchDone) {
+      val top = sc.reachStack(sc.reachDepth - 1)
+      val s = (top >>> 32).toInt
+      val r = top.toInt
+      val layer = sc.pairA(s) & layerMask
       if (!thisFin(sc.pairA(s)).isInfinity && !thatFin(sc.pairB(s)).isInfinity &&
-          !nextFin(r).isInfinity) found = true
+          !nextFin(r).isInfinity) result = Wfst.SearchFound
+      else if (layer >= low) result = layer // parked
       else {
+        sc.reachDepth -= 1
         val rLo = next.off(r); val rHi = next.off(r + 1)
         var sigmaEnd = rLo
         while (sigmaEnd < rHi && next.il(sigmaEnd) < Label.Eps) sigmaEnd += 1
         var be = sigmaEnd
-        while (be < rHi && next.il(be) == Label.Eps) { visit(s, next.ds(be)); be += 1 }
+        while (be < rHi && next.il(be) == Label.Eps) { sc.reach(s, next.ds(be), nextN); be += 1 }
         var k = sc.rangeStart(s); val e = k + sc.rangeLen(s)
         while (k < e) {
           val o = sink.ol(k); val d = sink.ds(k)
-          if (o == Label.Eps) visit(d, r)
+          if (o == Label.Eps) sc.reach(d, r, nextN)
           else {
             var j = rLo
-            while (j < sigmaEnd) { visit(d, next.ds(j)); j += 1 }
+            while (j < sigmaEnd) { sc.reach(d, next.ds(j), nextN); j += 1 }
             var lo = be; var hi = rHi
             while (lo < hi) {
               val mid = (lo + hi) >>> 1
               if (next.il(mid) < o) lo = mid + 1 else hi = mid
             }
-            while (lo < rHi && next.il(lo) == o) { visit(d, next.ds(lo)); lo += 1 }
+            while (lo < rHi && next.il(lo) == o) { sc.reach(d, next.ds(lo), nextN); lo += 1 }
           }
           k += 1
         }
       }
     }
-    var v = 0
-    while (v < n) { bits(sc.reachSeen(v) >>> 6) = 0L; v += 1 } // all zero again
-    found
+    if (result < 0) sc.endReach()
+    result
   }
 
   /** Weight-bounded SPFA product expansion into scratch; returns the
     * product state count. sc.dist holds each state's exact shortest
-    * prefix distance on return. */
-  private def expandBounded(that: Wfst, maxWeight: Double, sc: Scratch): Int = {
+    * prefix distance on return. With `next`, it runs the completion
+    * check of `composeBoundedPruned` and returns -1, possibly before
+    * the expansion ends, when `next` reads none of the outputs. */
+  private def expandBounded(that: Wfst, maxWeight: Double, sc: Scratch,
+      next: Wfst): Int = {
+    if (next != null && next.numStates == 0) return -1
     val lim = maxWeight + 1e-9
     val stateIds = sc.map; stateIds.clear()
     // arcs in the scratch sink; per-state (start,len) ranges — a
@@ -1054,6 +1111,8 @@ final class Wfst private (
     sc.look = Scratch.ensureInt(sc.look, this.numStates)
     val look = sc.look
     val thisFin = this.finalWeightDense
+    val checking = next != null
+    var fwd = checking // every left arc leads to a higher state id
     var ls = 0
     while (ls < this.numStates) {
       val k = this.off(ls)
@@ -1062,8 +1121,14 @@ final class Wfst private (
         if (n == 0) Lookahead.End
         else if (n == 1 && this.ol(k) > 0 && thisFin(ls).isInfinity) this.ol(k)
         else Lookahead.Free
+      var a = k
+      while (fwd && a < k + n) { fwd = this.ds(a) > ls; a += 1 }
       ls += 1
     }
+    // the completion check's layers: left state & layerMask, so the
+    // left states or one layer (see composeBoundedPruned)
+    val layerMask = if (fwd) -1 else 0
+    val nLayers = if (fwd) this.numStates else 1
     // dense fast path: direct-indexed id table when the product space
     // fits (the error-model cascade step is ~12 x ~1,754 — one array
     // read replaces three dependent hash-probe cache misses)
@@ -1115,6 +1180,19 @@ final class Wfst private (
       sc.queue(qTail) = t; qTail += 1
     }
     sc.flags(s0) = true; push(s0)
+    // every layer below `low` is final; the search waits while its
+    // parked pair's layer `parked` is not, and is over once `searching`
+    // is false
+    var low = 0
+    var parked = this.start & layerMask
+    var searching = checking
+    if (checking) {
+      sc.layerQueued = Scratch.ensureInt(sc.layerQueued, nLayers)
+      java.util.Arrays.fill(sc.layerQueued, 0, nLayers, 0)
+      sc.layerQueued(parked) = 1 // s0
+      sc.reachSet.clear()
+      sc.reach(s0, next.start, next.numStates)
+    }
     while (qHead < qTail) {
       val cur = sc.queue(qHead); qHead += 1
       sc.flags(cur) = false
@@ -1128,7 +1206,10 @@ final class Wfst private (
           sink.add(il2, ol2, w, t)
           if (nd < sc.dist(t) - 1e-15) {
             sc.dist(t) = nd
-            if (!sc.flags(t)) { sc.flags(t) = true; push(t) }
+            if (!sc.flags(t)) {
+              sc.flags(t) = true; push(t)
+              if (checking) sc.layerQueued(dp & layerMask) += 1
+            }
           }
         }
       }
@@ -1197,6 +1278,15 @@ final class Wfst private (
       }
       sc.rangeStart(cur) = from
       sc.rangeLen(cur) = sink.n - from
+      if (searching) {
+        sc.layerQueued(p & layerMask) -= 1
+        while (low < nLayers && sc.layerQueued(low) == 0) low += 1
+        if (low > parked) {
+          parked = completionSearch(sc, that, next, low, layerMask)
+          if (parked == Wfst.SearchDone) return -1
+          searching = parked != Wfst.SearchFound
+        }
+      }
     }
     nStates
   }
@@ -1485,6 +1575,10 @@ object Wfst {
     finals.foreach { case (st, w) => b.setFinal(st, w) }
     b.result(start)
   }
+
+  // completionSearch's exits other than a parked pair's layer (>= 0)
+  private final val SearchFound = -1
+  private final val SearchDone = -2
 
   /** The empty-language machine. */
   val emptyFst: Wfst = apply(0, Map.empty, Array(Array.empty[Arc]))

@@ -305,32 +305,38 @@ class WfstPropertySpec extends AnyFunSuite {
     }
     assert(skipped > 0 && skipped < wins.size, s"$skipped of ${wins.size} skipped")
     // two lines as one window: the window FST widened to their token
-    // count reads it (a pair space over Scratch.DenseMax, so the check
-    // takes its hash-set path), the 3-word window FST does not
+    // count reads it (its search reaches pairs whose index is over
+    // Scratch.DenseMax, which go to the hash set), the 3-word window FST
+    // does not
     val line = Fixtures.trainingPairs(0)._2 + " " + Fixtures.trainingPairs(1)._2
     val wide = model.withWordsPerWindow(Tokenizer.splitInputString(line).length)
     val in = Wfst.acceptor(line)
     val plain = in.composeBoundedPruned(err, pw, pw)
     assert(plain.numStates.toLong * wide.windowFst.numStates > Scratch.DenseMax)
     assert(arrays(in.composeBoundedPruned(err, pw, pw, wide.windowFst)) == arrays(plain))
+    assert(Wfst.scratch.get().reachSet.size > 0, "the search never left the bitset")
     assert(in.composeBoundedPruned(err, pw, pw, model.windowFst) eq Wfst.emptyFst)
   }
 
-  test("completion check: a hand-built next with Σ and eps-input arcs == RefFst") {
+  // hand-built next machines with Σ and eps-input arcs
+  private val (next1, next2) = {
     import Label.{Eps, Sigma}
     val (a, b, c) = ('a'.toInt, 'b'.toInt, 'c'.toInt)
     // next1 reads [a] Σ [b]: eps-input arcs skip the a (weighted) and
     // the b (with output c)
-    val next1 = Wfst(0, Map(3 -> 0.5), Array(
+    (Wfst(0, Map(3 -> 0.5), Array(
       Array(Arc(Eps, Eps, 0.25, 1), Arc(a, a, 0.0, 1)),
       Array(Arc(Sigma, Sigma, 0.0, 2)),
       Array(Arc(b, b, 0.0, 3), Arc(Eps, c, 0.5, 3)),
-      Array.empty[Arc])).arcSort
+      Array.empty[Arc])).arcSort,
     // next2 reads [c] [Σ], eps-input arcs (one with output a) skipping each
-    val next2 = Wfst(0, Map(2 -> 0.0), Array(
+    Wfst(0, Map(2 -> 0.0), Array(
       Array(Arc(c, c, 0.0, 1), Arc(Eps, a, 0.0, 1)),
       Array(Arc(Eps, Eps, 0.0, 2), Arc(Sigma, b, 0.0, 2)),
-      Array.empty[Arc])).arcSort
+      Array.empty[Arc])).arcSort)
+  }
+
+  test("completion check: a hand-built next with Σ and eps-input arcs == RefFst") {
     val rng = new scala.util.Random(4243L)
     var empties, kept = 0
     for (i <- 0 until 400; next <- Seq(next1, next2)) {
@@ -353,6 +359,117 @@ class WfstPropertySpec extends AnyFunSuite {
     assert(empties > 0 && kept > 0, s"$empties empty, $kept kept")
   }
 
+  /** Does `next` read an output string of the bounded product of `left`
+    * and `right`, i.e. of the expansion before its prune? (RefFst with
+    * no prune; no path enumeration, so cyclic machines are fine.) */
+  private def refReads(left: Wfst, right: Wfst, maxW: Double, next: Wfst): Boolean = {
+    val e = RefFst.composeBoundedPruned(left, right, maxW, Double.PositiveInfinity)
+    !(e eq Wfst.emptyFst) && !(RefFst.composePruned(e, next, 0.0) eq Wfst.emptyFst)
+  }
+
+  /** `f` with state s renamed to perm(s). */
+  private def renumber(f: Wfst, perm: Int => Int): Wfst = {
+    val arcs = f.arcs
+    val out = new Array[Array[Arc]](f.numStates)
+    for (s <- 0 until f.numStates) out(perm(s)) = arcs(s).map(a => a.copy(dst = perm(a.dst)))
+    Wfst(perm(f.start), f.finals.map { case (s, w) => perm(s) -> w }, out)
+  }
+
+  /** An acceptor chain with back arcs and self-loops (a cyclic left). */
+  private def cyclicLeft(rng: scala.util.Random): Wfst = {
+    val n = 1 + rng.nextInt(5)
+    def lab = "abcd"(rng.nextInt(4)).toInt
+    val arcs = Array.tabulate(n + 1) { s =>
+      val b = Array.newBuilder[Arc]
+      if (s < n) { val l = lab; b += Arc(l, l, 0.0, s + 1) }
+      if (rng.nextInt(3) == 0) { val l = lab; b += Arc(l, l, rng.nextInt(8) / 16.0, rng.nextInt(s + 1)) }
+      b.result()
+    }
+    Wfst(0, Map(n -> 0.0), arcs)
+  }
+
+  /** The checked error step against RefFst (empty exactly when `next`
+    * reads no output of the bounded product) and against the 3-argument
+    * cascade (otherwise the same arrays; when empty, that cascade's
+    * next step has no accepting path). Returns whether it was empty. */
+  private def checkEarlyExit(left: Wfst, right: Wfst, maxW: Double, th: Double,
+      next: Wfst, clue: => String): Boolean = {
+    val plain = left.composeBoundedPruned(right, maxW, th)
+    val checked = left.composeBoundedPruned(right, maxW, th, next)
+    val empty = checked eq Wfst.emptyFst
+    assert(empty == !refReads(left, right, maxW, next), clue)
+    if (empty) assert(plain.rmEpsilon(trim = false).composePruned(next, th).finState.isEmpty, clue)
+    else assert(arrays(checked) == arrays(plain), clue)
+    empty
+  }
+
+  test("early exit: left machines not forward-numbered (reversed, cyclic) == RefFst and the 3-argument cascade") {
+    val rng = new scala.util.Random(4244L)
+    var empties, kept = 0
+    for (i <- 0 until 300) {
+      val fwd = randomLeft(rng)
+      val reversed = renumber(fwd, fwd.numStates - 1 - _)
+      val right = randomRight(rng)
+      val cyclic = cyclicLeft(rng)
+      for (left <- Seq(reversed, cyclic, renumber(cyclic, cyclic.numStates - 1 - _));
+           next <- Seq(next1, next2, Wfst.acceptor(
+             Seq.fill(rng.nextInt(5))("abcd"(rng.nextInt(4))).mkString));
+           (maxW, th) <- Seq((Double.PositiveInfinity, 100.0), (3.0, 1.0))) {
+        val clue = s"case $i maxW=$maxW left=${left.arcs.toSeq.map(_.toSeq)} " +
+          s"start=${left.start} finals=${left.finals} right=${right.arcs.toSeq.map(_.toSeq)} " +
+          s"finals=${right.finals} next=${next.arcs.toSeq.map(_.toSeq)}"
+        if (checkEarlyExit(left, right, maxW, th, next, clue)) empties += 1 else kept += 1
+      }
+    }
+    assert(empties > 100 && kept > 100, s"$empties empty, $kept kept")
+  }
+
+  test("early exit: an eps-input re-expansion within one layer carries the only completing path") {
+    import Label.Eps
+    val (a, b, x) = ('a'.toInt, 'b'.toInt, 'x'.toInt)
+    // On "ab" with bound 4, FIFO order expands (1, 5) first at distance
+    // 3 (through state 2), where its b:x arc (weight 2) is over the
+    // bound, and again at distance 0 (through 1 -> 3 -> 4), when it is
+    // not: only the second expansion has the arc "ax" needs.
+    val right = Wfst(0, Map(6 -> 0.0), Array(
+      Array(Arc(a, a, 0.0, 1), Arc(a, a, 3.0, 2)),
+      Array(Arc(Eps, Eps, 0.0, 3)),
+      Array(Arc(Eps, Eps, 0.0, 5)),
+      Array(Arc(Eps, Eps, 0.0, 4)),
+      Array(Arc(Eps, Eps, 0.0, 5)),
+      Array(Arc(b, x, 2.0, 6)),
+      Array.empty[Arc])).arcSort
+    val left = Wfst.acceptor("ab")
+    assert(!checkEarlyExit(left, right, 4.0, 4.0, Wfst.acceptor("ax"), "ax"))
+    assert(checkEarlyExit(left, right, 4.0, 4.0, Wfst.acceptor("ay"), "ay"))
+    // the same with the left machine reverse-numbered (one layer)
+    assert(!checkEarlyExit(renumber(left, 2 - _), right, 4.0, 4.0, Wfst.acceptor("ax"), "reversed"))
+  }
+
+  test("early exit: a frontier that dies at layer k stops the expansion there, for every k") {
+    val win = "wxyzwxyz"
+    val n = win.length
+    val identity = Wfst.sigmaStar.arcSort
+    val left = Wfst.acceptor(win)
+    assert(arrays(left.composeBoundedPruned(identity, 1.0, 1.0, Wfst.acceptor(win))) ==
+      arrays(left.composeBoundedPruned(identity, 1.0, 1.0)))
+    for (k <- 0 until n) {
+      // the identity product outputs `win`; next reads its first k
+      // characters and then only '#'
+      val next = Wfst.acceptor(win.take(k) + "#")
+      assert(checkEarlyExit(left, identity, 1.0, 1.0, next, s"k=$k"))
+      left.composeBoundedPruned(identity, 1.0, 1.0, next)
+      assert(Wfst.scratch.get().sink.n == k + 1, s"k=$k: arcs expanded before the exit")
+    }
+    // the same with the fixture error model: exact wherever it dies
+    val pw = model.pruningWeight
+    val err = model.errorFst.get
+    for (w <- fixtureWindows.take(6); k <- 0 until w.length) {
+      val next = Wfst.acceptor(w.take(k) + "#")
+      checkEarlyExit(Wfst.acceptor(w), err, pw, pw, next, s"'$w' k=$k")
+    }
+  }
+
   private def serialize(m: CompiledModel): Array[Byte] = {
     val bo = new java.io.ByteArrayOutputStream()
     val oo = new java.io.ObjectOutputStream(bo)
@@ -371,15 +488,27 @@ class WfstPropertySpec extends AnyFunSuite {
     // (Wfst.lookahead); those are transient: the model's bytes are the
     // same before and after its first use.
     // Each thread also runs Corrector.processWindow, whose completion
-    // check uses the scratch between the expansion and the assembly;
-    // its machine must match the serial one array for array.
+    // check searches the scratch during the expansion and may stop it;
+    // its machine must match the serial one array for array. Every task
+    // runs an aborted window (an out-of-lexicon token), a fixture window
+    // and another aborted one, so a thread's scratch goes from aborts to
+    // completions and back.
     val wins = fixtureWindows.take(48)
     val pw = model.pruningWeight
-    def run(m: CompiledModel, i: Int): (Seq[(String, Double)], Seq[Seq[Long]]) =
-      (Wfst.acceptor(wins(i)).composeBoundedPruned(m.errorFst.get, pw, pw)
-        .rmEpsilon(trim = false).composePruned(m.windowFst, pw)
-        .distinctOutputs(),
-        arrays(Corrector.processWindow(wins(i), m)))
+    val rng = new scala.util.Random(20261020L)
+    val letters = alphabet.filter(_.isLetter)
+    val aborted = Iterator.continually(
+      Seq.fill(3 + rng.nextInt(8))(letters(rng.nextInt(letters.length))).mkString)
+      .filter(t => Wfst.acceptor(t).composeBoundedPruned(model.errorFst.get, pw, pw,
+        model.windowFst) eq Wfst.emptyFst)
+      .take(wins.size + 1).toIndexedSeq
+    assert(wins.exists(w => !(Corrector.processWindow(w, model) eq Wfst.emptyFst)))
+    def run(m: CompiledModel, i: Int): Seq[(Seq[(String, Double)], Seq[Seq[Long]])] =
+      Seq(aborted(i), wins(i), aborted(i + 1)).map(win =>
+        (Wfst.acceptor(win).composeBoundedPruned(m.errorFst.get, pw, pw)
+          .rmEpsilon(trim = false).composePruned(m.windowFst, pw)
+          .distinctOutputs(),
+          arrays(Corrector.processWindow(win, m))))
     val serial = wins.indices.map(run(model, _))
     val bytes = serialize(model)
     val fresh = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
@@ -387,7 +516,7 @@ class WfstPropertySpec extends AnyFunSuite {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
     try {
       val futures = wins.indices.flatMap(i => (0 until 4).map { _ =>
-        pool.submit(new java.util.concurrent.Callable[(Int, (Seq[(String, Double)], Seq[Seq[Long]]))] {
+        pool.submit(new java.util.concurrent.Callable[(Int, Seq[(Seq[(String, Double)], Seq[Seq[Long]])])] {
           def call() = (i, run(fresh, i))
         })
       })
