@@ -79,7 +79,7 @@ object Bench {
 
   /** Viterbi without the window memo: every window takes the miss path
     * (the regime where window diversity dwarfs any cache). */
-  private val uncached: CorrectionJob.Decoder = { (m, _) =>
+  private val uncached: CorrectionJob.Decoder = { m =>
     val line: String => String = Corrector.correctLine(_, m, null)
     _ => line
   }

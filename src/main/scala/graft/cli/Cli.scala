@@ -225,8 +225,8 @@ object Process {
         // the count — without it each consumer re-parses and
         // re-corrects every page file
         val corrected = CorrectionJob.mapWithModel(lines, bc) {
-          (m, cache) => { case (file, id, text) =>
-            (file, id, Corrector.correctLine(text, m, cache))
+          m => { case (file, id, text) =>
+            (file, id, Corrector.correctLine(text, m, m.windowMemo))
           }
         }.toDF("file", "line_id", "text").persist()
         try {
@@ -240,8 +240,8 @@ object Process {
             a("input-suffix")) // process.py:168-169
         }).as[(String, String)]
         val out = CorrectionJob.mapWithModel(in, bc) {
-          (m, cache) => { case (id, line) =>
-            (id, Corrector.correctLine(line, m, cache))
+          m => { case (id, line) =>
+            (id, Corrector.correctLine(line, m, m.windowMemo))
           }
         }.toDF("line_id", "text")
         a.get("output-file") match {

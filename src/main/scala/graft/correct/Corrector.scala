@@ -51,6 +51,18 @@ final case class CompiledModel(
           wordsPerWindow = w)
       case _ => this
     }
+
+  /** This instance's window memo. A broadcast value is one instance per
+    * executor JVM, so its tasks share it, as the reference's fork pool
+    * shares its model (scripts/process.py:14,55-70); it dies with the
+    * instance, so no JVM-wide map is needed. Transient: a deserialized
+    * copy, or a `copy`, starts cold. */
+  def windowMemo: AltCache = {
+    val c = memo0
+    if (c != null) c
+    else synchronized { if (memo0 == null) memo0 = new WindowMemo; memo0 }
+  }
+  @transient @volatile private var memo0: WindowMemo = _
 }
 
 object CompiledModel {
@@ -206,49 +218,33 @@ trait AltCache {
   def getOrCompute(key: String)(f: => Seq[Alt]): Seq[Alt]
 }
 
-/** JVM-wide (= per-executor) thread-safe memo, shared across all tasks
-  * and waves — the true analogue of the reference's COW fork-pool model
-  * sharing (scripts/process.py:14,55-70): pay each distinct window once
-  * per executor, not once per task. Keyed weakly by model instance
-  * (broadcast values are one instance per executor JVM), so dropping
-  * the broadcast frees the memo. Insertion stops at `maxEntries`
-  * (lock-free reads keep serving the hot head of the Zipf curve). */
-object SharedWindowCache {
+/** The memo behind [[CompiledModel.windowMemo]]. Insertion stops at
+  * `MaxEntries`; lock-free reads keep serving the Zipf curve's hot head. */
+private[correct] final class WindowMemo extends AltCache {
   import java.util.concurrent.ConcurrentHashMap
   import java.util.concurrent.atomic.AtomicLong
-  private final class Entry(
-      val chm: ConcurrentHashMap[String, Seq[Alt]],
-      val approxSize: AtomicLong)
-  private val perModel = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[CompiledModel, Entry]())
-  private val MaxEntries = 2000000L
+  private final val MaxEntries = 2000000L
+  private val chm = new ConcurrentHashMap[String, Seq[Alt]](1 << 16)
+  // approx counter instead of CHM.size(): size() traverses all bins and
+  // was measured to serialize 32 miss-heavy threads
+  private val approxSize = new AtomicLong(0L)
 
-  def forModel(m: CompiledModel): AltCache = {
-    val e = perModel.synchronized {
-      var v = perModel.get(m)
-      if (v == null) {
-        v = new Entry(new ConcurrentHashMap[String, Seq[Alt]](1 << 16),
-          new AtomicLong(0L))
-        perModel.put(m, v)
+  def getOrCompute(key: String)(f: => Seq[Alt]): Seq[Alt] = {
+    val v = chm.get(key)
+    if (v != null) v
+    else {
+      val r = f
+      if (approxSize.get() < MaxEntries) {
+        if (chm.put(key, r) == null) approxSize.incrementAndGet()
       }
-      v
-    }
-    new AltCache {
-      def getOrCompute(key: String)(f: => Seq[Alt]): Seq[Alt] = {
-        val v = e.chm.get(key)
-        if (v != null) v
-        else {
-          val r = f
-          // approx counter instead of CHM.size(): size() traverses all
-          // bins and was measured to serialize 32 miss-heavy threads
-          if (e.approxSize.get() < MaxEntries) {
-            if (e.chm.put(key, r) == null) e.approxSize.incrementAndGet()
-          }
-          r
-        }
-      }
+      r
     }
   }
+}
+
+/** Alias of [[CompiledModel.windowMemo]] for the benchmark harness. */
+object SharedWindowCache {
+  def forModel(m: CompiledModel): AltCache = m.windowMemo
 }
 
 /** The per-line correction dataflow, B1-B11 of SURVEY.md §2. Pure

@@ -172,10 +172,16 @@ object LmDecoder {
     }
   }
 
-  /** Correct one line with LM rescoring. */
+  /** Correct one line with LM rescoring, without a window memo. */
   def correctLineLm(line: String, model: CompiledModel, lm: LmScorer)(
       state: lm.State, lmWeight: Double = 0.5, beamWidth: Int = 100,
-      cache: AltCache = null, beamClusteringDist: Double = 0.0): (String, lm.State) = {
+      beamClusteringDist: Double = 0.0): (String, lm.State) =
+    lineLm(line, model, null, lm)(state, lmWeight, beamWidth, beamClusteringDist)
+
+  /** correctLineLm with windows looked up in `cache` (null: none). */
+  private def lineLm(line: String, model: CompiledModel, cache: AltCache,
+      lm: LmScorer)(state: lm.State, lmWeight: Double, beamWidth: Int,
+      beamClusteringDist: Double): (String, lm.State) = {
     if (graft.tokenize.Tokenizer.splitInputString(line).isEmpty)
       return (line, state)
     val lattice = Corrector.latticeFromString(line, model, cache)
@@ -191,33 +197,34 @@ object LmDecoder {
       beamClusteringDist: Double = 0.0): String => String = {
     var state = lm.initialState
     line => {
-      val (out, ns) = correctLineLm(line, model, lm)(state, lmWeight,
-        beamWidth, cache, beamClusteringDist)
+      val (out, ns) = lineLm(line, model, cache, lm)(state, lmWeight,
+        beamWidth, beamClusteringDist)
       state = ns
       out
     }
   }
 
   /** Document-level sequential fold: lines in offset order share LM
-    * state; media spans pass through (and do not advance the LM). */
+    * state; media spans pass through (and do not advance the LM). The
+    * sequential reference of [[decoder]]: no window memo. */
   def correctDocLm(doc: graft.pipeline.Doc, model: CompiledModel,
       lm: LmScorer, lmWeight: Double = 0.5, beamWidth: Int = 100,
-      cache: AltCache = null,
       beamClusteringDist: Double = 0.0): graft.pipeline.Doc =
     CorrectionJob.correctSpans(doc, lineCorrector(model, lm, lmWeight,
-      beamWidth, cache, beamClusteringDist), None)
+      beamWidth, null, beamClusteringDist), None)
 
   /** LM rescoring as a [[CorrectionJob.correctDocs]] decoder: the same
-    * fold as correctDocLm, docs embarrassingly parallel. A doc is scored
-    * by the `byContext` LM of its decade (scorerFor), else by `lm`. */
+    * fold as correctDocLm, docs embarrassingly parallel, windows looked
+    * up in the model's memo. A doc is scored by the `byContext` LM of
+    * its decade (scorerFor), else by `lm`. */
   def decoder(lm: Broadcast[LmScorer], lmWeight: Double = 0.5,
       beamWidth: Int = 100,
       byContext: Option[Broadcast[Map[Int, LmScorer]]] = None)
-      : CorrectionJob.Decoder = { (m, cache) =>
+      : CorrectionJob.Decoder = { m =>
     val fallback = lm.value
     val contexts = byContext.fold(Map.empty[Int, LmScorer])(_.value)
     d => lineCorrector(m, scorerFor(contexts, fallback, d.doc_id),
-      lmWeight, beamWidth, cache)
+      lmWeight, beamWidth, m.windowMemo)
   }
 
   /** G10 `_get_context_from_identifier` (wrapper/decode.py:254-262):
@@ -254,8 +261,7 @@ object LmDecoder {
   def correctDocLmContextual(doc: graft.pipeline.Doc, model: CompiledModel,
       byContext: Map[Int, LmScorer], fallback: LmScorer,
       lmWeight: Double = 0.5, beamWidth: Int = 100,
-      cache: AltCache = null,
       beamClusteringDist: Double = 0.0): graft.pipeline.Doc =
     correctDocLm(doc, model, scorerFor(byContext, fallback, doc.doc_id),
-      lmWeight, beamWidth, cache, beamClusteringDist)
+      lmWeight, beamWidth, beamClusteringDist)
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.correct.{AltCache, CompiledModel, Corrector, SharedWindowCache}
+import graft.correct.{CompiledModel, Corrector}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,28 +45,24 @@ object CorrectionJob {
     spark.sparkContext.broadcast(model)
 
   /** How a partition corrects its docs' text spans. Called once per
-    * partition with the model and the window memo; the function it
-    * returns gives each doc its line corrector, which sees the doc's
-    * text spans in order and so may carry state from one span to the
-    * next (LM rescoring, [[graft.correct.LmDecoder.decoder]]). */
-  type Decoder = (CompiledModel, AltCache) => Doc => String => String
+    * partition with the broadcast model; the function it returns gives
+    * each doc its line corrector, which sees the doc's text spans in
+    * order and so may carry state from one span to the next (LM
+    * rescoring, [[graft.correct.LmDecoder.decoder]]). */
+  type Decoder = CompiledModel => Doc => String => String
 
-  /** The default decoder: every line on its own, lattice Viterbi. */
-  val viterbi: Decoder = { (m, cache) =>
-    val line: String => String = Corrector.correctLine(_, m, cache)
+  /** The default decoder: each line on its own, Viterbi, windows memoized. */
+  val viterbi: Decoder = { m =>
+    val line: String => String = Corrector.correctLine(_, m, m.windowMemo)
     _ => line
   }
 
   /** The one per-partition correction setup: each partition reads the
-    * broadcast model once and shares the executor-wide window memo
-    * ([[SharedWindowCache]]); `f` turns both into the per-row function. */
+    * broadcast model once (one instance per executor JVM, so its tasks
+    * share `windowMemo`), and `f` turns it into the per-row function. */
   def mapWithModel[A, B: Encoder](rows: Dataset[A], bc: Broadcast[CompiledModel])(
-      f: (CompiledModel, AltCache) => A => B): Dataset[B] =
-    rows.mapPartitions { it =>
-      val m = bc.value
-      val row = f(m, SharedWindowCache.forModel(m))
-      it.map(row)
-    }
+      f: CompiledModel => A => B): Dataset[B] =
+    rows.mapPartitions(it => it.map(f(bc.value)))
 
   /** Optional salted repartition (uniform doc spread), then a pure map
     * over docs: `decoder` corrects each doc's text spans. */
@@ -80,8 +76,8 @@ object CorrectionJob {
       case Some(p) => docs.repartition(p, xxhash64($"doc_id"))
       case None    => docs
     }
-    mapWithModel(input, bc) { (m, cache) =>
-      val forDoc = decoder(m, cache)
+    mapWithModel(input, bc) { m =>
+      val forDoc = decoder(m)
       d => correctSpans(d, forDoc(d), metrics)
     }
   }

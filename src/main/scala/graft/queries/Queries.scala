@@ -530,8 +530,8 @@ object Queries {
     val bc = s.sparkContext.broadcast(model)
     val pairs = pairsDf(s, dir).select($"ocr", $"gt").as[(String, String)]
     CorrectionJob.mapWithModel(pairs, bc) {
-      (m, cache) => { case (ocr, gt) =>
-        val cor = Corrector.correctLine(ocr, m, cache)
+      m => { case (ocr, gt) =>
+        val cor = Corrector.correctLine(ocr, m, m.windowMemo)
         // each pair aligned once, for both the adjusted distance and
         // precision/recall
         val alOcr = Aligner.align(ocr, gt)
@@ -582,8 +582,8 @@ object Queries {
     val model = modelFor(s, dir)
     val bc = s.sparkContext.broadcast(model)
     CorrectionJob.mapWithModel(pairsDf(s, dir).as[(Long, String, String)], bc) {
-      (m, cache) => { case (id, ocr, gt) =>
-        val cor = Corrector.correctLine(ocr, m, cache)
+      m => { case (id, ocr, gt) =>
+        val cor = Corrector.correctLine(ocr, m, m.windowMemo)
         (id, ocr, cor, gt, cor == gt)
       }
     }

@@ -160,8 +160,6 @@ private[wfst] object Scratch {
     if (a.length >= n) a else new Array[Boolean](math.max(a.length << 1, n))
   def ensureDouble(a: Array[Double], n: Int): Array[Double] =
     if (a.length >= n) a else new Array[Double](math.max(a.length << 1, n))
-  def ensureLong(a: Array[Long], n: Int): Array[Long] =
-    if (a.length >= n) a else new Array[Long](math.max(a.length << 1, n))
 }
 
 /** Growable primitive arc store used by all builders. */

@@ -54,7 +54,7 @@ class PipelineSpec extends AnyFunSuite {
     val expected = in.map(d => d.doc_id -> d.spans.map(s =>
       if (s.kind == "text") Corrector.correctLine(s.text, model) else s.text)).toMap
     // the shared window memo, and a decoder that bypasses it
-    val uncached: CorrectionJob.Decoder = { (m, _) =>
+    val uncached: CorrectionJob.Decoder = { m =>
       val line: String => String = Corrector.correctLine(_, m, null)
       _ => line
     }
