@@ -3,7 +3,7 @@ package graft.correct
 import graft.tokenize.Tokenizer
 import graft.train.{Category, ErrorModelST, ErrorModelTrainer, Lexicon,
   LexiconBuilder}
-import graft.wfst.Wfst
+import graft.wfst.{Wfst, WfstBuilder}
 import scala.collection.mutable
 
 /** One decoding alternative for a lattice edge: output string and
@@ -75,21 +75,38 @@ object CompiledModel {
     * of flagship time inside per-window rmEpsilon). The arc count
     * grows (fixture model: 941 -> 24.7k arcs, ~600 KB) but that is a
     * one-time, per-broadcast cost; outputs are byte-identical (glue
-    * weights are exact-zero sums). The WINDOW fst keeps its glue —
-    * eps-removing a lexicon trie closure would copy the root fan-out
-    * into every leaf. */
+    * weights are exact-zero sums). The window FST needs no such pass:
+    * [[windowFstFrom]] builds it without glue. */
   def normalizeError(f: Wfst): Wfst = f.rmEpsilon.arcSort
 
-  /** lexicon_to_window_fst (lib/latticegen.py:127-139):
-    * (lex . " ")^{0..wordsPerWindow-1} . lex, arcsorted (:205). */
+  /** lexicon_to_window_fst (lib/latticegen.py:127-139), the language
+    * (lex . " ")^{0..wordsPerWindow-1} . lex, built without eps glue:
+    * `wordsPerWindow` copies of the lexicon FST, every final state of
+    * a copy but the last with a `" "` arc to the next copy's start that
+    * carries its final weight, and every copy's finals final. The
+    * lexicon FST is eps-free and deterministic and its words hold no
+    * whitespace, so the result is too, and the cascade's lexicon step
+    * and completion check take no right-alone eps move. Path weights
+    * are those of the glue construction (`concat`/`closure`): where its
+    * eps arc carried the final weight, the `" "` arc now does, and its
+    * other glue weights are exact zeros. Arcsorted (:205). */
   def windowFstFrom(lexiconFst: Wfst, wordsPerWindow: Int): Wfst = {
-    val w =
-      if (wordsPerWindow == 1) lexiconFst
-      else lexiconFst.concat(Wfst.acceptor(" "))
-        .closure(0, wordsPerWindow - 1).concat(lexiconFst)
-    // glue eps arcs kept (compose handles right-side eps); rmEpsilon on
-    // a large lexicon trie would copy the root fan-out into every leaf
-    w.arcSort
+    val n = lexiconFst.numStates
+    val b = new WfstBuilder(n * wordsPerWindow)
+    var c = 0
+    while (c < wordsPerWindow) {
+      b.copyMachine(lexiconFst, c * n)
+      var i = 0
+      while (i < lexiconFst.finState.length) {
+        val f = c * n + lexiconFst.finState(i)
+        val fw = lexiconFst.finWt(i)
+        b.setFinal(f, fw)
+        if (c + 1 < wordsPerWindow) b.addArc(f, ' ', ' ', fw, (c + 1) * n + lexiconFst.start)
+        i += 1
+      }
+      c += 1
+    }
+    b.result(lexiconFst.start).arcSort
   }
 
   /** Per-pair training emissions — the ONE definition both training
@@ -255,83 +272,109 @@ object Corrector {
     * compose -> project(output) -> prune -> optimize; union an identity
     * rejection hypothesis for single-token windows with weight
     * rejection_weight*(len+2) (the naive OOV model, :56-66). */
-  def processWindow(inputStr: String, model: CompiledModel): Wfst = {
-    var w = Wfst.acceptor(inputStr)
-    // error-model step: the Σ* identity path guarantees a 0-weight
-    // accepting path, so weight-bounded composition at the pruning
-    // threshold is EXACTLY compose-then-prune — the beam applies during
-    // the search instead of after it (dense confusion tables would
-    // otherwise explode the product before prune sees it). The
-    // expansion also looks one label ahead on the window's chain and
-    // never creates a product state that can neither read the next
-    // character nor finish (most of the hub fan-out); the pruned
-    // machine is array-identical to the one without the lookahead
-    // (Wfst.composeBoundedPruned).
-    // Completion check: the step is given the window FST as `next`. When
-    // no output string of its expansion is a window-FST input (most
-    // windows of novel text), it returns the empty machine and stops the
-    // expansion at the first chain layer where the check's search has
-    // nothing left, and the lexicon step below costs next to nothing.
-    // The result is the same machine as without the check:
-    //  - every arc of the pruned error machine is an arc of the expansion;
-    //  - rmEpsilon keeps the language;
-    //  - the lexicon step returns Wfst.emptyFst whenever its product has
-    //    no accepting path.
-    // trim = false throughout: prune drops non-coaccessible states
-    // itself, and downstream compose / path enumeration explore only
-    // from the start state, so the intermediate connect passes are
-    // pure overhead (measured ~15% of the miss path)
-    // NOTE: dropping rmEpsilon entirely is semantically legal here
-    // (compose treats left eps:eps arcs as left-alone moves and
-    // paths()/distinctOutputs skip eps labels + dedup) but measured 2.7x
-    // SLOWER — the uncollapsed eps chains multiply the next product's
-    // state count; rmEpsilon earns its keep as compaction.
-    // compose+project+prune are FUSED (one exact-size materialization
-    // per step; the SPFA's converged distances double as prune's forward
-    // distances — Wfst.assemblePruned)
-    for (fst <- model.errorFst) {
-      w = w.composeBoundedPruned(fst, model.pruningWeight,
+  def processWindow(inputStr: String, model: CompiledModel): Wfst =
+    lexiconStep(inputStr, errorStep(inputStr, model), model)
+
+  /** The error-model step of [[processWindow]].
+    * The Σ* identity path guarantees a 0-weight accepting path, so
+    * weight-bounded composition at the pruning threshold is EXACTLY
+    * compose-then-prune — the beam applies during the search instead of
+    * after it (dense confusion tables would otherwise explode the product
+    * before prune sees it). The expansion also looks one label ahead on
+    * the window's chain and never creates a product state that can
+    * neither read the next character nor finish (most of the hub
+    * fan-out); the pruned machine is array-identical to the one without
+    * the lookahead (Wfst.composeBoundedPruned).
+    * Completion check: the step is given the window FST as `next`. When
+    * no output string of its expansion is a window-FST input (most
+    * windows of novel text), it returns the empty machine and stops the
+    * expansion at the first chain layer where the check's search has
+    * nothing left (`Wfst.abortLayer`), and the lexicon step costs next to
+    * nothing. The result is the same machine as without the check:
+    *  - every arc of the pruned error machine is an arc of the expansion;
+    *  - rmEpsilon keeps the language;
+    *  - the lexicon step returns Wfst.emptyFst whenever its product has
+    *    no accepting path.
+    * The window FST is eps-free and deterministic ([[CompiledModel.windowFstFrom]]),
+    * so neither the check nor the lexicon step takes a right-alone eps
+    * move.
+    * trim = false throughout: prune drops non-coaccessible states
+    * itself, and downstream compose / path enumeration explore only
+    * from the start state, so the intermediate connect passes are
+    * pure overhead (measured ~15% of the miss path).
+    * NOTE: dropping rmEpsilon entirely is semantically legal here
+    * (compose treats left eps:eps arcs as left-alone moves and
+    * paths()/distinctOutputs skip eps labels + dedup) but measured 2.7x
+    * SLOWER — the uncollapsed eps chains multiply the next product's
+    * state count; rmEpsilon earns its keep as compaction.
+    * compose+project+prune are FUSED (one exact-size materialization
+    * per step; the SPFA's converged distances double as prune's forward
+    * distances — Wfst.assemblePruned). */
+  private def errorStep(inputStr: String, model: CompiledModel): Wfst = {
+    val w = Wfst.acceptor(inputStr)
+    model.errorFst match {
+      case Some(fst) => w.composeBoundedPruned(fst, model.pruningWeight,
         model.pruningWeight, model.windowFst).rmEpsilon(trim = false)
+      case None => w
     }
-    // the final cascade step keeps its eps arcs: nothing composes with
-    // this machine again, and paths()/distinctOutputs skip eps labels —
-    // only the error-model step's rmEpsilon earns its keep (compaction
-    // before the lexicon compose; without it, 2.7x slower)
-    w = w.composePruned(model.windowFst, model.pruningWeight)
-    if (!inputStr.contains(' ')) {
-      val len = inputStr.codePointCount(0, inputStr.length)
-      w = w.union(Wfst.acceptor(inputStr,
-        model.rejectionWeight * (len + 2)))
-    }
-    w
   }
 
-  /** Window enumeration (lib/latticegen.py:214-218) + per-window
-    * processing; returns the lattice in graph form. Alternatives carry
-    * determinization semantics: distinct strings, min weight (pynini
-    * optimize()+paths(), SURVEY.md §2 row B9). */
+  /** The lexicon step of [[processWindow]] and the rejection hypothesis.
+    * This last step keeps its eps arcs: nothing composes with its
+    * machine again, and paths()/distinctOutputs skip eps labels — only
+    * the error-model step's rmEpsilon earns its keep (compaction before
+    * the lexicon compose; without it, 2.7x slower). */
+  private def lexiconStep(inputStr: String, errorOut: Wfst,
+      model: CompiledModel): Wfst = {
+    val w = errorOut.composePruned(model.windowFst, model.pruningWeight)
+    if (inputStr.contains(' ')) w
+    else {
+      val len = inputStr.codePointCount(0, inputStr.length)
+      w.union(Wfst.acceptor(inputStr, model.rejectionWeight * (len + 2)))
+    }
+  }
+
+  /** A cascade result's alternatives. Alternatives carry determinization
+    * semantics: distinct strings, min weight (pynini optimize()+paths(),
+    * SURVEY.md §2 row B9).
+    * The cascade's last step keeps its eps arcs (perf: nothing composes
+    * with it again, and enumeration skips eps). Two rare failure modes of
+    * that shortcut are caught here and retried on the eps-free machine:
+    * (1) eps-differing duplicate paths blowing distinctOutputs' path
+    * budget on dense windows; (2) an eps cycle introduced by an
+    * eps-cyclic window FST ("paths() on a cyclic FST"). rmEpsilon's SPFA
+    * closure handles eps CYCLES fine (non-negative weights), so the
+    * fallback always terminates. */
+  private def alternatives(w: Wfst): Seq[Alt] = {
+    val alts =
+      try w.distinctOutputs()
+      catch { case _: IllegalStateException =>
+        w.rmEpsilon(trim = false).distinctOutputs()
+      }
+    alts.map { case (s, wt) => Alt(s, wt) }
+  }
+
+  /** The alternatives of one window (lib/latticegen.py:214-218 window,
+    * [[processWindow]], enumeration), memoized in `cache` when given. */
   def windowAlternatives(winStr: String, model: CompiledModel,
       cache: AltCache): Seq[Alt] = {
-    def compute = {
-      val w = processWindow(winStr, model)
-      // The cascade's last step keeps its eps arcs (perf: nothing
-      // composes with it again, and enumeration skips eps). Two rare
-      // failure modes of that shortcut are caught here and retried on
-      // the eps-free machine: (1) eps-differing duplicate paths blowing
-      // distinctOutputs' path budget on dense windows; (2) an eps cycle
-      // introduced by an eps-cyclic window FST ("paths() on a cyclic
-      // FST"). rmEpsilon's SPFA closure handles eps CYCLES fine
-      // (non-negative weights), so the fallback always terminates.
-      val alts =
-        try w.distinctOutputs()
-        catch { case _: IllegalStateException =>
-          w.rmEpsilon(trim = false).distinctOutputs()
-        }
-      alts.map { case (s, wt) => Alt(s, wt) }
-    }
+    def compute = alternatives(processWindow(winStr, model))
     if (cache == null) compute else cache.getOrCompute(winStr)(compute)
   }
 
+  /** Window enumeration (lib/latticegen.py:214-218) + per-window
+    * processing; returns the lattice in graph form.
+    *
+    * Dead-prefix skip: when this call computes the window of tokens
+    * i..i+j-1 and its error step's completion check stops at a chain
+    * layer `low` below the window's length in code points
+    * (`Wfst.abortLayer`), the error step of every longer window from
+    * token i stops as well and returns the empty machine (the proof is
+    * the "Dead prefix" item of `Wfst.composeBoundedPruned`). A window of
+    * two or more tokens gets no rejection hypothesis, so such a window
+    * has no alternatives and no edge, and it is not computed. On a memo
+    * hit nothing is computed and the longer windows run as before: the
+    * lattice is the same either way. */
   def latticeFromString(line: String, model: CompiledModel,
       cache: AltCache = null): Lattice = {
     val tokens = Tokenizer.splitInputString(line)
@@ -339,10 +382,17 @@ object Corrector {
     val edges = mutable.HashMap.empty[(Int, Int), Seq[Alt]]
     var i = 0
     while (i < n) {
+      var dead = false
       var j = 1
-      while (j <= math.min(model.maxWindowSize, n - i)) {
+      while (!dead && j <= math.min(model.maxWindowSize, n - i)) {
         val winStr = tokens.slice(i, i + j).mkString(" ")
-        val alts = windowAlternatives(winStr, model, cache)
+        def compute = {
+          val e = errorStep(winStr, model)
+          val low = if (model.errorFst.isEmpty) -1 else Wfst.abortLayer
+          dead = low >= 0 && low < winStr.codePointCount(0, winStr.length)
+          alternatives(lexiconStep(winStr, e, model))
+        }
+        val alts = if (cache == null) compute else cache.getOrCompute(winStr)(compute)
         if (alts.nonEmpty) edges((i, i + j)) = alts
         j += 1
       }

@@ -61,6 +61,9 @@ private[wfst] final class Scratch {
   val reachSet = new LongIntMap(1 << 6)
   var reachStack = new Array[Long](1 << 8)
   var reachDepth = 0
+  // the layer `low` at which the last composeBoundedPruned's completion
+  // check stopped the expansion, else -1 (Wfst.abortLayer)
+  var abortLayer = -1
   // queued product states per left-machine layer: an entry counts from
   // its push until its pop's expansion ends, so a layer whose count and
   // every lower layer's count are 0 gets no state, distance or arc again
@@ -1025,11 +1028,31 @@ final class Wfst private (
     *    the result is `Wfst.emptyFst`. Otherwise the expansion runs to
     *    its end and the result is assembled as without `next`, array for
     *    array. A one-layer machine's layer is final only when the queue
-    *    drains, so its search runs after the expansion. */
+    *    drains, so its search runs after the expansion.
+    *  - Abort layer. The stop records `low`, the first layer that was not
+    *    final yet (`Wfst.abortLayer`): every pair the search expanded
+    *    lies below it.
+    *  - Dead prefix. Let `this` be the chain of a string `a`
+    *    (`Wfst.acceptor` of a window), and let the check stop at `low`
+    *    <= |a| - 1 (code points). Take any longer chain that starts with
+    *    `a` (the window `a b`), with the same `that`, bound and `next`.
+    *    Its states 0..|a| - 1 read the same labels as `a`'s, so the two
+    *    products have the same states and distances at layers <= |a| - 1
+    *    (a state at a higher layer creates and re-queues no state below
+    *    it), and the same arcs out of layers <= |a| - 2. Only layer |a|
+    *    differs: its lookahead is End in one and the next label (`" "`)
+    *    in the other, so the arcs out of layer |a| - 1 may differ. Every
+    *    pair the search on `a` expanded lies at a layer < `low`, so at
+    *    <= |a| - 2, and neither chain is final there. So the search on
+    *    the longer chain reaches the same pairs, finds none final in all
+    *    three machines and stops too: its result is `Wfst.emptyFst` as
+    *    well. With `low` = |a| the search expanded arcs out of layer
+    *    |a| - 1, and nothing follows. */
   def composeBoundedPruned(that: Wfst, maxWeight: Double,
       pruneTh: Double, next: Wfst = null): Wfst = {
-    if (this.numStates == 0 || that.numStates == 0) return Wfst.emptyFst
     val sc = Wfst.scratch.get()
+    sc.abortLayer = -1
+    if (this.numStates == 0 || that.numStates == 0) return Wfst.emptyFst
     val n = expandBounded(that, maxWeight, sc, next)
     if (n < 0) Wfst.emptyFst else assemblePruned(sc, n, that, pruneTh)
   }
@@ -1096,7 +1119,7 @@ final class Wfst private (
     * the expansion ends, when `next` reads none of the outputs. */
   private def expandBounded(that: Wfst, maxWeight: Double, sc: Scratch,
       next: Wfst): Int = {
-    if (next != null && next.numStates == 0) return -1
+    if (next != null && next.numStates == 0) { sc.abortLayer = 0; return -1 }
     val lim = maxWeight + 1e-9
     val stateIds = sc.map; stateIds.clear()
     // arcs in the scratch sink; per-state (start,len) ranges — a
@@ -1281,7 +1304,10 @@ final class Wfst private (
         while (low < nLayers && sc.layerQueued(low) == 0) low += 1
         if (low > parked) {
           parked = completionSearch(sc, that, next, low, layerMask)
-          if (parked == Wfst.SearchDone) return -1
+          if (parked == Wfst.SearchDone) {
+            sc.abortLayer = if (fwd) low else this.numStates
+            return -1
+          }
           searching = parked != Wfst.SearchFound
         }
       }
@@ -1445,13 +1471,19 @@ final class Wfst private (
 
   /** Enumerate all accepting paths (pynini `paths()`, used on pruned
     * acyclic window FSTs, lib/latticegen.py:150-181). Requires an acyclic
-    * machine; guarded by a path budget. */
+    * machine; guarded by a path budget. A depth-first search in arc
+    * order on an explicit stack (a path may be as long as a token, so no
+    * recursion): `path(d)` is the state at depth d, `next(d)` its next
+    * arc and `pw(d)` the weight of the path up to it. */
   def paths(maxPaths: Int = 100000): Seq[(String, String, Double)] = {
     if (numStates == 0 || finState.isEmpty) return Seq.empty
     val acc = mutable.ArrayBuffer.empty[(String, String, Double)]
     val inb = new mutable.ArrayBuffer[Int]; val outb = new mutable.ArrayBuffer[Int]
     val onStack = new Array[Boolean](numStates)
-    def dfs(s: Int, w: Double): Unit = {
+    var path = new Array[Int](16); var next = new Array[Int](16)
+    var pw = new Array[Double](16)
+    var depth = 0
+    def enter(s: Int, w: Double): Unit = {
       if (acc.length >= maxPaths)
         throw new IllegalStateException(s"paths() budget exceeded ($maxPaths)")
       if (onStack(s))
@@ -1459,18 +1491,32 @@ final class Wfst private (
       val fw = finalWeight(s)
       if (!fw.isInfinity) acc += ((cps(inb), cps(outb), w + fw))
       onStack(s) = true
-      var k = off(s)
-      while (k < off(s + 1)) {
+      if (depth == path.length) {
+        path = java.util.Arrays.copyOf(path, depth << 1)
+        next = java.util.Arrays.copyOf(next, depth << 1)
+        pw = java.util.Arrays.copyOf(pw, depth << 1)
+      }
+      path(depth) = s; next(depth) = off(s); pw(depth) = w; depth += 1
+    }
+    enter(start, 0.0)
+    while (depth > 0) {
+      val s = path(depth - 1)
+      val k = next(depth - 1)
+      if (k < off(s + 1)) {
+        next(depth - 1) = k + 1
         if (il(k) > 0) inb += il(k)
         if (ol(k) > 0) outb += ol(k)
-        dfs(ds(k), w + wt(k))
-        if (il(k) > 0) inb.remove(inb.length - 1)
-        if (ol(k) > 0) outb.remove(outb.length - 1)
-        k += 1
+        enter(ds(k), pw(depth - 1) + wt(k))
+      } else {
+        onStack(s) = false
+        depth -= 1
+        if (depth > 0) { // leave the arc that led to s
+          val a = next(depth - 1) - 1
+          if (il(a) > 0) inb.remove(inb.length - 1)
+          if (ol(a) > 0) outb.remove(outb.length - 1)
+        }
       }
-      onStack(s) = false
     }
-    dfs(start, 0.0)
     acc.toSeq
   }
 
@@ -1506,7 +1552,7 @@ private[wfst] final class IntList(cap0: Int = 64) {
 
 /** Mutable machine builder: arcs arrive in any state order; `result`
   * bins them into CSR. */
-private[wfst] final class WfstBuilder(val numStates: Int) {
+private[graft] final class WfstBuilder(val numStates: Int) {
   private val srcs = new IntList(64)
   private val sink = new ArcSink(64)
   private val finW = Array.fill(numStates)(Double.PositiveInfinity)
@@ -1583,6 +1629,15 @@ object Wfst {
 
   /** Accepts only the empty string with weight 0. */
   def epsilonFst: Wfst = apply(0, Map(0 -> 0.0), Array(Array.empty[Arc]))
+
+  /** The layer `low` at which this thread's last `composeBoundedPruned`
+    * stopped its expansion on the completion check (its abort rule), or
+    * -1 when it did not stop. With a forward-numbered left machine every
+    * product state whose left state is below it was final, and none of
+    * the pairs the search expanded lies at or above it; a left machine
+    * that is not forward-numbered reports its state count. Read it right
+    * after the call: the next call on the thread resets it. */
+  def abortLayer: Int = scratch.get().abortLayer
 
   /** Per-thread scratch buffers for the hot path (see Scratch). */
   private[wfst] val scratch: ThreadLocal[Scratch] =

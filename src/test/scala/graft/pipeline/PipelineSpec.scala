@@ -87,6 +87,38 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  /** `f` on a thread with a 1 MB stack (the JVM's default for the
+    * threads Spark runs its tasks on): what it threw, else its result. */
+  private def onSmallStack[A](f: => A): Either[Throwable, A] = {
+    var r: Either[Throwable, A] = Left(new IllegalStateException("no result"))
+    val t = new Thread(null, () => r = try Right(f) catch { case e: Throwable => Left(e) },
+      "small-stack", 1L << 20)
+    t.start(); t.join()
+    r
+  }
+
+  test("whitespace-free runs of 2k and 10k characters correct on a 1 MB stack") {
+    // OCR'd dot leaders and rules: a 1-token window's rejection
+    // hypothesis is a chain as long as the token, and its paths are
+    // enumerated on an explicit stack, not by recursion
+    val rng = new scala.util.Random(13L)
+    val letters = "abcdefghijklmnopqrstuvwxyzſ"
+    val runs = Seq(2000, 10000).flatMap(n => Seq("." * n,
+      Seq.fill(n)(letters(rng.nextInt(letters.length))).mkString, "nicht" * (n / 5)))
+    val lines = runs.map(t => s"ih $t niht")
+    val got = onSmallStack(lines.map(Corrector.correctLine(_, model, null)))
+    assert(got.isRight, got.left.toOption.map(_.toString))
+    val outs = got.toOption.get
+    for ((o, t) <- outs.zip(runs)) assert(o == s"ich $t nicht", t.take(12))
+    import spark.implicits._
+    val docs = lines.zipWithIndex.map { case (l, i) => Doc(s"d$i", Seq(Span("text", l, "", 0))) }
+    val bc = CorrectionJob.broadcastModel(spark, model)
+    val job = onSmallStack(
+      CorrectionJob.correctDocs(spark.createDataset(docs), bc, saltPartitions = Some(4)).collect())
+    assert(job.isRight, job.left.toOption.map(_.toString))
+    assert(job.toOption.get.sortBy(_.doc_id.drop(1).toInt).map(_.spans.head.text).toSeq == outs)
+  }
+
   test("Metrics.chars counts code points, as Spark's length() does") {
     val mx = Metrics(spark)
     val text = "\uD835\uDD04bc" // 𝔄bc: a surrogate pair and two letters

@@ -84,6 +84,15 @@ object RefFst {
   def composePruned(a: Wfst, b: Wfst, th: Double): Wfst =
     composeBoundedPruned(a, b, Double.PositiveInfinity, th)
 
+  /** The window FST of lexicon_to_window_fst (lib/latticegen.py:127-139)
+    * built as the reference builds it, (lex . " "){0..W-1} . lex with
+    * `concat` and `closure`: the pieces joined by eps:eps glue. This is
+    * the machine a model artifact saved before the eps-free construction
+    * carries. */
+  def glueWindowFst(lex: Wfst, wordsPerWindow: Int): Wfst =
+    (if (wordsPerWindow == 1) lex
+    else lex.concat(Wfst.acceptor(" ")).closure(0, wordsPerWindow - 1).concat(lex)).arcSort
+
   /** Distinct output strings with their minimum path weight, enumerated
     * over every accepting path (suffix sets memoized per state).
     * Requires an acyclic machine. */

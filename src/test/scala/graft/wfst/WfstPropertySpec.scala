@@ -2,7 +2,7 @@ package graft.wfst
 
 import graft.Fixtures
 import graft.align.{Aligner, Distance}
-import graft.correct.{CompiledModel, Corrector}
+import graft.correct.{Alt, AltCache, CompiledModel, Corrector, Lattice}
 import graft.tokenize.Tokenizer
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -468,6 +468,130 @@ class WfstPropertySpec extends AnyFunSuite {
       val next = Wfst.acceptor(w.take(k) + "#")
       checkEarlyExit(Wfst.acceptor(w), err, pw, pw, next, s"'$w' k=$k")
     }
+  }
+
+  /** A random lexicon FST shaped like `LexiconBuilder.lexiconToFst`'s: a
+    * trie over words on a, b, c with dyadic weights, where some words are
+    * prefixes of others (finals that also have arcs) and sometimes the
+    * empty word is one (a final start state); half of them pushed and
+    * minimized, as production lexicons are. */
+  private def randomLexicon(rng: scala.util.Random): Wfst = {
+    def word = Seq.fill(1 + rng.nextInt(4))("abc"(rng.nextInt(3))).mkString
+    val base = Seq.fill(1 + rng.nextInt(4))(word)
+    val words = base ++ base.filter(_ => rng.nextBoolean()).map(w => w.take(1 + rng.nextInt(w.length))) ++
+      (if (rng.nextInt(4) == 0) Seq("") else Nil)
+    val trie = Wfst.fromStrings(words.map(_ -> rng.nextInt(32) / 16.0))
+    (if (rng.nextBoolean()) trie.pushWeights.minimizeAcyclic else trie).arcSort
+  }
+
+  private def outputBits(m: Map[String, Double]): Map[String, Long] =
+    m.map { case (o, w) => o -> java.lang.Double.doubleToLongBits(w) }
+
+  test("window FST: the eps-free machine == the glue machine (RefFst) for W in 1..4") {
+    val rng = new scala.util.Random(20261021L)
+    var prefixWords, finalStarts = 0
+    for (i <- 0 until 50) {
+      val lex = randomLexicon(rng)
+      if (lex.finState.exists(f => lex.off(f + 1) > lex.off(f))) prefixWords += 1
+      if (!lex.finalWeight(lex.start).isInfinity) finalStarts += 1
+      val words = RefFst.outputs(lex).keys.toIndexedSeq
+      for (w <- 1 to 4) {
+        val got = CompiledModel.windowFstFrom(lex, w)
+        val glue = RefFst.glueWindowFst(lex, w)
+        val clue = s"case $i W=$w lex=${lex.arcs.toSeq.map(_.toSeq)} start=${lex.start} finals=${lex.finals}"
+        assert(got.numStates == w * lex.numStates, clue)
+        for (s <- 0 until got.numStates) {
+          val labels = (got.off(s) until got.off(s + 1)).map(got.il)
+          assert(!labels.contains(Label.Eps), s"eps arc at $s ($clue)")
+          assert(labels.distinct.size == labels.size, s"two arcs on one label at $s ($clue)")
+        }
+        assert(outputBits(RefFst.outputs(got)) == outputBits(RefFst.outputs(glue)), clue)
+        // as the right operand of the cascade's compose: windows of up to
+        // W + 1 words, a word sometimes perturbed
+        for (_ <- 0 until 4) {
+          val win = Seq.fill(1 + rng.nextInt(w + 1)) {
+            val t = words(rng.nextInt(words.size))
+            if (rng.nextInt(4) == 0) t + "abc"(rng.nextInt(3)) else t
+          }.mkString(" ")
+          val left = Wfst.acceptor(win)
+          for (th <- Seq(1.0, 100.0))
+            assert(outputBits(RefFst.outputs(left.composePruned(got, th))) ==
+              outputBits(RefFst.outputs(RefFst.composePruned(left, glue, th))), s"'$win' th=$th $clue")
+        }
+      }
+    }
+    assert(prefixWords > 0 && finalStarts > 0, s"$prefixWords prefix-word lexicons, $finalStarts final starts")
+  }
+
+  /** A lattice's edges, weights as their bits. */
+  private def edgeBits(l: Lattice): Map[(Int, Int), Seq[(String, Long)]] =
+    l.edges.map { case (k, alts) => k -> alts.map(a => (a.text, java.lang.Double.doubleToLongBits(a.weight))) }
+
+  /** The lattice with every window computed (no dead-prefix rule). */
+  private def everyWindow(line: String, m: CompiledModel, cache: AltCache): Map[(Int, Int), Seq[(String, Long)]] = {
+    val toks = Tokenizer.splitInputString(line)
+    edgeBits(Lattice(toks.length, (for {
+      i <- toks.indices
+      j <- 1 to math.min(m.maxWindowSize, toks.length - i)
+      alts = Corrector.windowAlternatives(toks.slice(i, i + j).mkString(" "), m, cache)
+      if alts.nonEmpty
+    } yield (i, i + j) -> alts).toMap))
+  }
+
+  /** Computes every window it is asked for, and lists them. */
+  private final class Recorder extends AltCache {
+    val keys = scala.collection.mutable.ArrayBuffer.empty[String]
+    def getOrCompute(key: String)(f: => Seq[Alt]): Seq[Alt] = { keys += key; f }
+  }
+
+  test("dead-prefix skip: latticeFromString == every window computed, memo on and off") {
+    val pw = model.pruningWeight
+    val err = model.errorFst.get
+    val rng = new scala.util.Random(20261022L)
+    val letters = alphabet.filter(_.isLetter)
+    def abortLayer(t: String): Int = {
+      Wfst.acceptor(t).composeBoundedPruned(err, pw, pw, model.windowFst)
+      Wfst.abortLayer
+    }
+    def len(t: String) = t.codePointCount(0, t.length)
+    val oov = Iterator.continually(
+      Seq.fill(2 + rng.nextInt(8))(letters(rng.nextInt(letters.length))).mkString).take(2000).toSeq
+    // tokens whose check stops at the last layer that still skips
+    // (|t| - 1) and at the first that does not (|t|)
+    val atLast = oov.filter(t => abortLayer(t) == len(t) - 1).distinct.take(8)
+    val atEnd = oov.filter(t => abortLayer(t) == len(t)).distinct.take(8)
+    assert(atLast.size == 8 && atEnd.size == 8, s"${atLast.size} at |t|-1, ${atEnd.size} at |t|")
+    val words = fixtureWindows.filterNot(_.contains(' '))
+    def followers = Seq("nicht", words(rng.nextInt(words.size)), oov(rng.nextInt(oov.size)))
+    for (t <- atLast ++ atEnd; f <- followers) {
+      val rec = new Recorder
+      Corrector.latticeFromString(s"$t $f", model, rec)
+      assert(rec.keys.contains(s"$t $f") == atEnd.contains(t), s"'$t $f' looked up: ${rec.keys}")
+    }
+    val lines = fixtureLines ++
+      Seq.fill(200)(perturb(fixtureLines(rng.nextInt(fixtureLines.size)), rng)) ++
+      Seq.fill(60)(Seq.fill(2 + rng.nextInt(5))(oov(rng.nextInt(oov.size))).mkString(" ")) ++
+      (atLast ++ atEnd).flatMap(t => followers.flatMap(f => Seq(s"$t $f", s"$f $t", s"$t $t $f")))
+    val warm = model.copy() // its own memo, filled as the lines go
+    var skipped = 0
+    for (line <- lines) {
+      val want = everyWindow(line, model, null)
+      assert(edgeBits(Corrector.latticeFromString(line, model, null)) == want, s"no memo: '$line'")
+      assert(edgeBits(Corrector.latticeFromString(line, warm, warm.windowMemo)) == want, s"memo: '$line'")
+      val rec = new Recorder
+      Corrector.latticeFromString(line, model, rec)
+      val toks = Tokenizer.splitInputString(line)
+      skipped += toks.indices.map(i => math.min(model.maxWindowSize, toks.length - i)).sum - rec.keys.size
+    }
+    assert(skipped > 0, "no window was skipped")
+  }
+
+  test("a model whose window FST is the glue machine (an older artifact) corrects the same") {
+    val glue = model.copy(windowFst = RefFst.glueWindowFst(model.lexiconFst.get, model.wordsPerWindow))
+    assert(glue.windowFst.il.contains(Label.Eps) && !model.windowFst.il.contains(Label.Eps))
+    val rng = new scala.util.Random(20261023L)
+    for (line <- fixtureLines ++ Seq.fill(100)(perturb(fixtureLines(rng.nextInt(fixtureLines.size)), rng)))
+      assert(Corrector.correctLine(line, glue) == Corrector.correctLine(line, model), s"'$line'")
   }
 
   private def serialize(m: CompiledModel): Array[Byte] = {
